@@ -341,17 +341,13 @@ def _process_batch(
     # A2: overall confidence = mean of valid (>0) confidences over media
     # spans, 0.0 if media spans exist but none valid, null if no media.
     conf_np = np.where(conf_cnt > 0, conf_sum / np.maximum(conf_cnt, 1), 0.0)
-    conf_obj = [
-        (conf_np[i] if has_media[i] else None) for i in range(n_docs)
-    ]
-    conf_sum_obj = [(conf_sum[i] if has_media[i] else None) for i in range(n_docs)]
-    conf_cnt_obj = [(int(conf_cnt[i]) if has_media[i] else None) for i in range(n_docs)]
+    no_media = ~has_media
     arrays = [
         doc_id,
         new_spans,
-        pa.array(conf_obj, type=pa.float64()),
-        pa.array(conf_sum_obj, type=pa.float64()),
-        pa.array(conf_cnt_obj, type=pa.int64()),
+        pa.array(conf_np, type=pa.float64(), mask=no_media),
+        pa.array(conf_sum, type=pa.float64(), mask=no_media),
+        pa.array(conf_cnt, type=pa.int64(), mask=no_media),
         pa.array(err, type=pa.string()),
         pa.array(err_src, type=pa.string()),
     ]

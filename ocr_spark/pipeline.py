@@ -4,7 +4,7 @@
       → native per-span text normalization (T1-T5, T7) inside the nested
         array — F.transform + CASE on kind; no explode, no shuffle, fully
         whole-stage-codegen'd
-      → ONE mapInPandas stage for the heavy kinds (html boilerplate strip,
+      → ONE mapInArrow stage for the heavy kinds (html boilerplate strip,
         pdf XY-cut, ocr media kernels) that branches on kind INSIDE the UDF
         (J1 dispatch, ref ocr_workflow_orchestrator.py:272-294) — avoids one
         shuffle per kind
@@ -36,7 +36,7 @@ HEAVY_KINDS = ("html", "pdf", "ocr", "media")
 
 def _process_span(s: Column, rules: Sequence[tuple[str, str]]) -> Column:
     """Native (codegen) processing for text-bearing spans; heavy kinds pass
-    through untouched for the pandas stage."""
+    through untouched for the Arrow stage."""
     new_text = F.when(s["kind"] == "text", TX.extract_text(s["text"], rules)).otherwise(
         s["text"]
     )

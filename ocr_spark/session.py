@@ -4,6 +4,11 @@ Single place where execution knobs live so tests / bench / jobs agree:
 AQE on (runtime re-plan + skew-join), explicit shuffle partitions, Arrow
 enabled with a bounded batch size so one Arrow batch of media-heavy docs
 fits in executor memory (SURVEY.md §4 "spill / memory").
+
+Python worker reuse (``spark.python.worker.reuse``) stays at Spark's default,
+on. Per-worker set-up (importing ocr_spark and its kernels, and the
+stat-checked zip import caches of ``ocr_spark._worker``) is amortised across
+tasks only because a worker outlives its task; do not disable reuse.
 """
 
 from __future__ import annotations

@@ -134,3 +134,21 @@ def test_charset_guard_asserts():
             mk.recognize_gray_batch(synth_media_batch(["m-good-1"]))
     finally:
         mk.CHARSET = old
+
+
+def test_confidence_parts_null_exactly_without_media():
+    # A2: confidence and its mergeable parts are null for a doc with no
+    # media span, and 0.0 / 0 for one whose media spans yield no confidence
+    docs = [
+        [("media", None, "m-good-1", 0), ("media", None, "m-good-3", 1)],
+        [("pdf", BAD_PDF, None, 0)],
+        [("ocr", None, None, 0)],  # unresolvable
+    ]
+    out = _process_batch(_batch(docs), rules=[], backend="synthetic")
+    conf, csum, ccnt = (
+        out.column(k).to_pylist() for k in ("confidence", "conf_sum", "conf_cnt")
+    )
+    assert ccnt[0] > 0 and conf[0] == pytest.approx(csum[0] / ccnt[0])
+    assert (conf[1], csum[1], ccnt[1]) == (None, None, None)
+    assert (conf[2], csum[2], ccnt[2]) == (0.0, 0.0, 0)
+    assert out.schema.field("conf_cnt").type == pa.int64()
