@@ -1866,11 +1866,25 @@ def q_rule_filter(spark, sf_dir):
     gets (keep, reasons[]) naming exactly which rules fired — word-count
     bounds, mean word length, symbol ratio, bullet/ellipsis line fractions,
     alpha-word fraction, stop words, sentence count, placeholder text. One
-    codegen'd pass, staged word/line arrays, no shuffle."""
+    codegen'd pass, staged word/line arrays, no shuffle. The board row
+    flattens `reasons` to one comma-joined string: the driver compares flat
+    columns only."""
     from ocr_spark.operators.text_analysis import rule_filter_select
 
-    return rule_filter_select(
+    rf = rule_filter_select(
         _t(spark, sf_dir, "documents"), F.col("text"), params=_RULE_PARAMS
+    )
+    return rf.select("doc_id", "keep", F.array_join("reasons", ",").alias("reasons"))
+
+
+def _rule_filter_board_sql() -> str:
+    """DuckDB twin of q_rule_filter: rule_filter_sql with `reasons` joined
+    the same way (DuckDB joins an empty list to NULL, Spark to '')."""
+    from ocr_spark.operators.text_analysis import rule_filter_sql
+
+    return (
+        "SELECT doc_id, keep, coalesce(array_to_string(reasons, ','), '') AS reasons "
+        f"FROM ({rule_filter_sql(params=_RULE_PARAMS)})"
     )
 
 
@@ -2245,7 +2259,7 @@ def _training_oracles(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
             )
             + ")"
         ),
-        "rule_filter": TA.rule_filter_sql(params=_RULE_PARAMS),
+        "rule_filter": _rule_filter_board_sql(),
         "temperature_sample": CC.temperature_sample_sql(
             "SELECT doc_id, lang FROM documents", _temp_thresholds(sf_dir)
         ),

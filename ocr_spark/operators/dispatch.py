@@ -76,22 +76,11 @@ def _fit_pad_gray(g: np.ndarray, side: int) -> np.ndarray:
     return canvas
 
 
-def _resolve_sidecar(
-    batch: pa.RecordBatch, refs, m_idx: np.ndarray, doc_of_span: np.ndarray
-):
-    """Resolve media spans from the doc's broadcast-joined payload map
-    (S1 binaryFile path): bytes → image → grayscale per span. PNG payloads
-    decode through the real codec (signature-sniffed); anything else is the
-    raw synthetic format. Returns (grays, ok, errs) where errs carries
-    (media-span-ordinal, exception) for missing refs and corrupt payloads —
-    both degrade to per-doc envelopes."""
-    from ocr_spark.operators.media_kernels import (
-        IMG_SIDE,
-        bytes_to_image,
-        to_grayscale,
-    )
-    from ocr_spark.operators.multimodal import decode_image, detect_codec
-
+def _sidecar_payloads(batch: pa.RecordBatch):
+    """Payload lookup `(doc, ref) -> bytes | None` over the doc's
+    broadcast-joined payload map. Built once per batch: each doc's
+    {ref: entry} index is made on its first probe and then reused by every
+    later media chunk of the batch."""
     # operate on the MapArray structure directly instead of to_pylist():
     # offsets/keys/items index the flattened entries, so payload BYTES cross
     # into Python only for spans that are actually probed (once each) — a
@@ -103,7 +92,7 @@ def _resolve_sidecar(
     doc_is_null = mcol.is_null().to_numpy(zero_copy_only=False)
     key_idx: dict[int, dict] = {}  # doc → {ref: flattened entry index}
 
-    def _payload(doc: int, ref):
+    def payload(doc: int, ref):
         if ref is None or doc_is_null[doc]:
             return None
         d = key_idx.get(doc)
@@ -119,13 +108,36 @@ def _resolve_sidecar(
         v = mitems[k]
         return v.as_py() if v.is_valid else None
 
+    return payload
+
+
+def _resolve_sidecar(
+    batch: pa.RecordBatch, refs, m_idx: np.ndarray, doc_of_span: np.ndarray,
+    payloads=None,
+):
+    """Resolve media spans from the doc's broadcast-joined payload map
+    (S1 binaryFile path): bytes → image → grayscale per span. PNG payloads
+    decode through the real codec (signature-sniffed); anything else is the
+    raw synthetic format. `payloads` is the batch's `_sidecar_payloads`
+    lookup (built here when not given). Returns (grays, ok, errs) where errs
+    carries (media-span-ordinal, exception) for missing refs and corrupt
+    payloads — both degrade to per-doc envelopes."""
+    from ocr_spark.operators.media_kernels import (
+        IMG_SIDE,
+        bytes_to_image,
+        to_grayscale,
+    )
+    from ocr_spark.operators.multimodal import decode_image, detect_codec
+
+    if payloads is None:
+        payloads = _sidecar_payloads(batch)
     n = len(refs)
     grays = np.zeros((n, IMG_SIDE, IMG_SIDE), dtype=np.uint8)
     ok = np.zeros(n, dtype=bool)
     errs: list[tuple[int, Exception]] = []
     for j, ref in enumerate(refs):
         doc = int(doc_of_span[m_idx[j]])
-        payload = _payload(doc, ref)
+        payload = payloads(doc, ref)
         if payload is None:
             errs.append((j, ValueError(f"unresolvable media_ref: {ref!r}")))
             continue
@@ -199,7 +211,7 @@ def _process_batch(
     passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ) -> pa.RecordBatch:
-    from ocr_spark.operators.media_kernels import recognize_gray_batch
+    from ocr_spark.operators.media_kernels import _REC_CHUNK, recognize_gray_batch
     from ocr_spark.operators.registry import get_extractor
     from ocr_spark.sources.media import resolve_gray_batch
 
@@ -274,49 +286,61 @@ def _process_batch(
                 record_error(int(doc_of_span[pos]), int(pos), e, k)
 
     # ---- media kinds (K1..K12 + T6 kernel chain over resolved payloads) ----
+    # Streamed in chunks of _REC_CHUNK media spans: each chunk is resolved
+    # and recognized before the next is resolved, so the image working set
+    # is one chunk (128 KB) however many media spans the batch holds.
     m_mask = pc.is_in(kind, value_set=pa.array(MEDIA_KINDS)).to_numpy(zero_copy_only=False)
     m_idx = np.flatnonzero(m_mask)
     if m_idx.size:
         np.bitwise_or.at(has_media, doc_of_span[m_idx], True)
-        refs = media_ref.take(pa.array(m_idx)).to_pylist()
+        refs_m = media_ref.take(pa.array(m_idx))
         if backend == "sidecar":
-            grays, ok, errs = _resolve_sidecar(batch, refs, m_idx, doc_of_span)
-        else:
-            grays, ok = resolve_gray_batch(refs, backend)
-            errs = [
-                (int(j), ValueError(f"unresolvable media_ref: {refs[j]!r}"))
-                for j in np.flatnonzero(~ok)
-            ]
-        if errs:
-            kinds_m = kind.take(pa.array(m_idx)).to_pylist()
-            for j, e in errs:
-                record_error(int(doc_of_span[m_idx[j]]), int(m_idx[j]), e, kinds_m[j])
-        good_pos = m_idx[ok]
-        grays_ok = grays[ok]
-        try:
-            texts_m, confs_m = recognize_gray_batch(grays_ok)
-        except Exception:
-            # a poison payload must not kill the whole Spark task: retry per
-            # image so individual failures degrade to per-doc error envelopes
-            # (the scalar-path semantics) while the rest of the batch flows
-            n_ok = len(grays_ok)
-            texts_list: list[str] = []
-            confs_all = np.zeros(n_ok, dtype=np.float64)
-            rec_ok = np.zeros(n_ok, dtype=bool)
-            kinds_g = kind.take(pa.array(good_pos)).to_pylist()
-            for j in range(n_ok):
-                try:
-                    t1, c1 = recognize_gray_batch(grays_ok[j : j + 1])
-                except Exception as e:
-                    p = int(good_pos[j])
-                    record_error(int(doc_of_span[p]), p, e, kinds_g[j])
-                    continue
-                texts_list.append(t1[0])
-                confs_all[j] = c1[0]
-                rec_ok[j] = True
-            texts_m = texts_list
-            confs_m = confs_all[rec_ok]
-            good_pos = good_pos[rec_ok]
+            payloads = _sidecar_payloads(batch)
+
+        def media_error(p: int, e: Exception) -> None:
+            record_error(int(doc_of_span[p]), int(p), e, kind[int(p)].as_py())
+
+        pos_parts: list[np.ndarray] = []
+        conf_parts: list[np.ndarray] = []
+        texts_m: list[str] = []
+        for lo in range(0, m_idx.size, _REC_CHUNK):
+            pos = m_idx[lo : lo + _REC_CHUNK]
+            refs = refs_m.slice(lo, len(pos)).to_pylist()
+            if backend == "sidecar":
+                grays, ok, errs = _resolve_sidecar(batch, refs, pos, doc_of_span, payloads)
+            else:
+                grays, ok = resolve_gray_batch(refs, backend)
+                errs = [
+                    (j, ValueError(f"unresolvable media_ref: {refs[j]!r}"))
+                    for j in np.flatnonzero(~ok)
+                ]
+            if errs:
+                for j, e in errs:
+                    media_error(pos[j], e)
+                pos, grays = pos[ok], grays[ok]
+            try:
+                texts_c, confs_c = recognize_gray_batch(grays)
+            except Exception:
+                # a poison payload must not kill the whole Spark task: retry
+                # this chunk per image so individual failures degrade to
+                # per-doc error envelopes (the scalar-path semantics) while
+                # the rest of the chunk and the batch flow
+                texts_c, confs_c, rec_ok = [], [], np.zeros(len(pos), dtype=bool)
+                for j in range(len(pos)):
+                    try:
+                        t1, c1 = recognize_gray_batch(grays[j : j + 1])
+                    except Exception as e:
+                        media_error(pos[j], e)
+                        continue
+                    texts_c.append(t1[0])
+                    confs_c.append(c1[0])
+                    rec_ok[j] = True
+                pos = pos[rec_ok]
+            pos_parts.append(pos)
+            conf_parts.append(np.asarray(confs_c, dtype=np.float64))
+            texts_m.extend(texts_c)
+        good_pos = np.concatenate(pos_parts)
+        confs_m = np.concatenate(conf_parts)
         processed = _postprocess_array(pa.array(texts_m, type=pa.string()), rules)
         repl[good_pos] = np.asarray(processed.to_pylist(), dtype=object)
         replaced[good_pos] = True

@@ -177,11 +177,6 @@ def extract_main_text(html: str) -> str:
     return "\n".join(r["text"] for r, k in zip(rows, keep) if k)
 
 
-def extract_html_batch(htmls: list[str]) -> list[str]:
-    """Batch API used by the dispatch mapInPandas stage."""
-    return [extract_main_text(h) for h in htmls]
-
-
 def dom_nodes_df(spark, docs_df):
     """Expose the flattened DOM-node table (FIXTURES.md §3) as a DataFrame —
     one row per block of every html span. Arrow-batched mapInPandas."""

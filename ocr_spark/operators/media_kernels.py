@@ -24,8 +24,6 @@ Every function is pure and deterministic so golden fixtures are stable.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 # ---- fake-engine spec constants (shared with tests/reference_impl) ----------
@@ -535,10 +533,6 @@ def recognize_image(payload: bytes) -> tuple[str, float]:
     return "\n".join(texts), (total / n) if n else 0.0
 
 
-def media_sha_seed(media_ref: str) -> int:
-    return int.from_bytes(hashlib.sha256(media_ref.encode()).digest()[:8], "big")
-
-
 # ---------------------------------------------------------------------------
 # batched recognition: the whole K-chain + T6 vectorized over (N,32,32)
 # ---------------------------------------------------------------------------
@@ -547,7 +541,9 @@ def media_sha_seed(media_ref: str) -> int:
 # Images per vectorized chunk. Small on purpose: the chunk's temporaries must
 # stay L2-resident PER EXECUTOR CORE — at 2048 imgs (~17 MB) 32 concurrent
 # workers saturate memory bandwidth and aggregate throughput drops 16×
-# (measured 44k img/s vs 718k img/s at 128).
+# (measured 44k img/s vs 718k img/s at 128). The Arrow stage
+# (dispatch._process_batch) resolves and recognizes media spans in chunks of
+# this size too, so its decoded images never outgrow one chunk.
 _REC_CHUNK = 128
 
 
@@ -594,9 +590,10 @@ def _recognize_gray_chunk(grays: np.ndarray) -> tuple[list[str], np.ndarray]:
     fgmask = grays >= int(np.floor(DET_DB_THRESH * 255.0)) + 1
 
     # --- band detection (K7/K8 fake, filters F2-F5) -------------------------
-    # masked per-row sums/counts (uint8 multiply, int64 accumulate — exact)
-    mrow_sum = np.sum(grays * fgmask, axis=2, dtype=np.int64)  # (N, 32)
-    mrow_cnt = fgmask.sum(axis=2, dtype=np.int64)
+    # masked per-row sums/counts, exact in the narrowest accumulator that
+    # holds them: a row sum is at most 255·32 (uint16), a count at most 32
+    mrow_sum = np.sum(grays * fgmask, axis=2, dtype=np.uint16)  # (N, 32)
+    mrow_cnt = fgmask.sum(axis=2, dtype=np.uint8)
     # row is foreground iff mask-fraction > 0.5 ⇔ count > IMG_SIDE/2 (exact)
     fg_rows = mrow_cnt > IMG_SIDE // 2
     padded = np.zeros((n_img, IMG_SIDE + 2), dtype=bool)
@@ -646,32 +643,39 @@ def _recognize_gray_chunk(grays: np.ndarray) -> tuple[list[str], np.ndarray]:
 
     # --- K9/K10: block-mean resize of every band to (REC_T, C) --------------
     n_classes = len(CHARSET) + 1
-    xs = (np.arange(n_classes + 1) * IMG_SIDE // n_classes).astype(np.int64)
-    # exact integer column-segment sums (int32: max 255·32·32 < 2^31)
-    col_seg = np.add.reduceat(grays.astype(np.int32), xs[:-1], axis=2)  # (N, 32, C)
-    rc = np.zeros((n_img, IMG_SIDE + 1, n_classes), dtype=np.int32)
-    np.cumsum(col_seg, axis=1, out=rc[:, 1:, :])  # (N, 33, C)
     # dx skips the scalar block_mean_resize's max(...,1) clamp — safe ONLY
     # while n_classes <= IMG_SIDE (every column diff >= 1). Guard it so a
     # CHARSET grown past IMG_SIDE fails loudly instead of silently emitting
     # div-by-zero logits that diverge from the scalar chain.
     assert n_classes <= IMG_SIDE, "CHARSET+blank must fit in IMG_SIDE columns"
-    dx = (xs[1:] - xs[:-1]).astype(np.float64)
+    xs = (np.arange(n_classes + 1) * IMG_SIDE // n_classes).astype(np.int64)
+    x0, seg_w = xs[:-1], xs[1:] - xs[:-1]
+    # exact integer column-segment sums (int32: max 255·32·32 < 2^31) by
+    # column gathers: each segment's first column, then the k-th extra
+    # column of every segment wider than k — cheaper than np.add.reduceat
+    col_seg = grays[:, :, x0].astype(np.int32)  # (N, 32, C)
+    for k in range(1, int(seg_w.max())):
+        wide = np.flatnonzero(seg_w > k)
+        col_seg[:, :, wide] += grays[:, :, x0[wide] + k]
+    rc = np.zeros((n_img, IMG_SIDE + 1, n_classes), dtype=np.int32)
+    np.cumsum(col_seg, axis=1, out=rc[:, 1:, :])  # (N, 33, C)
+    dx = seg_w.astype(np.float64)
 
-    logits = np.empty((n_band, REC_T, n_classes))
-    for hh in np.unique(bh):
-        sel = np.flatnonzero(bh == hh)
-        ys = (np.arange(REC_T + 1) * hh // REC_T).astype(np.int64)
-        r0 = ys[:-1]
-        r1 = np.maximum(ys[1:], r0 + 1)
-        imgs = band_img[sel]
-        rows0 = by0[sel][:, None] + r0[None, :]
-        rows1 = by0[sel][:, None] + r1[None, :]
-        # int32 gather-diff → float64 (exact); arithmetic matches the scalar
-        # float64 chain bit-for-bit
-        sums = (rc[imgs[:, None], rows1, :] - rc[imgs[:, None], rows0, :]).astype(np.float64)
-        area = (r1 - r0).astype(np.float64)[None, :, None] * dx[None, None, :]
-        logits[sel] = (sums / area - 128.0) / 16.0
+    # REC_T row blocks of every band at once: block t spans rows
+    # [by0 + ys[t], by0 + max(ys[t+1], ys[t]+1)) with ys = t·h // REC_T;
+    # both edges index the flattened (N·33, C) row prefix sums in one take
+    ys = np.arange(REC_T + 1)[None, :] * bh[:, None] // REC_T  # (B, T+1)
+    r0 = ys[:, :-1]
+    r1 = np.maximum(ys[:, 1:], r0 + 1)
+    base_row = (band_img * (IMG_SIDE + 1) + by0)[:, None]
+    edges = np.take(
+        rc.reshape(-1, n_classes), np.stack([base_row + r1, base_row + r0]), axis=0
+    )  # (2, B, T, C)
+    # int32 gather-diff → float64 (exact); arithmetic matches the scalar
+    # float64 chain bit-for-bit
+    sums = (edges[0] - edges[1]).astype(np.float64)
+    area = (r1 - r0).astype(np.float64)[:, :, None] * dx[None, None, :]
+    logits = (sums / area - 128.0) / 16.0
 
     # --- T6: batched CTC greedy decode --------------------------------------
     # softmax prob AT the argmax step is exp(max-max)/Σexp = 1/Σexp, so the
@@ -698,12 +702,14 @@ def _recognize_gray_chunk(grays: np.ndarray) -> tuple[list[str], np.ndarray]:
     texts = [big[s:t] for s, t in zip(starts_s, ends)]
 
     # --- deterministic failure injection (F7/F8 paths) ----------------------
-    rs = np.zeros((n_img, IMG_SIDE + 1), dtype=np.int64)
-    np.cumsum(grays.sum(axis=2, dtype=np.int64), axis=1, out=rs[:, 1:])
+    # the column segments tile all IMG_SIDE columns, so a band's full pixel
+    # sum is its outer row edges' prefix-sum difference summed over segments
+    # (block 0 starts at by0, the last block ends at by1)
+    band_sum = (edges[0, :, -1, :] - edges[1, :, 0, :]).sum(axis=1, dtype=np.int64)
     # int(float_mean) == integer floor division here: the quotient is a
     # rational with denominator ≤ 2^15, so float64 division can't round
     # across an integer boundary
-    mean_i = (rs[band_img, by1] - rs[band_img, by0]) // (bh * IMG_SIDE)
+    mean_i = band_sum // (bh * IMG_SIDE)
     fail13 = mean_i % 13 == 0
     fail17 = (~fail13) & (mean_i % 17 == 0)
     failed = fail13 | fail17

@@ -17,8 +17,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Bounded Arrow batch: the pandas-UDF stages hold `batch × max-doc` bytes in
-# memory; 512 rows of ~64KB docs ≈ 32MB per batch per core — safe at 128GiB/32.
+# Bounded Arrow batch: the mapInArrow extraction stage holds one batch's
+# span arrays (512 rows of ~64KB docs ≈ 32MB per core — safe at 128GiB/32)
+# plus one media chunk of decoded images (media_kernels._REC_CHUNK × 1 KB),
+# not one image per media span of the batch.
 DEFAULT_ARROW_BATCH = 512
 
 

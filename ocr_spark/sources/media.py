@@ -64,35 +64,37 @@ def synth_media_batch(refs: list[str]) -> np.ndarray:
     return _synth_chunk(refs)
 
 
+# byte → pixel maps of the two random planes: background 0-59, bright 150-255
+_BG_LUT = (np.arange(256) % 60).astype(np.uint8)
+_BRIGHT_LUT = (np.arange(256) % 106 + 150).astype(np.uint8)
+
+
 def _synth_chunk(refs: list[str]) -> np.ndarray:
     n = len(refs)
-    seeds = np.empty(n, dtype=np.uint64)
-    for i, r in enumerate(refs):
-        seeds[i] = media_seed(r)
+    seeds = np.fromiter((media_seed(r) for r in refs), dtype=np.uint64, count=n)
     ctr = (np.arange(_WORDS, dtype=np.uint64) + np.uint64(1)) * _GAMMA
     words = _splitmix64(seeds[:, None] + ctr[None, :])  # (N, _WORDS)
 
-    bg = (
-        np.ascontiguousarray(words[:, :_WORDS_BG]).view(np.uint8) % np.uint8(60)
-    ).reshape(n, IMG_SIDE, IMG_SIDE)
-    bright = (
-        np.ascontiguousarray(words[:, _WORDS_BG : 2 * _WORDS_BG]).view(np.uint8)
-        % np.uint8(106)
-        + np.uint8(150)
-    ).reshape(n, IMG_SIDE, IMG_SIDE)
+    bg = np.take(_BG_LUT, words[:, :_WORDS_BG].view(np.uint8))
+    bright = np.take(_BRIGHT_LUT, words[:, _WORDS_BG : 2 * _WORDS_BG].view(np.uint8))
     params = words[:, -1]
 
+    # one per-row band mask (bands never overlap and share the bright
+    # plane), then one select over the image
     n_lines = (seeds % np.uint64(3)).astype(np.int64) + 1  # 1-3 bands
-    img = bg
     rows = np.arange(IMG_SIDE, dtype=np.int64)[None, :]
+    band_rows = np.zeros((n, IMG_SIDE), dtype=bool)
     y0 = np.full(n, 2, dtype=np.int64)
     for line in range(3):
         h = 4 + ((params >> np.uint64(8 * line)) & np.uint64(3)).astype(np.int64)
         active = n_lines > line
-        mask = active[:, None] & (rows >= y0[:, None]) & (rows < (y0 + h)[:, None])
-        img = np.where(mask[:, :, None], bright, img)
+        band_rows |= active[:, None] & (rows >= y0[:, None]) & (rows < (y0 + h)[:, None])
         y0 = y0 + h + 3  # max 2 + 3*(7+3) = 32 ≤ IMG_SIDE: bands always fit
-    return img
+    return np.where(
+        band_rows[:, :, None],
+        bright.reshape(n, IMG_SIDE, IMG_SIDE),
+        bg.reshape(n, IMG_SIDE, IMG_SIDE),
+    )
 
 
 def synth_media_bytes(media_ref: str) -> bytes:

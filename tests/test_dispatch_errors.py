@@ -152,3 +152,129 @@ def test_confidence_parts_null_exactly_without_media():
     assert (conf[1], csum[1], ccnt[1]) == (None, None, None)
     assert (conf[2], csum[2], ccnt[2]) == (0.0, 0.0, 0)
     assert out.schema.field("conf_cnt").type == pa.int64()
+
+
+# ---- streamed media path: chunks of media_kernels._REC_CHUNK spans --------
+
+
+def _media_docs(n_docs: int, per_doc: int):
+    return [
+        [("media", None, f"m-{d}-{j}", j) for j in range(per_doc)]
+        for d in range(n_docs)
+    ]
+
+
+def test_media_working_set_bounded_by_chunk():
+    # peak traced memory must grow with the batch by far less than one
+    # 32x32 image (1 KB) per media span: images live one chunk at a time
+    import tracemalloc
+
+    def peak(n_docs):
+        batch = _batch(_media_docs(n_docs, 1024))
+        tracemalloc.start()
+        try:
+            _process_batch(batch, rules=[], backend="synthetic")
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    _process_batch(_batch(_media_docs(1, 8)), rules=[], backend="synthetic")  # warm
+    small, large = peak(4), peak(16)
+    per_span = (large - small) / ((16 - 4) * 1024)
+    assert per_span < 512, per_span
+
+
+def test_poison_retry_stays_inside_its_chunk(monkeypatch):
+    from ocr_spark.operators import media_kernels
+    from ocr_spark.sources import media as media_src
+
+    real = media_kernels.recognize_gray_batch
+    single_calls = []
+
+    def raising(grays):
+        if len(grays) == 1:
+            single_calls.append(1)
+        if (grays == 255).all(axis=(1, 2)).any():
+            raise RuntimeError("corrupt payload")
+        return real(grays)
+
+    real_resolve = media_src.resolve_gray_batch
+
+    def resolve(refs, backend="synthetic"):
+        grays, ok = real_resolve([r if r != "POISON" else "x" for r in refs], backend)
+        for i, r in enumerate(refs):
+            if r == "POISON":
+                grays[i] = 255
+        return grays, ok
+
+    docs = _media_docs(4, 100)  # 400 media spans; ordinal 300 opens d3
+    clean = _run(_batch(docs))
+    docs[3][0] = ("media", None, "POISON", 0)
+    monkeypatch.setattr(media_kernels, "recognize_gray_batch", raising)
+    monkeypatch.setattr(media_src, "resolve_gray_batch", resolve)
+    out = _run(_batch(docs))
+
+    assert 0 < len(single_calls) <= media_kernels._REC_CHUNK
+    assert "corrupt payload" in out["d3"]["error"]
+    assert out["d3"]["error_source"] == "media"
+    assert out["d3"]["spans"][1:] == clean["d3"]["spans"][1:]
+    for d in ("d0", "d1", "d2"):
+        assert out[d] == clean[d]
+
+
+@pytest.mark.parametrize("backend", ["synthetic", "sidecar"])
+def test_media_envelopes_across_chunk_boundaries(backend):
+    from ocr_spark.operators.dispatch import MEDIA_SIDECAR_COL
+    from ocr_spark.sources.media import synth_media_bytes
+
+    # 7 docs x (1 text + 60 media spans): docs 2 and 4 straddle the media
+    # ordinals 128 and 256 where chunks start
+    docs = [
+        [("text", f"intro {d}", None, 0)]
+        + [("ocr" if j < 2 else "media", None, f"r-{d}-{j}", j + 1) for j in range(60)]
+        for d in range(7)
+    ]
+    bad = {  # media ordinal -> (doc, span index, replacement, source, error)
+        130: (2, 11, ("ocr", None, None, 11), "ocr", "unresolvable"),
+    }
+    if backend == "sidecar":
+        bad[300] = (5, 1, ("media", None, "r-missing", 1), "media", "unresolvable")
+        # too short to decode: a corrupt payload
+        bad[395] = (6, 36, ("media", None, "r-corrupt", 36), "media", "too small")
+    else:  # a synthetic ref is missing only when empty
+        bad[300] = (5, 1, ("media", None, "", 1), "media", "unresolvable")
+
+    def run(ds):
+        batch = _batch(ds)
+        if backend == "sidecar":
+            maps = [
+                [
+                    (m, b"short" if m == "r-corrupt" else synth_media_bytes(m))
+                    for (_k, _t, m, _o) in doc
+                    if m and m != "r-missing"
+                ]
+                for doc in ds
+            ]
+            batch = batch.append_column(
+                MEDIA_SIDECAR_COL, pa.array(maps, type=pa.map_(pa.string(), pa.binary()))
+            )
+        out = _process_batch(batch, rules=[], backend=backend)
+        return {r["doc_id"]: r for r in out.to_pylist()}
+
+    clean = run(docs)
+    assert all(r["error"] is None for r in clean.values())
+    for d, i, span, _src, _msg in bad.values():
+        docs[d][i] = span
+    out = run(docs)
+    bad_docs = {d: (i, src, msg) for d, i, _s, src, msg in bad.values()}
+    for d in range(7):
+        got, want = out[f"d{d}"], clean[f"d{d}"]
+        if d not in bad_docs:
+            assert got == want, d
+            continue
+        i, src, msg = bad_docs[d]
+        assert got["error_source"] == src and msg in got["error"], d
+        assert got["spans"][i]["text"] is None  # original payload kept
+        assert got["spans"][:i] + got["spans"][i + 1 :] == (
+            want["spans"][:i] + want["spans"][i + 1 :]
+        )

@@ -229,11 +229,13 @@ def test_postprocess_array_matches_scalar():
     assert got == want
 
 
-def test_recognize_batch_matches_scalar_on_random_images():
+def test_recognize_batch_matches_scalar_on_random_images(monkeypatch):
     """Property check: the vectorized batch recognizer is bit-identical in
     text (and 1e-12-close in confidence) to the scalar chain over ARBITRARY
     uint8 images — not just the band-structured synthetic corpus. Includes
-    degenerate all-dark / all-bright / striped / noise images."""
+    degenerate all-dark / all-bright / striped / noise images. Repeated with
+    a 10-letter CHARSET, whose column segments are 2-3 pixels wide instead
+    of 1-2."""
     import numpy as np
 
     rng = np.random.default_rng(123)
@@ -255,8 +257,24 @@ def test_recognize_batch_matches_scalar_on_random_images():
         imgs.append(im)
 
     grays = np.stack(imgs)
-    texts, confs = MK.recognize_gray_batch(grays)
-    for i, im in enumerate(imgs):
-        st, sc = MK.recognize_image(im.tobytes())
-        assert texts[i] == st, i
-        assert abs(confs[i] - sc) < 1e-12, i
+    for charset in (MK.CHARSET, list("abcdefghij")):
+        monkeypatch.setattr(MK, "CHARSET", charset)
+        texts, confs = MK.recognize_gray_batch(grays)
+        for i, im in enumerate(imgs):
+            st, sc = MK.recognize_image(im.tobytes())
+            assert texts[i] == st, (len(charset), i)
+            assert abs(confs[i] - sc) < 1e-12, (len(charset), i)
+
+
+def test_synth_media_batch_bytes_pinned():
+    """The synthetic scans behind every media golden, pinned byte for byte:
+    1,000 refs span several 128-ref chunks and end in a partial one."""
+    import hashlib
+
+    from ocr_spark.sources.media import synth_media_batch
+
+    grays = synth_media_batch([f"pin://{i}" for i in range(1000)])
+    assert grays.shape == (1000, 32, 32) and grays.dtype == np.uint8
+    assert hashlib.sha256(grays.tobytes()).hexdigest() == (
+        "8ad5e06eda2c672deb52026fc667349ea0000dbb5b2996291fefb1fcbb281392"
+    )

@@ -118,6 +118,43 @@ class TestTemperatureSampleNullStratum:
         assert all(r["stratum"] == "en" for r in rows)
 
 
+class TestRuleFilterBoardRow:
+    def test_flat_columns_and_twin_rows_equal(self, spark, tmp_path):
+        """The board's rule_filter row and its DuckDB twin return flat
+        columns only (reasons comma-joined) and the same rows — the
+        driver's compare cannot canonicalize array cells."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+
+        import __spark_entry__ as E
+
+        good = "The quick brown fox jumps over the lazy dog and runs far away. " * 10
+        texts = [good, "lorem ipsum {x}", "", None, "... ... ...", good + " # " * 30]
+        pq.write_table(
+            pa.table({"doc_id": list(range(len(texts))), "text": texts}),
+            str(tmp_path / "documents.parquet"),
+        )
+        sdf = E.q_rule_filter(spark, str(tmp_path))
+        nested = (T.ArrayType, T.MapType, T.StructType)
+        assert not [f.name for f in sdf.schema.fields if isinstance(f.dataType, nested)]
+        got = sorted(tuple(r) for r in sdf.collect())
+
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'documents.parquet'}')"
+        )
+        cur = con.execute(E._rule_filter_board_sql())
+        assert [d[0] for d in cur.description] == sdf.columns
+        want = sorted(cur.fetchall())
+        assert all(isinstance(v, (int, bool, str)) for row in want for v in row)
+        assert got == want
+        # the joined reasons really cover none, one and several rules
+        assert {r[2].count(",") for r in got if r[2]} >= {0, 1}
+        assert ("",) in {(r[2],) for r in got}
+
+
 class TestQueryBoardCap:
     def test_at_most_50_queries_each_with_an_oracle_twin(self):
         """The driver records only the FIRST 50 registered queries() in
