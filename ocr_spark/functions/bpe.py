@@ -162,10 +162,9 @@ def corpus_word_counts(
     top_words bounds the driver-side table (and with it bpe_train's merge
     loop) regardless of corpus size — the standard tokenizer-training
     practice: the Zipf tail contributes negligible pair counts but
-    unbounded vocabulary (digit runs, OCR garble). The window for the cut
-    runs over the POST-aggregation vocab table, not the corpus."""
-    from pyspark.sql import Window
-
+    unbounded vocabulary (digit runs, OCR garble). The cut is orderBy +
+    limit over the POST-aggregation vocab table (w is unique, so the order
+    is total): TakeOrderedAndProject, no single-partition window."""
     counts = (
         docs.select(
             F.explode(
@@ -179,14 +178,7 @@ def corpus_word_counts(
     )
     if min_count > 1:
         counts = counts.where(F.col("c") >= F.lit(min_count))
-    rn = F.row_number().over(
-        Window.orderBy(F.col("c").desc(), F.col("w").asc())
-    )
-    rows = (
-        counts.withColumn("rn", rn)
-        .where(F.col("rn") <= F.lit(top_words))
-        .collect()
-    )
+    rows = counts.orderBy(F.col("c").desc(), F.col("w").asc()).limit(top_words).collect()
     return {r["w"]: int(r["c"]) for r in rows}
 
 

@@ -17,7 +17,7 @@ of aggregation order.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.text_analysis import h32, h32_sql, h60, h60_sql
@@ -295,14 +295,9 @@ def unigram_logprob(
         F.sum("c").cast("long").alias("t_total"),
         F.count("*").cast("long").alias("v_size"),
     )
-    # global rank over vocab-sized (not corpus-sized) data; at 100 TB the
-    # vocab is capped by K so the single-partition window is bounded
-    rank_w = Window.orderBy(F.col("c").desc(), F.col("tok").asc())
-    vocab = (
-        vocab_all.withColumn("rn", F.row_number().over(rank_w))
-        .where(F.col("rn") <= F.lit(top_vocab))
-        .drop("rn")
-    )
+    # top-K over the vocab by a total order (tok is unique): orderBy +
+    # limit keeps K per partition (TakeOrderedAndProject), no global window
+    vocab = vocab_all.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(top_vocab)
     lp = F.floor(
         F.log(
             (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1)).cast("double")

@@ -44,17 +44,14 @@ STAGE_SCHEMA = T.StructType(
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
         T.StructField("confidence", T.DoubleType(), True),
-        # mergeable A2 parts: giant-doc chunking (pipeline span_chunk_threshold)
-        # recombines confidence across chunks as sum(conf_sum)/sum(conf_cnt)
-        T.StructField("conf_sum", T.DoubleType(), True),
-        T.StructField("conf_cnt", T.LongType(), True),
         T.StructField("error", T.StringType(), True),
         T.StructField("error_source", T.StringType(), True),
     ]
 )
 
-HEAVY = ("html", "pdf", "ocr", "media")
 MEDIA_KINDS = ("ocr", "media")
+# J1 media-kind engines selectable per run (see _process_batch)
+MEDIA_ENGINES = ("local", "local_warp", "local_db", "cloud")
 
 # per-doc payload map column attached by the sidecar join (pipeline);
 # consumed (and dropped) by the Arrow stage when backend == "sidecar"
@@ -208,7 +205,6 @@ def _process_batch(
     batch: pa.RecordBatch,
     rules,
     backend: str,
-    passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ) -> pa.RecordBatch:
     from ocr_spark.operators.media_kernels import _REC_CHUNK, recognize_gray_batch
@@ -216,8 +212,9 @@ def _process_batch(
     from ocr_spark.sources.media import resolve_gray_batch
 
     # J1 media-engine selection: the local ONNX-analogue kernel chain, the
-    # rotated-quad geometry path (W1/F6/K9/K10), or the cloud analogue
-    # (K13 PNG → fake API → K14 flatten). Same batch contract for all three.
+    # rotated-quad geometry path (W1/F6/K9/K10), the DB-style detector, or
+    # the cloud analogue (K13 PNG → fake API → K14 flatten). Same batch
+    # contract for all four.
     if media_engine == "cloud":
         from ocr_spark.operators.cloud_engine import recognize_cloud_batch
 
@@ -365,46 +362,45 @@ def _process_batch(
     # A2: overall confidence = mean of valid (>0) confidences over media
     # spans, 0.0 if media spans exist but none valid, null if no media.
     conf_np = np.where(conf_cnt > 0, conf_sum / np.maximum(conf_cnt, 1), 0.0)
-    no_media = ~has_media
-    arrays = [
-        doc_id,
-        new_spans,
-        pa.array(conf_np, type=pa.float64(), mask=no_media),
-        pa.array(conf_sum, type=pa.float64(), mask=no_media),
-        pa.array(conf_cnt, type=pa.int64(), mask=no_media),
-        pa.array(err, type=pa.string()),
-        pa.array(err_src, type=pa.string()),
-    ]
-    names = ["doc_id", "spans", "confidence", "conf_sum", "conf_cnt", "error", "error_source"]
-    for c in passthrough:
-        arrays.append(batch.column(c))
-        names.append(c)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+    return pa.RecordBatch.from_arrays(
+        [
+            doc_id,
+            new_spans,
+            pa.array(conf_np, type=pa.float64(), mask=~has_media),
+            pa.array(err, type=pa.string()),
+            pa.array(err_src, type=pa.string()),
+        ],
+        names=STAGE_SCHEMA.fieldNames(),
+    )
 
 
 def apply_heavy_kinds(
     df,
     rules: Sequence[tuple[str, str]],
-    media_resolver: str = "synthetic",
-    passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ):
     """mapInArrow stage handling html/pdf/ocr/media spans of each doc.
 
-    Input:  doc_id, spans (text-kinds already normalized natively), plus any
-            `passthrough` columns copied verbatim to the output (used by the
-            giant-doc chunking path to carry the chunk index through).
-    Output: STAGE_SCHEMA (+ passthrough); extractor column added by caller.
-    media_engine: 'local' (DBNet/CRNN-analogue kernel chain) or 'cloud'
-            (PNG-encode → nested-response flatten, cloud_engine.py).
+    Input:  doc_id, spans (text-kinds already normalized natively), plus
+            the MEDIA_SIDECAR_COL payload map when the sidecar is attached —
+            media then resolve from it (backend 'sidecar'), else from the
+            synthetic resolver.
+    Output: STAGE_SCHEMA; extractor column added by caller.
+    media_engine: one of MEDIA_ENGINES — 'local' (DBNet/CRNN-analogue
+            kernel chain), 'local_warp' (rotated-quad geometry),
+            'local_db' (DB-style detector) or 'cloud' (PNG-encode →
+            nested-response flatten, cloud_engine.py). Checked here,
+            while the plan is built, before any task runs.
     """
+    if media_engine not in MEDIA_ENGINES:
+        raise ValueError(
+            f"unknown media_engine {media_engine!r}; expected one of {MEDIA_ENGINES}"
+        )
     rules = list(rules)
-    backend = media_resolver
-
-    schema = T.StructType(list(STAGE_SCHEMA.fields) + [df.schema[c] for c in passthrough])
+    backend = "sidecar" if MEDIA_SIDECAR_COL in df.columns else "synthetic"
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield _process_batch(batch, rules, backend, passthrough, media_engine)
+            yield _process_batch(batch, rules, backend, media_engine)
 
-    return df.mapInArrow(gen, schema=schema)
+    return df.mapInArrow(gen, schema=STAGE_SCHEMA)

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus_clean import _TOKEN_PATTERN
@@ -107,15 +107,14 @@ def _grams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _prune(counts: DataFrame, keys: list[str], top_k: int, min_count: int):
-    """min_count floor, then deterministic top-k by (c desc, keys asc).
-    The global window runs over the post-floor gram table — vocab-sized
-    (and long-tail-free after the floor), not corpus-sized; top_k bounds
-    the model regardless of corpus scale."""
+    """min_count floor, then deterministic top-k by (c desc, keys asc) —
+    a total order, since the keys are unique per grouped row. orderBy +
+    limit plans as TakeOrderedAndProject: each partition keeps its own
+    top_k, so no single-partition window over the gram table."""
     if min_count > 1:
         counts = counts.where(F.col("c") >= F.lit(min_count))
     order = [F.col("c").desc()] + [F.col(k).asc() for k in keys]
-    rn = F.row_number().over(Window.orderBy(*order))
-    return counts.withColumn("rn", rn).where(F.col("rn") <= top_k).drop("rn")
+    return counts.orderBy(*order).limit(top_k)
 
 
 def train_ngram_lm(

@@ -58,7 +58,6 @@ def streaming_extract(
     checkpoint_dir: str,
     *,
     rules: Sequence[tuple[str, str]] = (),
-    media_resolver: str = "synthetic",
     media_engine: str = "local",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -70,7 +69,7 @@ def streaming_extract(
     available_now=True (default) drains everything pending then stops — the
     batch-backfill / test mode; False runs continuously with
     `processing_time` micro-batch cadence. `extract_kw` forwards to
-    pipeline.extract_documents (salt_partitions, span_chunk_threshold, ...).
+    pipeline.extract_documents (salt_partitions, media_sidecar).
     """
     from ocr_spark.pipeline import extract_documents
     from ocr_spark.schema import DOC_SCHEMA
@@ -85,7 +84,6 @@ def streaming_extract(
         out = extract_documents(
             batch_df,
             rules=rules,
-            media_resolver=media_resolver,
             media_engine=media_engine,
             **extract_kw,
         )

@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 
 def main() -> None:
+    from ocr_spark.operators.dispatch import MEDIA_ENGINES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="spans parquet/Iceberg path")
     ap.add_argument("--output", required=True, help="output table root")
@@ -34,7 +35,7 @@ def main() -> None:
     ap.add_argument(
         "--media-engine",
         default="local",
-        choices=["local", "local_warp", "local_db", "cloud"],
+        choices=MEDIA_ENGINES,
         help="J1 media-engine selection (reference requested_engine analogue)",
     )
     ap.add_argument(
@@ -43,7 +44,6 @@ def main() -> None:
         help="binaryFile glob for the media payload sidecar (production S1 "
         "path: broadcast-joined on media_ref, decoded in-stage)",
     )
-    ap.add_argument("--span-chunk-threshold", type=int, default=None)
     ap.add_argument(
         "--streaming",
         action="store_true",
@@ -83,7 +83,6 @@ def main() -> None:
             rules=rules,
             media_engine=args.media_engine,
             salt_partitions=args.salt_partitions,
-            span_chunk_threshold=args.span_chunk_threshold,
             media_sidecar=sidecar,
         )
         q.awaitTermination()
@@ -108,7 +107,6 @@ def main() -> None:
             salt_partitions=args.salt_partitions,
             media_engine=args.media_engine,
             media_sidecar=sidecar,
-            span_chunk_threshold=args.span_chunk_threshold,
         ),
     )
     print(json.dumps(stats))

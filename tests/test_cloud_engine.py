@@ -281,9 +281,10 @@ def test_unknown_media_engine_raises(spark):
     from ocr_spark.pipeline import extract_documents
     from ocr_spark.schema import DOC_SCHEMA
 
+    # rejected while the plan is built, before any task runs
     docs = spark.createDataFrame(generate_docs(4), DOC_SCHEMA)
-    with pytest.raises(Exception):
-        extract_documents(docs, media_engine="nope").collect()
+    with pytest.raises(ValueError, match="unknown media_engine"):
+        extract_documents(docs, media_engine="nope")
 
 
 def test_cloud_registry_impl():

@@ -124,58 +124,3 @@ def test_span_order_is_offset_order(result_and_golden):
     ).where("disordered").count()
     assert bad == 0
 
-
-def test_span_chunk_threshold_same_result(spark):
-    """Giant-doc chunking (span_chunk_threshold) must be invisible in the
-    output: identical spans, confidence (1e-9), and error envelope vs the
-    unchunked path — including a 3000-media-span pathological doc."""
-    from ocr_spark.fixtures import generate_docs, media_ref_for
-    from ocr_spark.schema import DOC_SCHEMA
-
-    docs = generate_docs(60)
-    giant = {
-        "doc_id": "giant-0",
-        "spans": [
-            {
-                "kind": "media",
-                "text": None,
-                "media_ref": media_ref_for("giant-0", k),
-                "offset": k,
-            }
-            for k in range(3000)
-        ],
-    }
-    # a giant doc whose LAST chunk holds the only error (None media_ref)
-    bad = {
-        "doc_id": "giant-bad",
-        "spans": (
-            [
-                {
-                    "kind": "media",
-                    "text": None,
-                    "media_ref": media_ref_for("giant-bad", k),
-                    "offset": k,
-                }
-                for k in range(900)
-            ]
-            + [{"kind": "media", "text": None, "media_ref": None, "offset": 900}]
-        ),
-    }
-    df = spark.createDataFrame(docs + [giant, bad], DOC_SCHEMA)
-
-    plain = {r.doc_id: r for r in extract_documents(df, rules=RULES).collect()}
-    chunked = {
-        r.doc_id: r
-        for r in extract_documents(
-            df, rules=RULES, salt_partitions=16, span_chunk_threshold=256
-        ).collect()
-    }
-    assert set(plain) == set(chunked)
-    for d in plain:
-        a, b = plain[d], chunked[d]
-        assert a.spans == b.spans, d
-        if a.confidence is None:
-            assert b.confidence is None, d
-        else:
-            assert abs(a.confidence - b.confidence) < 1e-9, d
-        assert (a.error, a.error_source) == (b.error, b.error_source), d

@@ -88,16 +88,79 @@ def test_sidecar_e2e(spark, payload_dir):
     }
 
 
-def test_sidecar_rejects_multi_pass_modes(spark, payload_dir):
+def test_sidecar_giant_docs_match_synthetic(spark, tmp_path):
+    """The sidecar works with every input, giant docs included: a doc with
+    3,000 media spans and a 901-span doc whose last span has a null ref give
+    the same spans, confidence and envelopes through binaryFile payloads as
+    through the synthetic resolver."""
+    from ocr_spark.fixtures import generate_docs, media_ref_for
     from ocr_spark.pipeline import extract_documents
     from ocr_spark.schema import DOC_SCHEMA
 
-    sidecar = sidecar_df(spark, str(payload_dir) + "/*.bin")
-    docs = spark.createDataFrame([("x", [("text", "t", None, 0)])], DOC_SCHEMA)
-    with pytest.raises(NotImplementedError):
-        extract_documents(docs, media_sidecar=sidecar, split_light=True)
-    with pytest.raises(NotImplementedError):
-        extract_documents(docs, media_sidecar=sidecar, span_chunk_threshold=4)
+    def media_doc(doc_id, n):
+        return {
+            "doc_id": doc_id,
+            "spans": [
+                {"kind": "media", "text": None, "media_ref": media_ref_for(doc_id, k),
+                 "offset": k}
+                for k in range(n)
+            ],
+        }
+
+    bad = media_doc("giant-bad", 900)
+    bad["spans"].append({"kind": "media", "text": None, "media_ref": None, "offset": 900})
+    docs = generate_docs(12) + [media_doc("giant-0", 3000), bad]
+
+    def fname(ref):
+        return ref.replace("://", "_").replace("/", "_") + ".bin"
+
+    refs = {s["media_ref"] for d in docs for s in d["spans"]
+            if s["kind"] in ("ocr", "media") and s["media_ref"]}
+    for ref in refs:
+        (tmp_path / fname(ref)).write_bytes(synth_media_bytes(ref))
+    sidecar = sidecar_df(spark, str(tmp_path) + "/*.bin")
+    uri = {u.rsplit("/", 1)[-1]: u for u in (r.media_ref for r in sidecar.collect())}
+    to_uri = {ref: uri[fname(ref)] for ref in refs}
+    from_uri = {u: ref for ref, u in to_uri.items()}
+
+    def with_uris(d):
+        return {
+            "doc_id": d["doc_id"],
+            "spans": [dict(s, media_ref=to_uri.get(s["media_ref"], s["media_ref"]))
+                      for s in d["spans"]],
+        }
+
+    rules = [["hte", "the"]]
+    want = {
+        r.doc_id: r
+        for r in extract_documents(spark.createDataFrame(docs, DOC_SCHEMA), rules=rules)
+        .collect()
+    }
+    got = {
+        r.doc_id: r
+        for r in extract_documents(
+            spark.createDataFrame([with_uris(d) for d in docs], DOC_SCHEMA),
+            rules=rules,
+            salt_partitions=4,
+            media_sidecar=sidecar,
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for d, w in want.items():
+        g = got[d]
+        spans = [s.asDict() for s in g.spans]
+        for s in spans:
+            s["media_ref"] = from_uri.get(s["media_ref"], s["media_ref"])
+        assert spans == [s.asDict() for s in w.spans], d
+        if w.confidence is None:
+            assert g.confidence is None, d
+        else:
+            assert abs(g.confidence - w.confidence) < 1e-9, d
+        assert (g.error, g.error_source) == (w.error, w.error_source), d
+    assert len(got["giant-0"].spans) == 3000 and got["giant-0"].error is None
+    assert got["giant-0"].confidence > 0
+    assert "unresolvable" in got["giant-bad"].error
+    assert got["giant-bad"].error_source == "media"
 
 
 def test_sidecar_duplicate_refs_tolerated(spark, payload_dir):
