@@ -244,23 +244,17 @@ def run_resumable(
     n_buckets: int = 32,
     run_id: str = "run-0",
     extract=None,
-    verify: str = "metadata",
 ) -> dict:
     """Execute `extract` (df -> OUTPUT_SCHEMA df) over the not-yet-complete
     buckets and commit data + manifests. Returns run stats.
 
-    verify='metadata' (default): per-bucket manifest stats come from the
-    committed parquet FOOTERS (column-chunk statistics — zero data pages
-    read; ONE scan total in the whole plan). verify='scan': additionally
-    re-read the written buckets' data pages (file- and column-pruned) and
-    build the stats from actual rows — the belt-and-braces mode. Both modes
-    describe what is on disk, and both cross-check against the write job's
-    df.observe totals, refusing to write manifests on mismatch."""
-    if verify not in ("metadata", "scan"):
-        raise ValueError(
-            f"verify={verify!r}: expected 'metadata' (footer statistics) or "
-            "'scan' (re-read written buckets)"
-        )
+    Per-bucket manifest stats come from the committed parquet FOOTERS
+    (column-chunk statistics — zero data pages read; ONE scan total in the
+    whole plan). When a footer lacks statistics, the written buckets' data
+    pages are re-read (file- and column-pruned) and the stats built from
+    actual rows. Either way the stats describe what is on disk, and they
+    are cross-checked against the write job's df.observe totals; manifests
+    are refused on mismatch."""
     from ocr_spark.pipeline import extract_documents
 
     extract = extract or (lambda d: extract_documents(d))
@@ -308,10 +302,8 @@ def run_resumable(
     # is deliberate: the manifest asserts bucket completeness, so it must
     # describe committed files, not the plan that produced them.
     candidates = sorted(set(int(b) for b in (totals["buckets"] or [])) - already)
-    stats: list[dict] | None = None
-    if verify != "scan":
-        stats = _bucket_stats_from_footers(out_dir, candidates)
-    if stats is None:  # verify='scan', or a footer lacked statistics
+    stats = _bucket_stats_from_footers(out_dir, candidates)
+    if stats is None:  # a footer lacked statistics
         paths = [
             p
             for b in candidates

@@ -149,10 +149,6 @@ def process_output(col: Column, rules: Sequence[tuple[str, str]] = ()) -> Column
     return apply_rules(clean_whitespace(col), rules)
 
 
-def process_output_sql(expr: str, rules: Sequence[tuple[str, str]] = ()) -> str:
-    return apply_rules_sql(clean_whitespace_sql(expr), rules)
-
-
 # ---------------------------------------------------------------------------
 # T7 — hyphenation repair: join "exam-\nple" -> "example" (letter-hyphen-
 # newline-letter). Must run BEFORE T4 collapses the newline context away is

@@ -311,16 +311,6 @@ def html_metadata(
     }
 
 
-def html_metadata_batch(
-    htmls: list[str],
-    doc_urls: list[str | None] | None = None,
-    agent: str | None = None,
-) -> list[dict]:
-    if doc_urls is None:
-        return [html_metadata(h, agent=agent) for h in htmls]
-    return [html_metadata(h, u, agent=agent) for h, u in zip(htmls, doc_urls)]
-
-
 def html_metadata_df(
     docs_df,
     html_col: str = "text",

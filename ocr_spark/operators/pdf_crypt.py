@@ -612,6 +612,18 @@ def _mask_stream_bodies(data: bytes) -> bytes:
     return bytes(out)
 
 
+_INT_OBJ_RE = re.compile(r"\s*([+-]?\d+)\s*endobj\b")
+
+
+def _find_obj(text: str, num: int, gen: int) -> re.Match | None:
+    """Header match of object `num gen obj` (the last definition wins, as
+    incremental updates append newer ones), or None."""
+    om = None
+    for om in re.finditer(rf"(?<![0-9]){num}\s+{gen}\s+obj\b", text):
+        pass
+    return om
+
+
 def _parse_encrypt_dict(data: bytes) -> tuple[dict, bytes, int | None] | None:
     """Locate + parse the /Encrypt dictionary and the first /ID string.
     Returns (fields, id0, encrypt_object_number|None), or None when the
@@ -626,11 +638,7 @@ def _parse_encrypt_dict(data: bytes) -> tuple[dict, bytes, int | None] | None:
     m = matches[-1]
     if m.group(1) is not None:
         enc_num = int(m.group(1))
-        om = None
-        for om_c in re.finditer(
-            rf"(?<![0-9]){enc_num}\s+{int(m.group(2))}\s+obj\b", text
-        ):
-            om = om_c  # last definition wins
+        om = _find_obj(text, enc_num, int(m.group(2)))
         if om is None:
             raise ValueError("encrypted PDF: /Encrypt object not found")
         k = text.find("<<", om.end())
@@ -645,6 +653,16 @@ def _parse_encrypt_dict(data: bytes) -> tuple[dict, bytes, int | None] | None:
     def _int(key: str):
         kv = entries.get(key)
         if kv and kv[0] == "tok":
+            ref = re.fullmatch(r"(\d+) (\d+) R", kv[1])
+            if ref:  # never read as absent: V2 would fall back to 40-bit keys
+                om = _find_obj(text, int(ref.group(1)), int(ref.group(2)))
+                im = om and _INT_OBJ_RE.match(text, om.end())
+                if not im:
+                    raise ValueError(
+                        f"encrypted PDF: indirect /{key} {kv[1]} does not "
+                        "resolve to an integer object"
+                    )
+                return int(im.group(1))
             try:
                 return int(kv[1])
             except ValueError:

@@ -20,12 +20,20 @@ def docs_df(spark):
     return spark.createDataFrame(generate_docs(N_DOCS), DOC_SCHEMA)
 
 
+def _force_scan(monkeypatch):
+    """Footers without statistics: run_resumable falls back to re-reading
+    the written buckets."""
+    import ocr_spark.checkpoint as cp
+
+    monkeypatch.setattr(cp, "_bucket_stats_from_footers", lambda out_dir, candidates: None)
+
+
 @pytest.mark.parametrize("verify", ["metadata", "scan"])
-def test_full_run_then_resume_noop(spark, docs_df, tmp_path, verify):
+def test_full_run_then_resume_noop(spark, docs_df, tmp_path, verify, monkeypatch):
+    if verify == "scan":
+        _force_scan(monkeypatch)
     out = str(tmp_path / "out")
-    stats = run_resumable(
-        spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1", verify=verify
-    )
+    stats = run_resumable(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r1")
     assert stats["n_docs"] == N_DOCS
     assert len(completed_buckets(out)) == len(stats["buckets_written"])
 
@@ -33,9 +41,7 @@ def test_full_run_then_resume_noop(spark, docs_df, tmp_path, verify):
     todo = remaining_input(spark, docs_df, out, N_BUCKETS)
     assert todo.count() == 0
 
-    stats2 = run_resumable(
-        spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r2", verify=verify
-    )
+    stats2 = run_resumable(spark, docs_df, out, n_buckets=N_BUCKETS, run_id="r2")
     assert stats2["n_docs"] == 0
 
     final = spark.read.parquet(out)
@@ -91,14 +97,15 @@ def test_manifest_lineage_fields(spark, docs_df, tmp_path):
         assert m["docs_per_sec_run"] > 0
 
 
-def test_footer_stats_match_scan_stats(spark, docs_df, tmp_path):
-    """The default (footer-metadata) manifest stats must be value-identical
-    to the verification-scan stats — row counts, error counts and doc_id
-    ranges all come from parquet column-chunk statistics."""
+def test_footer_stats_match_scan_stats(spark, docs_df, tmp_path, monkeypatch):
+    """The footer-metadata manifest stats must be value-identical to the
+    fallback scan's stats — row counts, error counts and doc_id ranges all
+    come from parquet column-chunk statistics."""
     out_m = str(tmp_path / "meta")
     out_s = str(tmp_path / "scan")
-    run_resumable(spark, docs_df, out_m, n_buckets=N_BUCKETS, run_id="r", verify="metadata")
-    run_resumable(spark, docs_df, out_s, n_buckets=N_BUCKETS, run_id="r", verify="scan")
+    run_resumable(spark, docs_df, out_m, n_buckets=N_BUCKETS, run_id="r")
+    _force_scan(monkeypatch)
+    run_resumable(spark, docs_df, out_s, n_buckets=N_BUCKETS, run_id="r")
 
     def key(ms):
         return {

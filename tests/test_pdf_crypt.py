@@ -584,3 +584,19 @@ class TestReviewHardening:
         dec = decrypt_pdf(enc)
         assert b"contains endobj inside".hex().encode() in dec
         assert b"(x)" not in enc  # the short string WAS encrypted
+
+    def test_indirect_length_in_encrypt_dict_resolves(self):
+        # '/Length 99 0 R' used to read as absent: the 40-bit default key
+        # failed authentication and the file reported a password
+        enc = encrypt_pdf(
+            pdf_write([{"x": 50, "y": 60, "text": "Hello world"}]), variant="rc4-128"
+        )
+        assert enc.count(b"/Length 128 ") == 1
+        indirect = enc.replace(b"/Length 128 ", b"/Length 99 0 R ").replace(
+            b"xref\n", b"99 0 obj\n128\nendobj\nxref\n", 1
+        )
+        assert "Hello world" in extract_pdf_text(indirect.decode("latin-1"))
+
+        dangling = enc.replace(b"/Length 128 ", b"/Length 98 0 R ")
+        with pytest.raises(ValueError, match="indirect /Length 98 0 R"):
+            decrypt_pdf(dangling)

@@ -145,15 +145,6 @@ class TestReviewFindings:
         assert parquet_rowcount(a.join(b, "id")) is None  # not 30
         assert parquet_rowcount(a.unionByName(b)) is None
 
-    def test_checkpoint_verify_validated(self, spark, tmp_path):
-        from ocr_spark.checkpoint import run_resumable
-        from ocr_spark.fixtures import generate_docs
-        from ocr_spark.schema import DOC_SCHEMA
-
-        docs = spark.createDataFrame(generate_docs(5), DOC_SCHEMA)
-        with pytest.raises(ValueError, match="verify='full'"):
-            run_resumable(spark, docs, str(tmp_path / "o"), verify="full")
-
 
 class TestDbF6AreaFilter:
     def test_sheared_sliver_dropped(self, monkeypatch):

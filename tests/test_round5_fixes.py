@@ -184,6 +184,26 @@ class TestQueryBoardCap:
         m = re.search(r"exactly (\d+) `queries\(\)`", readme)
         assert m and int(m.group(1)) == len(E.queries())
 
+    def test_every_query_row_is_flat(self, spark):
+        """The driver canonicalizes each row with pandas, which cannot hash
+        nested values (rule_filter's reasons array failed it). No queries()
+        row may return an Array, Map or Struct column."""
+        from pyspark.sql import types as T
+
+        import __spark_entry__ as E
+
+        nested = (T.ArrayType, T.MapType, T.StructType)
+        found = {}
+        for name, q in E.queries().items():
+            cols = [
+                f.name
+                for f in q(spark, "/root/testdata/sf0.001").schema.fields
+                if isinstance(f.dataType, nested)
+            ]
+            if cols:
+                found[name] = cols
+        assert found == {}
+
 
 class TestPhash64PurePython:
     def test_high_bit_hash_is_signed_python_int(self):
