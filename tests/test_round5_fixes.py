@@ -185,19 +185,20 @@ class TestQueryBoardCap:
         assert m and int(m.group(1)) == len(E.queries())
 
     def test_every_query_row_is_flat(self, spark):
-        """The driver canonicalizes each row with pandas, which cannot hash
-        nested values (rule_filter's reasons array failed it). No queries()
-        row may return an Array, Map or Struct column."""
+        """Rows are canonicalized with pandas, which cannot hash nested
+        values (rule_filter's reasons array failed it). No queries() row may
+        return an Array, Map or Struct column."""
         from pyspark.sql import types as T
 
         import __spark_entry__ as E
+        from tests.test_round4_fixes import SF_DIR
 
         nested = (T.ArrayType, T.MapType, T.StructType)
         found = {}
         for name, q in E.queries().items():
             cols = [
                 f.name
-                for f in q(spark, "/root/testdata/sf0.001").schema.fields
+                for f in q(spark, SF_DIR).schema.fields
                 if isinstance(f.dataType, nested)
             ]
             if cols:
