@@ -1384,13 +1384,20 @@ def q_dedup_clusters(spark, sf_dir):
     (id, rep) keep/drop labels — the stage that turns pair lists into dedup
     decisions. Pairs come from the scale-safe SimHash pigeonhole join; the
     oracle recomputes them brute-force and closes them with a recursive CTE,
-    so equality proves both the pair recall AND the label propagation."""
-    from ocr_spark.operators.dedup import dedup_clusters, simhash_near_pairs
+    so equality proves both the pair recall AND the component resolution."""
+    from ocr_spark.operators.dedup import (
+        _clusters_star,
+        _materialize_pairs,
+        simhash_near_pairs,
+    )
 
-    # pin the DISTRIBUTED loop so the driver gate proves it against DuckDB
-    # (the 'auto' default would resolve this small subgraph driver-side)
+    # run the DISTRIBUTED resolver so the driver gate proves it against
+    # DuckDB (dedup_clusters resolves this small subgraph driver-side)
     pairs = simhash_near_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
-    return dedup_clusters(pairs, algorithm="label")
+    pairs_m, _ = _materialize_pairs(pairs)
+    out = _clusters_star(pairs_m, max_rounds=30, stats=None)
+    pairs_m.unpersist()  # star's round checkpoints consumed it
+    return out
 
 
 def q_corpus_pipeline_full(spark, sf_dir):

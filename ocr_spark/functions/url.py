@@ -56,12 +56,6 @@ _URI_RE = r"^(([^:/?#]+):)?(//([^/?#]*))?([^?#]*)(\?([^#]*))?(#(.*))?"
 # and identical pages escape URL dedup
 _TRACKING_RE = r"^(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid|ref)(=|$)"
 
-_TWO_LEVEL_SUFFIXES = (
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "com.au", "net.au", "org.au",
-    "co.jp", "ne.jp", "or.jp", "com.br", "com.cn", "com.mx", "co.in",
-    "co.nz", "com.sg", "com.tr", "co.za", "com.ar",
-)
-
 _PSL_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "resources",
@@ -239,15 +233,12 @@ def _suffix_plan(psl: dict) -> list[tuple[str, int, frozenset]]:
     return plan
 
 
-def registrable_domain(
-    col: Column, use_psl: bool = True, is_host: bool = False
-) -> Column:
+def registrable_domain(col: Column, is_host: bool = False) -> Column:
     """eTLD+1 of a URL column via the Public Suffix List algorithm over the
     pinned snapshot (see module docstring). Pure Column expressions —
     guarded slice/array accesses (ANSI mode), literal rule sets (a few
     hundred entries; a full PSL snapshot would ride a broadcast join
-    instead — documented swap point). use_psl=False keeps the round-4
-    two-level heuristic for comparison.
+    instead — documented swap point).
 
     is_host=True skips the URL parse and treats `col` as the host itself —
     pass an already-STAGED url_host column when the caller also needs the
@@ -256,16 +247,6 @@ def registrable_domain(
     host = col if is_host else url_host(col)
     labels = F.split(host, r"\.")
     n = F.size(labels)
-    if not use_psl:
-        last2 = F.when(
-            n >= 2,
-            F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1)),
-        )
-        two_level = F.array(*[F.lit(s) for s in _TWO_LEVEL_SUFFIXES])
-        return F.when(
-            (n >= 3) & F.array_contains(two_level, last2),
-            F.concat_ws(".", F.element_at(labels, -3), last2),
-        ).otherwise(F.when(n >= 2, last2).otherwise(host))
 
     def last_k(k: int) -> Column:
         # right-most k labels as a dotted string; NULL when n < k
@@ -360,21 +341,10 @@ CASE WHEN {expr} IS NULL THEN NULL ELSE (
 END""".strip()
 
 
-def registrable_domain_sql(expr: str, use_psl: bool = True) -> str:
+def registrable_domain_sql(expr: str) -> str:
     """DuckDB twin of registrable_domain — the SAME _suffix_plan drives
     both engines' branch order, so rule precedence cannot drift."""
     host = url_host_sql(expr)
-    if not use_psl:
-        suffixes = ", ".join(f"'{s}'" for s in _TWO_LEVEL_SUFFIXES)
-        return f"""
-CASE WHEN {expr} IS NULL THEN NULL ELSE (
-  WITH x AS (SELECT string_split({host}, '.') AS ls)
-  SELECT CASE
-    WHEN len(ls) >= 3 AND (ls[-2] || '.' || ls[-1]) IN ({suffixes})
-      THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-    WHEN len(ls) >= 2 THEN ls[-2] || '.' || ls[-1]
-    ELSE {host} END FROM x)
-END""".strip()
 
     def last_k(k: int) -> str:
         return f"array_to_string(ls[n - {k - 1}:n], '.')"

@@ -44,7 +44,6 @@ def corpus_pipeline(
     min_quality: float = 0.45,
     quality: str = "v1",
     dedup_method: str = "simhash",
-    cluster_algorithm: str = "auto",
     contamination_n: int = 8,
     max_shared_shingles: int = 0,
     dup_span_n: int | None = None,
@@ -72,8 +71,9 @@ def corpus_pipeline(
     codegen'd predicate at the scan; v2 rides the staged array projections
     of quality_repetition_select — one extra projection chain, no shuffle).
 
-    `stats` (optional dict) receives the cluster-stage round/convergence
-    numbers from dedup_clusters. `dedup_kw` forwards to the chosen pair
+    `stats` (optional dict) receives the cluster stage's rounds, convergence
+    and resolved algorithm ('driver' or 'star', chosen by dedup_clusters
+    from the pair count). `dedup_kw` forwards to the chosen pair
     generator (e.g. max_hamming= for simhash, threshold= for minhash).
     """
     if quality not in ("v1", "v2"):
@@ -123,7 +123,6 @@ def corpus_pipeline(
         method=dedup_method,
         id_col=id_col,
         text_col=text_col,
-        cluster_algorithm=cluster_algorithm,
         stats=stats,
         **dedup_kw,
     )

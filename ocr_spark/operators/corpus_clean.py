@@ -61,20 +61,23 @@ def ws_tokens_sql(expr: str) -> str:
 #
 # Scale plan (100 TB): the frequent-line SET is bounded by total_lines /
 # min_docs and in practice is the small boilerplate tail, so the corpus
-# itself never shuffles on the drop side:
-#   * strategy='join'  — fully distributed: line keys shuffle once for the
-#     frequency count (partial-agg combines per-partition duplicates first),
-#     then ONE corpus pass flags lines via a broadcast-hinted left join and
+# itself never shuffles on the drop side. The frequent set's size picks the
+# path:
+#   * inline, when it fits _INLINE_MAX_LINES — zero corpus shuffle: the
+#     frequent-key set is collected (driver-capped like dedup.py's
+#     union-find broadcast analogue) and applied as an in-row array filter;
+#     only the key-count aggregation (line-key-sized, not corpus-sized)
+#     runs distributed.
+#   * join, above it (inline keys must fit in driver memory) — fully
+#     distributed: line keys shuffle once for the frequency count
+#     (partial-agg combines per-partition duplicates first), then ONE
+#     corpus pass flags lines via a broadcast-hinted left join and
 #     re-assembles per doc (the posexplode and groupBy(doc_id) stay within
 #     the partitioning Spark already has for the doc — the groupBy is the
 #     single corpus shuffle).
-#   * strategy='inline' — zero corpus shuffle: the frequent-key set is
-#     collected (driver-capped like dedup.py's union-find broadcast
-#     analogue) and applied as an in-row array filter; only the key-count
-#     aggregation (line-key-sized, not corpus-sized) runs distributed.
-#   * strategy='auto'  — inline when the frequent set fits the cap, else
-#     join.
 # ---------------------------------------------------------------------------
+
+_INLINE_MAX_LINES = 100_000
 
 
 def _sql_str(s: str) -> str:
@@ -126,8 +129,6 @@ def line_dedup(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
-    inline_max_lines: int = 100_000,
     sep: str = "\n",
 ) -> DataFrame:
     """Remove corpus-frequent lines from every document.
@@ -141,38 +142,29 @@ def line_dedup(
     """
     import re as _re
 
-    if strategy not in ("auto", "join", "inline"):
-        raise ValueError(f"strategy={strategy!r}: expected auto|join|inline")
     freq = frequent_line_keys(docs, min_docs, id_col, text_col, sep)
 
-    if strategy != "join":
-        n_freq = freq.limit(inline_max_lines + 1).count()
-        if n_freq <= inline_max_lines:
-            keys = [r[0] for r in freq.collect()]
-            lines = F.split(F.col(text_col), _re.escape(sep))
-            if keys:
-                # .isin converts to a hashed InSet even inside the HOF
-                # lambda (verified in the optimized plan) — O(1) per line
-                # vs array_contains' linear scan of the literal key array
-                # (measured 10.6x at 50k keys)
-                kept = F.filter(
-                    lines,
-                    lambda x: (line_norm(x) == "")
-                    | ~h60(line_norm(x)).isin(*keys),
-                )
-            else:
-                kept = lines
-            return docs.select(
-                F.col(id_col),
-                F.array_join(kept, sep).alias("text"),
-                F.size(lines).cast("long").alias("n_lines"),
-                (F.size(lines) - F.size(kept)).cast("long").alias("n_dropped"),
+    if freq.limit(_INLINE_MAX_LINES + 1).count() <= _INLINE_MAX_LINES:
+        keys = [r[0] for r in freq.collect()]
+        lines = F.split(F.col(text_col), _re.escape(sep))
+        if keys:
+            # .isin converts to a hashed InSet even inside the HOF
+            # lambda (verified in the optimized plan) — O(1) per line
+            # vs array_contains' linear scan of the literal key array
+            # (measured 10.6x at 50k keys)
+            kept = F.filter(
+                lines,
+                lambda x: (line_norm(x) == "")
+                | ~h60(line_norm(x)).isin(*keys),
             )
-        if strategy == "inline":
-            raise ValueError(
-                f"strategy='inline' but frequent-line set exceeds "
-                f"inline_max_lines={inline_max_lines}; use 'join' or 'auto'"
-            )
+        else:
+            kept = lines
+        return docs.select(
+            F.col(id_col),
+            F.array_join(kept, sep).alias("text"),
+            F.size(lines).cast("long").alias("n_lines"),
+            (F.size(lines) - F.size(kept)).cast("long").alias("n_dropped"),
+        )
 
     # distributed join path: flag exploded lines against the broadcast
     # frequent set, one groupBy(doc) re-assembly shuffle. posexplode_OUTER:
@@ -218,7 +210,7 @@ def line_dedup(
 
 def line_dedup_sql(src: str, min_docs: int = 2, sep: str = "\n") -> str:
     """DuckDB twin of line_dedup over `src` (a subquery yielding
-    (doc_id, text)). Mirrors the inline strategy: frequent keys as a list
+    (doc_id, text)). Mirrors the inline path: frequent keys as a list
     column cross-joined into an in-row list_filter. `sep` matches the Spark
     side's unit separator (emitted as chr() concatenation so control chars
     never sit raw inside a SQL literal)."""

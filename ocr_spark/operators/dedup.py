@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ocr_spark.operators.text_analysis import fingerprint, h32
 
@@ -614,79 +615,63 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 
+# the broadcast-join principle applied to graph resolution: at or below
+# this many pairs (~32 MB of longs; near-dup subgraphs are vastly smaller
+# than the corpus) one driver union-find beats any number of distributed
+# rounds. String ids (URLs, hex hashes) cost ~an order more in pandas
+# object columns and the union-find dict, so their cut is 1/8 of it.
+_DRIVER_MAX_PAIRS = 2_000_000
+
+
 def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 30,
     stats: dict | None = None,
-    algorithm: str = "auto",
-    driver_max_pairs: int = 2_000_000,
-    label_switch_rounds: int = 12,
 ) -> DataFrame:
     """Connected components over a candidate-pair frame: (id, rep) for every
     id appearing in any pair, rep = the smallest id in its component.
 
-    algorithm='auto' (default): the broadcast-join principle applied to
-    graph resolution — the pair count is read for free from an Observation
-    on the mandatory pair materialization; at or below `driver_max_pairs`
-    (2M pairs ≈ 32 MB of longs — near-dup subgraphs are vastly smaller than
-    the corpus) the components are resolved by a single driver-side
-    union-find (zero iterative jobs); above it, the distributed label loop
-    runs. Labels are identical across all paths.
+    The pair count is read for free from an Observation on the mandatory
+    pair materialization. At or below `_DRIVER_MAX_PAIRS` the components are
+    resolved by a single driver-side union-find (zero iterative jobs);
+    above it by alternating large-star/small-star (`_clusters_star`), whose
+    round count grows with log(n) whatever the component diameter, so
+    template-drift chains A~B~C~... converge as fast as dense LSH cliques.
+    Labels are identical on both paths.
 
-    algorithm='label': iterative smallest-label propagation — each round
-    joins the symmetrized edge list to the current labels, takes min(label)
-    per node, and stops at fixpoint. Rounds needed = the component diameter
-    — near-dup clusters are dense (LSH pairs approximate cliques), so this
-    converges in a handful of rounds; each round is ONE shuffle join + ONE
-    groupBy + ONE job (the convergence count rides the localCheckpoint via
-    observe), with the checkpoint truncating lineage so plans stay flat.
-
-    algorithm='star': alternating large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — rounds grow
-    with log(n) REGARDLESS of diameter, at ~2× the per-round cost. The scale
-    insurance for adversarial chain-shaped duplicate graphs (template-drift
-    chains A~B~C~… where no two distant members are near-dups of each
-    other): a diameter-10k component finishes in ~a dozen rounds where label
-    propagation needs 10k. Same output contract, bit-identical labels.
-
-    `stats`, when provided, receives {'rounds': k, 'converged': bool} (and
-    'algorithm' for the resolved auto choice).
-
-    auto additionally hedges the large-graph path: label propagation's
-    round count is the component diameter, which auto cannot see up front,
-    so if the label loop has not converged after `label_switch_rounds`
-    rounds it abandons it and restarts with star (the materialized
-    pairs_m makes the restart free of recomputation; star's round count
-    is log-bounded regardless of diameter). Dense near-dup graphs — the
-    overwhelmingly common case — converge in a handful of rounds and
-    never trigger the switch; adversarial template-drift chains pay
-    label_switch_rounds + O(log n) rounds instead of O(diameter). The
-    switch records stats['algorithm'] = 'label->star' and
-    stats['label_rounds_before_switch']. Explicit algorithm='label' never
-    switches (the caller asked for label semantics, warning included).
+    `stats`, when provided, receives {'rounds': k, 'converged': bool,
+    'algorithm': 'driver' | 'star'}.
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(
-            f"algorithm={algorithm!r}: expected 'auto' (driver union-find "
-            "for small pair sets), 'label' (diameter-bounded min-label "
-            "propagation) or 'star' (log-round large/small-star)"
-        )
-    # materialize the pair list ONCE: the symmetrized edge union evaluates
-    # its input per branch, so building edges straight off an expensive
-    # near-dup join would run that join twice before any caching fills;
-    # the observation gives auto its pair count from the same job.
-    # persist()+count, NOT localCheckpoint: pairs_m is fully consumed
-    # before every return below, so its blocks are RELEASED on exit (a
-    # localCheckpoint's blocks are unreleasable-by-API and lived for the
-    # whole session — the round-4 cache-accumulation complaint); lineage
-    # truncation is only essential for the ITERATIVE round frames, which
-    # keep their localCheckpoints (bounded by the round count).
+    pairs_m, n_pairs = _materialize_pairs(pairs, id_a, id_b)
+    budget = _DRIVER_MAX_PAIRS
+    if isinstance(pairs_m.schema["id_a"].dataType, T.StringType):
+        budget //= 8
+    if n_pairs <= budget:
+        out = _clusters_driver(pairs_m, stats=stats)  # toPandas consumed it
+    else:
+        out = _clusters_star(pairs_m, max_rounds=max_rounds, stats=stats)
+    # both results read only their own data (driver rows / star's round
+    # checkpoints), never pairs_m, so its blocks are released on exit
+    pairs_m.unpersist()
+    return out
+
+
+def _materialize_pairs(
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
+) -> tuple[DataFrame, int]:
+    """The pair list as a persisted (id_a, id_b) frame without null-id
+    pairs, and its row count. Materialized ONCE because both resolvers read
+    it more than once: built straight off an expensive near-dup join, every
+    read would re-run that join. persist()+count, NOT localCheckpoint: the
+    caller unpersists it after resolution, so its blocks are released (a
+    localCheckpoint's blocks cannot be released by API and live for the
+    whole session); the count rides an Observation on the same job. Null
+    ids are dropped here so both paths see the same edge set: a null never
+    equi-joins in star, and the driver path would otherwise label a
+    (null, null) row."""
     obs = Observation("dedup_clusters_pairs")
-    # drop null-id pairs ONCE here so all three algorithms see the same
-    # edge set (a null never equi-joins in the distributed paths, but the
-    # driver path would otherwise collect it and label a (null,null) row)
     pairs_m = (
         pairs.select(F.col(id_a).alias("id_a"), F.col(id_b).alias("id_b"))
         .na.drop()
@@ -694,110 +679,23 @@ def dedup_clusters(
         .persist()
     )
     pairs_m.count()  # one job: fills the cache AND the observation
-    from_auto = algorithm == "auto"
-    if algorithm == "auto":
-        n_pairs = obs.get["n"] or 0
-        # the ~16 bytes/pair budget assumes fixed-width ids; string ids
-        # (URLs, hex hashes) cost ~an order more in pandas object columns
-        # and the union-find dict — shrink the cutover accordingly
-        from pyspark.sql import types as T
-
-        budget = driver_max_pairs
-        if isinstance(pairs_m.schema["id_a"].dataType, T.StringType):
-            budget //= 8
-        if n_pairs <= budget:
-            out = _clusters_driver(pairs_m, stats=stats)
-            pairs_m.unpersist()  # toPandas consumed it eagerly
-            return out
-        algorithm = "label"
-    if algorithm == "star":
-        out = _clusters_star(pairs_m, max_rounds=max_rounds, stats=stats)
-        pairs_m.unpersist()  # star's eager round checkpoints consumed it
-        return out
-    edges = pairs_m.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(pairs_m.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    rounds = 0
-    for rounds in range(1, max_rounds + 1):
-        prop = edges.join(labels, edges.src == labels.id).select(
-            F.col("dst").alias("id"), F.col("label")
-        )
-        # carry the old label through the min-agg and read the change count
-        # from an Observation riding the localCheckpoint materialization —
-        # ONE job per round total, no separate convergence scan
-        obs = Observation(f"dedup_clusters_r{rounds}")
-        new_labels = (
-            labels.select("id", "label", F.col("label").alias("_old"))
-            .unionByName(prop.withColumn("_old", F.lit(None).cast(prop.schema["label"].dataType)))
-            .groupBy("id")
-            .agg(
-                F.min("label").alias("label"),
-                F.min("_old").alias("_old"),  # exactly one non-null per id
-            )
-            .observe(
-                obs,
-                F.sum((F.col("label") < F.col("_old")).cast("long")).alias("n_changed"),
-            )
-            .localCheckpoint(eager=True)  # materialize + truncate lineage
-        )
-        n_changed = obs.get["n_changed"] or 0
-        labels = new_labels.select("id", "label")
-        if n_changed == 0:
-            converged = True
-            break
-        if from_auto and rounds >= label_switch_rounds:
-            # auto hedge: still churning after label_switch_rounds means a
-            # high-diameter component — restart on star (log-round bound);
-            # pairs_m is already materialized so nothing upstream re-runs
-            out = _clusters_star(pairs_m, max_rounds=max_rounds, stats=stats)
-            pairs_m.unpersist()
-            if stats is not None:
-                stats["algorithm"] = "label->star"
-                stats["label_rounds_before_switch"] = rounds
-            return out
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"dedup_clusters: no fixpoint after {max_rounds} rounds — the "
-            "pair graph has a component with diameter > max_rounds; labels "
-            "are an upper bound (some nodes may not carry their component's "
-            "true minimum). Raise max_rounds or switch to large-star/"
-            "small-star for chain-shaped graphs.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-        stats["algorithm"] = "label"
-    pairs_m.unpersist()  # the returned frame reads only the final round's
-    # checkpoint, never pairs_m
-    return labels.select("id", F.col("label").alias("rep"))
+    return pairs_m, obs.get["n"] or 0
 
 
 def _clusters_driver(pairs_m: DataFrame, stats: dict | None) -> DataFrame:
     """Driver-side union-find over a MATERIALIZED small pair frame — the
     graph analogue of a broadcast join: when the near-dup subgraph fits in
-    driver memory (bounded by dedup_clusters(driver_max_pairs), ~16 bytes/
-    pair for long ids), one collect + a linear union-find with path
-    compression beats any number of distributed rounds. Exact same
-    (id, rep=component min) labels as the distributed paths.
+    driver memory (bounded by _DRIVER_MAX_PAIRS, ~16 bytes/pair for long
+    ids), one collect + a linear union-find with path compression beats
+    any number of distributed rounds. Exact same
+    (id, rep=component min) labels as _clusters_star.
 
-    Null ids are dropped Spark-side before the collect: a null never
-    equi-joins in the distributed paths, and pandas would otherwise turn
-    the long column into float64 whose NaN keys break dict identity
-    (NaN != NaN would spin find() forever)."""
+    pairs_m carries no null id (_materialize_pairs drops them): pandas
+    would otherwise turn the long column into float64 whose NaN keys break
+    dict identity (NaN != NaN would spin find() forever)."""
     import pandas as pd
 
-    pdf = pairs_m.na.drop().toPandas()
+    pdf = pairs_m.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -824,8 +722,6 @@ def _clusters_driver(pairs_m: DataFrame, stats: dict | None) -> DataFrame:
         stats["algorithm"] = "driver"
     spark = pairs_m.sparkSession
     schema = pairs_m.schema["id_a"].dataType
-    from pyspark.sql import types as T
-
     out_schema = T.StructType(
         [T.StructField("id", schema), T.StructField("rep", schema)]
     )
@@ -853,8 +749,8 @@ def _clusters_star(
     detected by an (edge-count, hash-sum) signature match — one cheap agg
     over the already-materialized frame per round.
 
-    Output contract matches the label-propagation path exactly: (id, rep)
-    for every id appearing in any pair, rep = smallest id in the component.
+    Output contract matches the driver path exactly: (id, rep) for every id
+    appearing in any pair, rep = smallest id in the component.
     """
     nodes = (
         pairs_m.select(F.col("id_a").alias("id"))
@@ -968,7 +864,6 @@ def near_dedup(
     text_col: str = "text",
     max_rounds: int = 30,
     stats: dict | None = None,
-    cluster_algorithm: str = "auto",
     **method_kw,
 ) -> DataFrame:
     """The keep/drop operator: docs minus non-representative near-dups.
@@ -978,6 +873,8 @@ def near_dedup(
     jaccard), resolved to connected components (dedup_clusters); every doc
     whose id is not its cluster's representative (min id) is dropped via one
     left_anti join. 'exact' short-circuits to exact_dedup (no pair stage).
+    `stats` receives dedup_clusters' {'rounds', 'converged', 'algorithm'},
+    the algorithm being 'driver' or 'star' as the pair count decides.
 
     Scale shape: pairs/cluster stages touch only the near-dup SUBGRAPH
     (vastly smaller than the corpus); the final left_anti is the only join
@@ -1005,9 +902,7 @@ def near_dedup(
         pairs = embedding_near_dups(emb, **method_kw)
     else:
         raise ValueError(f"unknown near-dedup method {method!r}")
-    labels = dedup_clusters(
-        pairs, max_rounds=max_rounds, stats=stats, algorithm=cluster_algorithm
-    )
+    labels = dedup_clusters(pairs, max_rounds=max_rounds, stats=stats)
     drop = labels.where(F.col("id") != F.col("rep")).select(
         F.col("id").alias(id_col)
     )

@@ -1,13 +1,13 @@
 """PDF standard-security-handler decryption — ISO 32000-1 §7.6 / 32000-2 §7.6.
 
 Closes the last PDF acquisition envelope (reference parity: the reference's
-document loader `ocr_workflow_orchestrator.py:153-178` accepts any readable
-document; encrypted-but-open PDFs — the overwhelmingly common "owner
-password only, empty user password" case — are readable documents). A large
-crawl meets these constantly: the content is world-readable, only the
-permission bits are owner-protected, and every real extractor (pdfium,
-poppler, pdfminer) decrypts them transparently. This module does the same
-from the published spec, pure stdlib + the file-local AES below:
+acquisition accepts any readable input; encrypted-but-open PDFs — the
+overwhelmingly common "owner password only, empty user password" case —
+are readable documents). A large crawl meets these constantly: the
+content is world-readable, only the permission bits are owner-protected,
+and every real extractor (pdfium, poppler, pdfminer) decrypts them
+transparently. This module does the same from the published spec, pure
+stdlib + the file-local AES below:
 
 - RC4 (the V1/V2 legacy cipher and the V4 /V2 crypt filter),
 - AES-128/256 CBC (the V4 /AESV2 and V5 /AESV3 crypt filters), written
@@ -473,14 +473,27 @@ def _crypt(method: str, filekey: bytes, v: int, num: int, gen: int,
 # ---------------------------------------------------------------------------
 
 
+def _skip_string(text: str, j: int) -> int:
+    """Index past the literal string '(...)', hex string '<...>' or
+    '%' comment that starts at j (text[j] is '(', '%', or a '<' not
+    followed by '<'). Raises ValueError on an unterminated string."""
+    from ocr_spark.operators.pdf_layout import _parse_hex_string, _parse_pdf_string
+
+    c = text[j]
+    if c == "(":
+        return _parse_pdf_string(text, j)[1]
+    if c == "<":
+        return _parse_hex_string(text, j)[1]
+    k = text.find("\n", j)  # a comment runs to end of line
+    return len(text) if k < 0 else k + 1
+
+
 def _scan_dict(text: str, i: int) -> tuple[str, int]:
     """The balanced '<< ... >>' substring starting at index i, STRING-
     AWARE: literal and hex strings are skipped atomically, so binary
     /O //U ciphertext containing '>>' or '<<' bytes (the form Acrobat
     writes as escaped literal strings) can never corrupt the balance.
     Returns (substring, index past the closing '>>')."""
-    from ocr_spark.operators.pdf_layout import _parse_hex_string, _parse_pdf_string
-
     assert text[i : i + 2] == "<<"
     depth, j, n = 0, i, len(text)
     while j < n:
@@ -493,13 +506,8 @@ def _scan_dict(text: str, i: int) -> tuple[str, int]:
             j += 2
             if depth == 0:
                 return text[i:j], j
-        elif c == "(":
-            _s, j = _parse_pdf_string(text, j)
-        elif c == "<":
-            _b, j = _parse_hex_string(text, j)
-        elif c == "%":  # comment runs to end of line
-            k = text.find("\n", j)
-            j = n if k < 0 else k + 1
+        elif c in "(<%":
+            j = _skip_string(text, j)
         else:
             j += 1
     raise ValueError("encrypted PDF: unbalanced /Encrypt dictionary")
@@ -511,8 +519,6 @@ _TOK_RE = re.compile(r"[^\s/<>\[\]()%]+")
 
 def _skip_array(text: str, i: int) -> int:
     """Index past the balanced '[ ... ]' at i (string/dict aware)."""
-    from ocr_spark.operators.pdf_layout import _parse_hex_string, _parse_pdf_string
-
     assert text[i] == "["
     depth, j, n = 0, i, len(text)
     while j < n:
@@ -525,12 +531,10 @@ def _skip_array(text: str, i: int) -> int:
             j += 1
             if depth == 0:
                 return j
-        elif c == "(":
-            _s, j = _parse_pdf_string(text, j)
         elif c == "<" and text[j + 1 : j + 2] == "<":
             _d, j = _scan_dict(text, j)
-        elif c == "<":
-            _b, j = _parse_hex_string(text, j)
+        elif c in "(<%":
+            j = _skip_string(text, j)
         else:
             j += 1
     raise ValueError("encrypted PDF: unbalanced array")
@@ -612,6 +616,31 @@ def _mask_stream_bodies(data: bytes) -> bytes:
     return bytes(out)
 
 
+# a '(' or '%', or a '<' that is not half of a dictionary's '<<'
+_STRING_START_RE = re.compile(r"[(%]|(?<!<)<(?!<)")
+
+
+def _mask_strings(text: str) -> str:
+    """A same-length copy with every literal/hex string and comment (as
+    _skip_string delimits them) blanked to spaces, so a structural regex
+    cannot match '/Encrypt 1 0 R' quoted inside, say, an /Info /Title.
+    Offsets are preserved: a match position indexes the unmasked text too.
+    An unterminated string start is left as is."""
+    out: list[str] = []
+    i = 0
+    while m := _STRING_START_RE.search(text, i):
+        k = m.start()
+        try:
+            j = _skip_string(text, k)
+            out += [text[i:k], " " * (j - k)]
+        except ValueError:  # unterminated: keep the byte, scan on
+            j = k + 1
+            out.append(text[i:j])
+        i = j
+    out.append(text[i:])
+    return "".join(out)
+
+
 _INT_OBJ_RE = re.compile(r"\s*([+-]?\d+)\s*endobj\b")
 
 
@@ -628,11 +657,17 @@ def _parse_encrypt_dict(data: bytes) -> tuple[dict, bytes, int | None] | None:
     """Locate + parse the /Encrypt dictionary and the first /ID string.
     Returns (fields, id0, encrypt_object_number|None), or None when the
     document has no real /Encrypt entry (e.g. the bytes only occur inside
-    a binary stream body — a false trigger, not an encrypted file)."""
+    a binary stream body or a string — a false trigger, not an encrypted
+    file)."""
     text = _mask_stream_bodies(data).decode("latin-1")
     enc_num = None
-    # last /Encrypt wins (incremental updates append newer trailers)
-    matches = list(re.finditer(r"/Encrypt\s*(?:(\d+)\s+(\d+)\s+R|(?=<<))", text))
+    # last /Encrypt wins (incremental updates append newer trailers); it is
+    # located with strings and comments masked, then parsed from `text`
+    matches = list(
+        re.finditer(
+            r"/Encrypt\s*(?:(\d+)\s+(\d+)\s+R|(?=<<))", _mask_strings(text)
+        )
+    )
     if not matches:
         return None
     m = matches[-1]

@@ -18,7 +18,8 @@ semantic one — from each duplicate clique keep the example FARTHEST from
 its cluster centroid (low-similarity examples carry the most information;
 the near-centroid members are the redundant ones). Both paths share
 dedup_clusters for clique resolution, so cluster-resolution scale behavior
-(driver union-find / label / star auto-selection) is identical.
+(driver union-find below a pair budget, large/small-star above it) is
+identical.
 
 Scale shape at 10^12 docs:
   * `kmeans_train` — per iteration ONE map-side-combined shuffle of
@@ -92,9 +93,10 @@ def _assign_arrow(src: DataFrame, centroids: "np.ndarray") -> DataFrame:
     (JVM dot/|v||c| vs numpy normalized-row matmul), so a 1-ulp pre-round
     difference can in principle flip an argmax between two centroids tied
     at 6dp. Agreement is asserted on the test fixtures, but bit-stability
-    across a mode switch is NOT a contract — pin assign= explicitly when a
-    workflow must reproduce labels exactly. Rows must be pre-filtered to
-    non-null ids and non-empty, null-free vectors (_staged_vec does)."""
+    across the two paths is NOT a contract; the path is a function of the
+    codebook's size alone (_resolve_assign), so one codebook always assigns
+    through the same path. Rows must be pre-filtered to non-null ids and
+    non-empty, null-free vectors (_staged_vec does)."""
     import pyarrow as pa
 
     from ocr_spark.operators.similarity import _coarse_cos, _list_to_mat
@@ -129,11 +131,10 @@ def _assign_arrow(src: DataFrame, centroids: "np.ndarray") -> DataFrame:
     )
 
 
-def _resolve_assign(assign: str, centroids: "np.ndarray") -> str:
-    if assign not in ("auto", "expr", "arrow"):
-        raise ValueError(f"assign={assign!r}: expected 'auto', 'expr' or 'arrow'")
-    if assign != "auto":
-        return assign
+def _resolve_assign(centroids: "np.ndarray") -> str:
+    """'arrow' above _ARROW_ASSIGN_CELLS centroid*dim cells, else 'expr'
+    (the zero-Python codegen path, whose expression tree grows by k x dim
+    nodes and hits JVM method-size limits on large codebooks)."""
     return "arrow" if centroids.size > _ARROW_ASSIGN_CELLS else "expr"
 
 
@@ -149,8 +150,8 @@ def _pairs_grouped(staged: DataFrame, eps: float) -> DataFrame:
     CONVENTION as the join path (parity asserted on fixtures; as with the
     assign paths, the float association differs pre-round, so a pair
     sitting exactly on the eps boundary at 1-ulp precision is not
-    guaranteed to match across modes — pin pair_mode= when exact
-    reproducibility across runs matters). Memory is
+    guaranteed to match across paths — the path follows the assign path,
+    so one codebook always pairs through the same one). Memory is
     bounded by BLOCK x n_i doubles per task — pair max_cluster with it so
     n_i stays sane; ids sort within the group so id_a < id_b by position."""
     import pandas as pd
@@ -195,7 +196,6 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     stats: dict | None = None,
-    assign: str = "auto",
 ) -> "np.ndarray":
     """Spherical k-means (cosine assignment, mean update) over the
     embeddings frame; returns a (k, dim) float64 codebook rounded to 6dp —
@@ -239,7 +239,7 @@ def kmeans_train(
         converged = False
         it = 0
         for it in range(1, iters + 1):
-            if _resolve_assign(assign, centroids) == "arrow":
+            if _resolve_assign(centroids) == "arrow":
                 assigned = _assign_arrow(staged, centroids).select(
                     F.col("ivf_list").alias("_l"), F.col("_v")
                 )
@@ -292,9 +292,6 @@ def semantic_prune(
     max_cluster: int | None = None,
     sub_salt: str = "sp0",
     stats: dict | None = None,
-    cluster_algorithm: str = "auto",
-    assign: str = "auto",
-    pair_mode: str = "auto",
 ) -> DataFrame:
     """SemDeDup over a fixed codebook: assign every vector to its nearest
     centroid, generate candidate pairs ONLY within a cluster (cosine >= eps,
@@ -333,9 +330,6 @@ def semantic_prune(
         max_cluster=max_cluster,
         sub_salt=sub_salt,
         stats=stats,
-        cluster_algorithm=cluster_algorithm,
-        assign=assign,
-        pair_mode=pair_mode,
     )
     # attaching rep to EVERY row costs one corpus equi-join (the audit
     # contract); AQE broadcasts the clique side when the dup subgraph is
@@ -378,17 +372,21 @@ def _prune_parts(
     max_cluster: int | None,
     sub_salt: str,
     stats: dict | None,
-    cluster_algorithm: str,
-    assign: str = "auto",
-    pair_mode: str = "auto",
 ):
     """Shared machinery: (staged corpus view, clique labels, keeper-per-
-    clique frame — None for keep='min_id', whose keeper IS the rep)."""
+    clique frame — None for keep='min_id', whose keeper IS the rep).
+
+    The codebook's size picks the plan (_resolve_assign): Arrow assignment
+    with grouped BLAS pair scoring for large codebooks — a codebook big
+    enough to need Arrow assignment implies a corpus big enough that
+    interpreted per-pair dots are the bottleneck — else expression
+    assignment with the equi-join pairs."""
     if keep not in ("far_centroid", "min_id"):
         raise ValueError(f"keep={keep!r}: expected 'far_centroid' or 'min_id'")
     if not (0.0 < eps <= 1.0):
         raise ValueError("eps must be in (0, 1]")
-    if _resolve_assign(assign, centroids) == "arrow":
+    arrow = _resolve_assign(centroids) == "arrow"
+    if arrow:
         staged = _assign_arrow(
             _staged_vec(emb, id_col, vec_col), centroids
         ).select(
@@ -465,17 +463,7 @@ def _prune_parts(
         )
     else:
         staged = staged.withColumn("_key", F.col("ivf_list").cast("string"))
-    if pair_mode not in ("auto", "join", "group"):
-        raise ValueError(
-            f"pair_mode={pair_mode!r}: expected 'auto', 'join' or 'group'"
-        )
-    if pair_mode == "auto":
-        # a codebook big enough to need Arrow assignment implies a corpus
-        # big enough that interpreted per-pair dots are the bottleneck
-        pair_mode = (
-            "group" if _resolve_assign(assign, centroids) == "arrow" else "join"
-        )
-    if pair_mode == "group":
+    if arrow:
         pairs = _pairs_grouped(staged, eps)
     else:
         # within-cluster candidate pairs: ONE equi-join shuffle on the
@@ -507,7 +495,7 @@ def _prune_parts(
             )
             .select("id_a", "id_b")
         )
-    cliques = dedup_clusters(pairs, stats=stats, algorithm=cluster_algorithm)
+    cliques = dedup_clusters(pairs, stats=stats)
     if keep == "min_id":
         return staged, cliques, None
     # paper rule: one keeper per clique = lowest centroid_sim, tie -> min id.
@@ -570,9 +558,6 @@ def _prune_defaults(kw: dict) -> dict:
         "max_cluster": None,
         "sub_salt": "sp0",
         "stats": None,
-        "cluster_algorithm": "auto",
-        "assign": "auto",
-        "pair_mode": "auto",
     }
     unknown = set(kw) - set(out)
     if unknown:

@@ -21,9 +21,9 @@ row shape the rest of the corpus pipeline consumes:
 Everything rides on the stdlib `email` package (public, battle-tested
 RFC parsing) — same policy as zipfile/zlib elsewhere in this repo.
 
-Reference parity anchor: document acquisition accepts any readable
-document (`ocr_workflow_orchestrator.py:153-178`); mail archives are the
-acquisition surface for the mail-corpus slice of a training build.
+Reference parity anchor: the reference's acquisition accepts any readable
+input; mail archives are the acquisition surface for the mail-corpus slice
+of a training build.
 """
 
 from __future__ import annotations

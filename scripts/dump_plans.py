@@ -61,9 +61,7 @@ def _semantic_dedup_df(spark, sf):
 
     emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
     docs_ids = emb.select(F.col("vec_id").alias("doc_id"))
-    return semantic_dedup(
-        docs_ids, emb, _codebook(spark, sf), eps=0.9, pair_mode="group"
-    )
+    return semantic_dedup(docs_ids, emb, _codebook(spark, sf), eps=0.9)
 
 
 def _holdout_split_df(spark, sf):
@@ -195,8 +193,9 @@ def main() -> None:
             "semantic_dedup",
             _semantic_dedup_df(spark, sf),
             "SemDeDup keep/drop: pair generation shuffles ONLY on the"
-            " cluster key (grouped BLAS scoring stage), cliques resolve on"
-            " the dup subgraph, and the corpus is touched by exactly ONE"
+            " cluster key (an equi-join at this k=8 codebook; grouped BLAS"
+            " scoring above _ARROW_ASSIGN_CELLS), cliques resolve on the"
+            " dup subgraph, and the corpus is touched by exactly ONE"
             " LeftAnti equi-join — never re-joined for audit columns",
         ),
         (

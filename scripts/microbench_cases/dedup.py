@@ -19,9 +19,9 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus_clean import dup_span_removal, holdout_split
 from ocr_spark.operators.dedup import (
+    _clusters_star,
     contamination,
     contamination_bloom,
-    dedup_clusters,
     near_dedup,
     simhash_chunk_keys,
     simhash_near_pairs,
@@ -65,8 +65,9 @@ def _skip_pairs(spark, n_dup: int, group: int, skip: int):
 
 
 def bench_clusters(spark, n: int) -> dict:
-    """Cluster resolution: dedup_clusters (pairs → keep/drop labels) over
-    candidate-pair graphs of an n-doc corpus.
+    """Cluster resolution: the distributed resolver of dedup_clusters
+    (large-star/small-star, the path above the driver union-find's pair
+    budget) over candidate-pair graphs of an n-doc corpus.
 
     The pair graph is synthesized natively with the shape real near-dup
     output has: a minority of docs (20%) sit in small duplicate groups; the
@@ -75,23 +76,22 @@ def bench_clusters(spark, n: int) -> dict:
 
     Configs:
       * groups of 4, chain-wired  (diameter 3  — typical LSH cluster)
-      * groups of 16, chain+skip  (diameter ~8 — stress the fixpoint loop)
-      * groups of 64, chain-wired (adversarial diameter: label propagation
-        needs 63 rounds, capped here to keep the case bounded; star needs
-        ~log2)
+      * groups of 16, chain+skip  (diameter ~8)
+      * groups of 64, chain-wired (adversarial diameter 63; star's rounds
+        grow with log2 of the component size, not its diameter)
 
-    A converged run must find exactly one cluster per group. When the
-    group size does not divide the duplicate count, the trailing partial
-    group is one more cluster if it holds 2 or more ids; a lone trailing
-    id is in no pair, so it is no node."""
+    Every run must converge and find exactly one cluster per group. When
+    the group size does not divide the duplicate count, the trailing
+    partial group is one more cluster if it holds 2 or more ids; a lone
+    trailing id is in no pair, so it is no node."""
     n_dup = int(n * 0.2)
     configs = (
-        ("groups4_chain", 4, False, ("label",), 30),
-        ("groups16_chain_skip", 16, True, ("label",), 30),
-        ("groups64_chain", 64, False, ("star", "label"), 16),
+        ("groups4_chain", 4, False),
+        ("groups16_chain_skip", 16, True),
+        ("groups64_chain", 64, False),
     )
     fig: dict = {}
-    for name, group, with_skip, algorithms, max_rounds in configs:
+    for name, group, with_skip in configs:
         pairs = _chain_pairs(spark, n_dup, group)
         if with_skip:
             pairs = pairs.unionByName(_skip_pairs(spark, n_dup, group, 2))
@@ -100,30 +100,26 @@ def bench_clusters(spark, n: int) -> dict:
         tail = n_dup % group
         expected_clusters = n_dup // group + (tail >= 2)
         expected_nodes = n_dup - (tail == 1)
-        for algorithm in algorithms:
-            stats: dict = {}
-            rec: dict = {"n_pairs": n_pairs}
-            with phase(rec, "resolve"), warnings.catch_warnings():
-                warnings.simplefilter("ignore", RuntimeWarning)
-                labels = dedup_clusters(
-                    pairs, stats=stats, algorithm=algorithm, max_rounds=max_rounds
-                )
-                agg = labels.agg(
-                    F.count("*").alias("n_nodes"),
-                    F.countDistinct("rep").alias("n_clusters"),
-                    F.sum((F.col("id") != F.col("rep")).cast("long")).alias("n_dropped"),
-                ).collect()[0]
-            rec.update(
-                n_nodes=int(agg["n_nodes"]),
-                n_clusters=int(agg["n_clusters"]),
-                n_dropped=int(agg["n_dropped"]),
-                rounds=stats.get("rounds"),
-                converged=stats.get("converged"),
-            )
-            if rec["converged"]:
-                assert rec["n_clusters"] == expected_clusters, (rec, expected_clusters)
-                assert rec["n_dropped"] == expected_nodes - expected_clusters
-            fig[f"{name}_{algorithm}"] = rec
+        stats: dict = {}
+        rec: dict = {"n_pairs": n_pairs}
+        with phase(rec, "resolve"):
+            labels = _clusters_star(pairs, max_rounds=30, stats=stats)
+            agg = labels.agg(
+                F.count("*").alias("n_nodes"),
+                F.countDistinct("rep").alias("n_clusters"),
+                F.sum((F.col("id") != F.col("rep")).cast("long")).alias("n_dropped"),
+            ).collect()[0]
+        rec.update(
+            n_nodes=int(agg["n_nodes"]),
+            n_clusters=int(agg["n_clusters"]),
+            n_dropped=int(agg["n_dropped"]),
+            rounds=stats["rounds"],
+            converged=stats["converged"],
+        )
+        assert rec["converged"], rec
+        assert rec["n_clusters"] == expected_clusters, (rec, expected_clusters)
+        assert rec["n_dropped"] == expected_nodes - expected_clusters
+        fig[f"{name}_star"] = rec
         pairs.unpersist()
     return fig
 

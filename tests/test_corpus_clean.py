@@ -1,5 +1,5 @@
 """Corpus-cleaning operators (corpus_clean.py) against pure-Python
-reference implementations, plus strategy-equivalence and edge cases."""
+reference implementations, plus inline/join path equivalence and edge cases."""
 
 from __future__ import annotations
 
@@ -93,12 +93,22 @@ def test_frequent_line_keys(spark, docs_df):
     assert keys == {_h60("all rights reserved"), _h60("cookie notice")}
 
 
+def _force_join(monkeypatch):
+    """A frequent-key cut of -1 sends every line_dedup call down the join
+    path; the fixtures' frequent sets fit the inline cut by default."""
+    from ocr_spark.operators import corpus_clean
+
+    monkeypatch.setattr(corpus_clean, "_INLINE_MAX_LINES", -1)
+
+
 @pytest.mark.parametrize("strategy", ["inline", "join"])
-def test_line_dedup_matches_reference(spark, docs_df, strategy):
+def test_line_dedup_matches_reference(spark, docs_df, strategy, monkeypatch):
+    if strategy == "join":
+        _force_join(monkeypatch)
     ref = ref_line_dedup(DOCS, min_docs=2)
     got = {
         r["doc_id"]: (r["text"], r["n_lines"], r["n_dropped"])
-        for r in line_dedup(docs_df, min_docs=2, strategy=strategy).collect()
+        for r in line_dedup(docs_df, min_docs=2).collect()
     }
     assert got == ref
     # every input doc present, even all-dropped/blank ones
@@ -115,15 +125,16 @@ def test_line_dedup_blank_lines_never_dropped(spark, docs_df):
     assert out["d"] == "\n  \n"
 
 
-def test_line_dedup_inline_cap_raises(spark, docs_df):
-    with pytest.raises(ValueError, match="inline_max_lines"):
-        line_dedup(docs_df, min_docs=1, strategy="inline", inline_max_lines=1)
+def test_line_dedup_auto_falls_back_to_join(spark, docs_df, monkeypatch):
+    # a frequent set over the inline cut must silently use the join path
+    # (the only plan with a join), same answer as the inline path
+    from ocr_spark.operators import corpus_clean
 
-
-def test_line_dedup_auto_falls_back_to_join(spark, docs_df):
-    # auto with a tiny cap must silently use the join path, same answer
-    a = line_dedup(docs_df, min_docs=2, strategy="auto", inline_max_lines=1)
-    b = line_dedup(docs_df, min_docs=2, strategy="join")
+    b = line_dedup(docs_df, min_docs=2)
+    monkeypatch.setattr(corpus_clean, "_INLINE_MAX_LINES", 1)
+    a = line_dedup(docs_df, min_docs=2)
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan(a) and "Join" not in plan(b)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -661,13 +672,15 @@ class TestParagraphDedup:
         assert got[2] == ("Only unique content here.\n\nSecond para.", 2, 0)
 
     @pytest.mark.parametrize("strategy", ["inline", "join"])
-    def test_twin_parity_with_sep(self, spark, tmp_path, strategy):
+    def test_twin_parity_with_sep(self, spark, tmp_path, strategy, monkeypatch):
         import duckdb
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from ocr_spark.operators.corpus_clean import line_dedup, line_dedup_sql
 
+        if strategy == "join":
+            _force_join(monkeypatch)
         boiler = "cookie banner text"
         docs = [
             (0, f"{boiler}\n\nalpha."),
@@ -686,10 +699,7 @@ class TestParagraphDedup:
         got = sorted(
             map(
                 tuple,
-                line_dedup(
-                    spark.read.parquet(p), min_docs=2, sep="\n\n",
-                    strategy=strategy,
-                ).collect(),
+                line_dedup(spark.read.parquet(p), min_docs=2, sep="\n\n").collect(),
             )
         )
         con = duckdb.connect()

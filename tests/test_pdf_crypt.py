@@ -7,9 +7,9 @@ asserted equal, and the handler algorithms are additionally cross-checked
 against `cryptography` where it is importable — so `encrypt_pdf` and
 `decrypt_pdf` cannot drift from the spec together.
 
-Reference parity anchor: the reference loads any readable document
-(`ocr_workflow_orchestrator.py:153-178`); encrypted-with-empty-user-password
-PDFs are readable documents everywhere else in the ecosystem.
+Reference parity anchor: the reference's acquisition accepts any readable
+input; encrypted-with-empty-user-password PDFs are readable documents
+everywhere else in the ecosystem.
 """
 
 from __future__ import annotations
@@ -600,3 +600,18 @@ class TestReviewHardening:
         dangling = enc.replace(b"/Length 128 ", b"/Length 98 0 R ")
         with pytest.raises(ValueError, match="indirect /Length 98 0 R"):
             decrypt_pdf(dangling)
+
+    def test_encrypt_quoted_in_info_string_is_no_trigger(self):
+        # an unencrypted PDF about PDF internals: '/Encrypt 1 0 R' inside the
+        # /Info /Title literal string used to read as a real /Encrypt entry
+        # (catalog 1 0 obj has no /Filter) and the document became an error row
+        plain = pdf_write([{"x": 50, "y": 60, "text": "Hello world"}])
+        doc = plain.replace(
+            b"xref\n",
+            b"6 0 obj\n<< /Title (The trailer /Encrypt 1 0 R entry \\(and /Encrypt <<\\)) "
+            b"/Subject <2F456E6372797074> >>\nendobj\nxref\n",
+            1,
+        ).replace(b"/Root 1 0 R", b"/Root 1 0 R /Info 6 0 R", 1)
+        assert doc.count(b"/Encrypt") == 2 and b"/Info 6 0 R" in doc
+        assert decrypt_pdf(doc) is doc
+        assert extract_pdf_text(doc.decode("latin-1")) == "Hello world"

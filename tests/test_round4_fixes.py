@@ -1,5 +1,5 @@
 """Regression tests for the round-4 VERDICT/ADVICE fixes:
-- dedup_clusters null-id pairs filtered once so all algorithms agree
+- dedup_clusters null-id pairs filtered once so both paths agree
 - corpus_pipeline decontamination drop set broadcast-hinted (no corpus
   shuffle for the anti-join)
 - corpus_pipeline_sql(quality=) oracle twin for the v2 filter path
@@ -19,65 +19,21 @@ class TestClustersNullIds:
             "id_a long, id_b long",
         )
 
-    def test_all_algorithms_drop_null_pairs_identically(self, spark):
-        from ocr_spark.operators.dedup import dedup_clusters
+    def test_all_algorithms_drop_null_pairs_identically(self, spark, monkeypatch):
+        from ocr_spark.operators import dedup
 
         expected = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
         results = {}
-        for algo in ("label", "star"):
-            rows = dedup_clusters(self._pairs(spark), algorithm=algo).collect()
-            results[algo] = {(r["id"], r["rep"]) for r in rows}
-        # auto at this size resolves to the driver union-find
-        rows = dedup_clusters(self._pairs(spark), algorithm="auto").collect()
-        results["auto/driver"] = {(r["id"], r["rep"]) for r in rows}
+        # the default budget resolves this size on the driver; a budget of
+        # 0 pairs sends it down the distributed star path
+        for budget in (dedup._DRIVER_MAX_PAIRS, 0):
+            monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", budget)
+            stats: dict = {}
+            rows = dedup.dedup_clusters(self._pairs(spark), stats=stats).collect()
+            results[stats["algorithm"]] = {(r["id"], r["rep"]) for r in rows}
+        assert set(results) == {"driver", "star"}
         for algo, got in results.items():
             assert got == expected, algo
-
-
-class TestAutoSwitchesToStar:
-    def test_adversarial_chain_through_auto_switches(self, spark):
-        """auto's large-graph path picked label propagation, whose round
-        count is the (invisible) component diameter — a template-drift
-        chain A~B~C~… made it unbounded (VERDICT r3 'What's wrong' #3).
-        auto now abandons label after label_switch_rounds and restarts on
-        star, so the adversarial chain finishes in switch + O(log n)
-        rounds instead of O(diameter)."""
-        from ocr_spark.operators.dedup import dedup_clusters
-
-        n = 64  # path graph: diameter 63 >> any acceptable round count
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
-        )
-        stats: dict = {}
-        rows = dedup_clusters(
-            pairs,
-            stats=stats,
-            algorithm="auto",
-            driver_max_pairs=0,  # force the distributed path
-            label_switch_rounds=4,
-            max_rounds=30,
-        ).collect()
-        assert {(r["id"], r["rep"]) for r in rows} == {(i, 1) for i in range(1, n + 1)}
-        assert stats["algorithm"] == "label->star"
-        assert stats["label_rounds_before_switch"] == 4
-        assert stats["converged"]
-        # star needs ~log2(64)+a few rounds; nothing near the diameter
-        assert stats["rounds"] <= 12
-
-    def test_explicit_label_never_switches(self, spark):
-        """algorithm='label' is a caller contract: it must NOT silently
-        become star — it warns at max_rounds as before."""
-        from ocr_spark.operators.dedup import dedup_clusters
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 20)], "id_a long, id_b long"
-        )
-        stats: dict = {}
-        with pytest.warns(RuntimeWarning, match="no fixpoint"):
-            dedup_clusters(
-                pairs, stats=stats, algorithm="label", max_rounds=3
-            ).collect()
-        assert stats["algorithm"] == "label" and not stats["converged"]
 
 
 class TestCorpusDeconBroadcast:

@@ -155,6 +155,23 @@ class TestRuleFilterBoardRow:
         assert ("",) in {(r[2],) for r in got}
 
 
+def _window_nodes(plan) -> list:
+    """Every Window / WindowGroupLimit node of a physical plan, also inside
+    adaptive plans (their current plan) and cached relations (reached via
+    innerChildren)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind in ("WindowExec", "WindowGroupLimitExec"):
+            out.append(node)
+        elif kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        for seq in (node.children(), node.innerChildren()):
+            stack += [seq.apply(i) for i in range(seq.size())]
+    return out
+
+
 class TestQueryBoardCap:
     def test_at_most_50_queries_each_with_an_oracle_twin(self):
         """The driver records only the FIRST 50 registered queries() in
@@ -187,23 +204,36 @@ class TestQueryBoardCap:
     def test_every_query_row_is_flat(self, spark):
         """Rows are canonicalized with pandas, which cannot hash nested
         values (rule_filter's reasons array failed it). No queries() row may
-        return an Array, Map or Struct column."""
+        return an Array, Map or Struct column.
+
+        The same frames are also linted for single-partition windows: a
+        Window node with an empty partition spec pulls its whole input into
+        one task (Spark logs `WindowExec: No Partition Defined`)."""
         from pyspark.sql import types as T
 
         import __spark_entry__ as E
         from tests.test_round4_fixes import SF_DIR
 
         nested = (T.ArrayType, T.MapType, T.StructType)
-        found = {}
+        found, unpartitioned, windowed = {}, {}, set()
         for name, q in E.queries().items():
+            df = q(spark, SF_DIR)
             cols = [
                 f.name
-                for f in q(spark, SF_DIR).schema.fields
+                for f in df.schema.fields
                 if isinstance(f.dataType, nested)
             ]
             if cols:
                 found[name] = cols
+            windows = _window_nodes(df._jdf.queryExecution().executedPlan())
+            if windows:
+                windowed.add(name)
+            bad = [w.toString() for w in windows if w.partitionSpec().isEmpty()]
+            if bad:
+                unpartitioned[name] = bad
         assert found == {}
+        assert unpartitioned == {}
+        assert windowed  # the walk reaches windows (lang_id and others have them)
 
 
 class TestPhash64PurePython:

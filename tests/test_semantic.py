@@ -267,21 +267,34 @@ class TestSemanticDedup:
         assert "LeftAnti" in plan
 
 
+@pytest.fixture
+def force_arrow(monkeypatch):
+    """Call to send every later codebook down the Arrow assignment +
+    grouped BLAS pair path (a codebook cut of 0 cells); the fixture
+    codebooks are small enough to take the expression + equi-join path by
+    default."""
+    from ocr_spark.operators import semantic
+
+    return lambda: monkeypatch.setattr(semantic, "_ARROW_ASSIGN_CELLS", 0)
+
+
 class TestArrowAssignPath:
-    def test_kmeans_arrow_equals_expr(self, spark, data):
+    def test_kmeans_arrow_equals_expr(self, spark, data, force_arrow):
         X, ids, emb = data
-        a = kmeans_train(emb, k=4, iters=4, assign="expr")
-        b = kmeans_train(emb, k=4, iters=4, assign="arrow")
+        a = kmeans_train(emb, k=4, iters=4)
+        force_arrow()
+        b = kmeans_train(emb, k=4, iters=4)
         assert np.array_equal(a, b)
 
-    def test_prune_arrow_equals_expr(self, spark, data):
+    def test_prune_arrow_equals_expr(self, spark, data, force_arrow):
         X, ids, emb = data
         C = _ref_kmeans(X, ids, k=5, iters=6)
         key = lambda rows: sorted(
             (r["id"], r["ivf_list"], r["rep"], r["is_kept"]) for r in rows
         )
-        a = key(semantic_prune(emb, C, eps=0.97, assign="expr").collect())
-        b = key(semantic_prune(emb, C, eps=0.97, assign="arrow").collect())
+        a = key(semantic_prune(emb, C, eps=0.97).collect())
+        force_arrow()
+        b = key(semantic_prune(emb, C, eps=0.97).collect())
         assert a == b
 
     def test_auto_resolution_thresholds(self):
@@ -289,52 +302,38 @@ class TestArrowAssignPath:
 
         small = np.zeros((16, 64))  # 1024 cells -> expr
         big = np.zeros((512, 64))  # 32768 cells -> arrow
-        assert _resolve_assign("auto", small) == "expr"
-        assert _resolve_assign("auto", big) == "arrow"
-        assert _resolve_assign("expr", big) == "expr"
-        with pytest.raises(ValueError, match="assign="):
-            _resolve_assign("fast", small)
+        assert _resolve_assign(small) == "expr"
+        assert _resolve_assign(big) == "arrow"
+        # the fixture codebooks (k <= 5) take the expression path by default
+        assert _resolve_assign(np.zeros((5, DIM))) == "expr"
 
 
 class TestGroupedPairPath:
+    """The grouped BLAS pair stage rides with Arrow assignment; the
+    equi-join pairs with expression assignment."""
+
     @pytest.mark.parametrize("keep", ["far_centroid", "min_id"])
-    def test_group_equals_join(self, spark, data, keep):
+    def test_group_equals_join(self, spark, data, keep, force_arrow):
         X, ids, emb = data
         C = _ref_kmeans(X, ids, k=5, iters=6)
         key = lambda rows: sorted(
             (r["id"], r["rep"], r["is_kept"]) for r in rows
         )
-        a = key(
-            semantic_prune(emb, C, eps=0.97, keep=keep, pair_mode="join").collect()
-        )
-        b = key(
-            semantic_prune(emb, C, eps=0.97, keep=keep, pair_mode="group").collect()
-        )
+        a = key(semantic_prune(emb, C, eps=0.97, keep=keep).collect())
+        force_arrow()
+        b = key(semantic_prune(emb, C, eps=0.97, keep=keep).collect())
         assert a == b
 
-    def test_group_with_string_ids_and_subsplit(self, spark, data):
+    def test_group_with_string_ids_and_subsplit(self, spark, data, force_arrow):
         X, ids, _ = data
         rows = [(f"s{i:03d}", [float(x) for x in v]) for i, v in zip(ids, X)]
         emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
         C = _ref_kmeans(X, ids, k=2, iters=4)
-        a = sorted(
-            (r["id"], r["rep"], r["is_kept"])
-            for r in semantic_prune(
-                emb, C, eps=0.97, max_cluster=20, pair_mode="join"
-            ).collect()
-        )
-        b = sorted(
-            (r["id"], r["rep"], r["is_kept"])
-            for r in semantic_prune(
-                emb, C, eps=0.97, max_cluster=20, pair_mode="group"
-            ).collect()
-        )
+        key = lambda rows: sorted((r["id"], r["rep"], r["is_kept"]) for r in rows)
+        a = key(semantic_prune(emb, C, eps=0.97, max_cluster=20).collect())
+        force_arrow()
+        b = key(semantic_prune(emb, C, eps=0.97, max_cluster=20).collect())
         assert a == b
-
-    def test_pair_mode_validation(self, spark, data):
-        _, _, emb = data
-        with pytest.raises(ValueError, match="pair_mode="):
-            semantic_prune(emb, np.eye(DIM)[:2], pair_mode="blas")
 
 
 class TestRound5ReviewFixes:
@@ -417,7 +416,7 @@ class TestRound5ReviewFixes:
         }
         pruned = {
             r["id"]: r["ivf_list"]
-            for r in semantic_prune(emb, C, eps=0.99, assign="expr").collect()
+            for r in semantic_prune(emb, C, eps=0.99).collect()
         }
         for i, li in pruned.items():
             assert via_ivf[i] == li

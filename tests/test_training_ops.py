@@ -68,23 +68,29 @@ def test_simhash_near_pairs_matches_bruteforce(spark, docs):
     assert (1, 4) in got and got[(1, 4)] == 0
 
 
-def test_dedup_clusters_small_graph(spark):
+@pytest.fixture
+def force_star(monkeypatch):
+    """Send every dedup_clusters call with pairs down the distributed
+    (large/small-star) path: a driver budget of 0 pairs."""
+    from ocr_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+
+
+def test_dedup_clusters_small_graph(spark, force_star):
     from ocr_spark.operators.dedup import dedup_clusters
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 3)], "id_a long, id_b long"
     )
     stats = {}
-    got = {
-        r.id: r.rep
-        for r in dedup_clusters(pairs, stats=stats, algorithm="label").collect()
-    }
+    got = {r.id: r.rep for r in dedup_clusters(pairs, stats=stats).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
     assert stats["converged"] and stats["rounds"] >= 1
 
 
-def test_dedup_clusters_long_chain_converges(spark):
-    """A 12-node chain needs multiple propagation rounds — exercises the
+def test_dedup_clusters_long_chain_converges(spark, force_star):
+    """A 12-node chain needs several distributed rounds — exercises the
     fixpoint loop, the localCheckpoint lineage truncation, and convergence
     detection beyond round 1."""
     from ocr_spark.operators.dedup import dedup_clusters
@@ -92,21 +98,18 @@ def test_dedup_clusters_long_chain_converges(spark):
     chain = [(i, i + 1) for i in range(1, 12)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
     stats = {}
-    got = {
-        r.id: r.rep
-        for r in dedup_clusters(pairs, stats=stats, algorithm="label").collect()
-    }
+    got = {r.id: r.rep for r in dedup_clusters(pairs, stats=stats).collect()}
     assert got == {i: 1 for i in range(1, 13)}
-    assert stats["converged"] and stats["rounds"] >= 3
+    assert stats["converged"] and stats["rounds"] >= 2
 
 
-def test_dedup_clusters_nonconvergence_warns(spark):
+def test_dedup_clusters_nonconvergence_warns(spark, force_star):
     from ocr_spark.operators.dedup import dedup_clusters
 
     chain = [(i, i + 1) for i in range(1, 12)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.warns(RuntimeWarning, match="no fixpoint"):
-        labels = dedup_clusters(pairs, max_rounds=1, algorithm="label")
+    with pytest.warns(RuntimeWarning, match="still changing"):
+        labels = dedup_clusters(pairs, max_rounds=1)
         labels.collect()
 
 
@@ -128,27 +131,29 @@ def _uf_reference(pairs: list[tuple[int, int]]) -> dict[int, int]:
 
 
 class TestClustersStar:
-    """algorithm='star' (large-star/small-star) must be label-identical to
-    the propagation path, with rounds ~ log(n) instead of diameter."""
+    """The distributed path (large-star/small-star, reached above the
+    driver pair budget) must be label-identical to the driver union-find,
+    with rounds ~ log(n) instead of the component diameter."""
 
-    def test_star_small_graph(self, spark):
+    def test_star_small_graph(self, spark, force_star):
         from ocr_spark.operators.dedup import dedup_clusters
 
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (5, 6), (9, 3)], "id_a long, id_b long"
         )
         stats = {}
-        got = {
-            r.id: r.rep
-            for r in dedup_clusters(pairs, stats=stats, algorithm="star").collect()
-        }
+        got = {r.id: r.rep for r in dedup_clusters(pairs, stats=stats).collect()}
         assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
         assert stats["converged"] and stats["algorithm"] == "star"
 
-    def test_star_matches_label_and_unionfind_on_random_graphs(self, spark):
+    def test_star_matches_label_and_unionfind_on_random_graphs(
+        self, spark, monkeypatch
+    ):
+        """Star labels equal the default call's labels (the driver path at
+        this size) and the union-find oracle's."""
         import random
 
-        from ocr_spark.operators.dedup import dedup_clusters
+        from ocr_spark.operators import dedup
 
         rng = random.Random(7)
         for trial in range(3):
@@ -159,18 +164,23 @@ class TestClustersStar:
             edges = [(a, b) for a, b in edges if a != b]
             pairs = spark.createDataFrame(edges, "id_a long, id_b long")
             want = _uf_reference(edges)
-            star = {
-                r.id: r.rep
-                for r in dedup_clusters(pairs, algorithm="star").collect()
-            }
+            st_label, st_star = {}, {}
             label = {
-                r.id: r.rep for r in dedup_clusters(pairs).collect()
+                r.id: r.rep
+                for r in dedup.dedup_clusters(pairs, stats=st_label).collect()
             }
+            with monkeypatch.context() as m:
+                m.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+                star = {
+                    r.id: r.rep
+                    for r in dedup.dedup_clusters(pairs, stats=st_star).collect()
+                }
+            assert (st_label["algorithm"], st_star["algorithm"]) == ("driver", "star")
             assert star == want == label
 
-    def test_star_chain_converges_in_log_rounds(self, spark):
-        """A 64-node chain (diameter 63): label propagation needs 63 rounds;
-        star must finish in ~log2(64)+slack."""
+    def test_star_chain_converges_in_log_rounds(self, spark, force_star):
+        """A 64-node chain (diameter 63): a min-label propagation would
+        need 63 rounds; star must finish in ~log2(64)+slack."""
         from ocr_spark.operators.dedup import dedup_clusters
 
         chain = [(i, i + 1) for i in range(64)]
@@ -178,29 +188,22 @@ class TestClustersStar:
         stats = {}
         got = {
             r.id: r.rep
-            for r in dedup_clusters(
-                pairs, stats=stats, algorithm="star", max_rounds=12
-            ).collect()
+            for r in dedup_clusters(pairs, stats=stats, max_rounds=12).collect()
         }
         assert got == {i: 0 for i in range(65)}
         assert stats["converged"] and stats["rounds"] <= 12
 
-    def test_star_nonconvergence_warns(self, spark):
+    def test_star_nonconvergence_warns(self, spark, force_star):
         from ocr_spark.operators.dedup import dedup_clusters
 
         chain = [(i, i + 1) for i in range(32)]
         pairs = spark.createDataFrame(chain, "id_a long, id_b long")
         with pytest.warns(RuntimeWarning, match="still changing"):
-            dedup_clusters(pairs, algorithm="star", max_rounds=1).collect()
+            dedup_clusters(pairs, max_rounds=1).collect()
 
-    def test_bad_algorithm_rejected(self, spark):
-        from ocr_spark.operators.dedup import dedup_clusters
-
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        with pytest.raises(ValueError, match="algorithm"):
-            dedup_clusters(pairs, algorithm="bogus")
-
-    def test_near_dedup_star_passthrough(self, spark):
+    def test_near_dedup_star_passthrough(self, spark, force_star):
+        """near_dedup reaches star when its pair count is over the driver
+        budget, and reports the resolved path in stats."""
         from ocr_spark.operators.dedup import near_dedup
 
         df = spark.createDataFrame(
@@ -215,8 +218,7 @@ class TestClustersStar:
         kept = {
             r.doc_id
             for r in near_dedup(
-                df, method="simhash", cluster_algorithm="star",
-                stats=stats, max_hamming=3,
+                df, method="simhash", stats=stats, max_hamming=3
             ).collect()
         }
         assert kept == {1, 3}
@@ -224,9 +226,9 @@ class TestClustersStar:
 
 
 class TestClustersAuto:
-    """algorithm='auto' resolves small pair sets with a driver union-find
-    (zero iterative jobs) and falls back to the distributed loop above the
-    pair budget — identical labels everywhere."""
+    """dedup_clusters resolves small pair sets with a driver union-find
+    (zero iterative jobs) and switches to the distributed star path above
+    the pair budget — identical labels everywhere."""
 
     def test_auto_small_uses_driver(self, spark):
         from ocr_spark.operators.dedup import dedup_clusters
@@ -240,34 +242,56 @@ class TestClustersAuto:
         assert stats["algorithm"] == "driver" and stats["rounds"] == 0
         assert stats["converged"]
 
-    def test_auto_over_budget_falls_back_to_label(self, spark):
-        from ocr_spark.operators.dedup import dedup_clusters
+    def test_auto_over_budget_uses_star(self, spark, monkeypatch):
+        from ocr_spark.operators import dedup
 
+        monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 1)
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3)], "id_a long, id_b long"
         )
         stats = {}
         got = {
             r.id: r.rep
-            for r in dedup_clusters(
-                pairs, stats=stats, driver_max_pairs=1
-            ).collect()
+            for r in dedup.dedup_clusters(pairs, stats=stats).collect()
         }
         assert got == {1: 1, 2: 1, 3: 1}
-        assert stats["algorithm"] == "label"
+        assert stats["algorithm"] == "star"
 
-    def test_driver_matches_distributed_on_random_graphs(self, spark):
+    def test_string_id_budget_is_an_eighth(self, spark, monkeypatch):
+        """String ids cost ~an order more driver memory per pair, so their
+        driver budget is 1/8 of the long-id one: 3 pairs fit a budget of
+        16 long-id pairs but not its 2 string-id pairs."""
+        from ocr_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 16)
+        edges = [(1, 2), (2, 3), (7, 8)]
+        longs = spark.createDataFrame(edges, "id_a long, id_b long")
+        strs = spark.createDataFrame(
+            [(f"u{a}", f"u{b}") for a, b in edges], "id_a string, id_b string"
+        )
+        st_long, st_str = {}, {}
+        dedup.dedup_clusters(longs, stats=st_long).collect()
+        got = {
+            r.id: r.rep
+            for r in dedup.dedup_clusters(strs, stats=st_str).collect()
+        }
+        assert (st_long["algorithm"], st_str["algorithm"]) == ("driver", "star")
+        assert got == {"u1": "u1", "u2": "u1", "u3": "u1", "u7": "u7", "u8": "u7"}
+
+    def test_driver_matches_distributed_on_random_graphs(self, spark, monkeypatch):
         import random
 
-        from ocr_spark.operators.dedup import dedup_clusters
+        from ocr_spark.operators import dedup
 
         rng = random.Random(23)
         edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(50)]
         edges = [(a, b) for a, b in edges if a != b]
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         want = _uf_reference(edges)
-        auto = {r.id: r.rep for r in dedup_clusters(pairs).collect()}
-        assert auto == want
+        auto = {r.id: r.rep for r in dedup.dedup_clusters(pairs).collect()}
+        monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+        star = {r.id: r.rep for r in dedup.dedup_clusters(pairs).collect()}
+        assert auto == want == star
 
     def test_empty_pairs(self, spark):
         from ocr_spark.operators.dedup import dedup_clusters
