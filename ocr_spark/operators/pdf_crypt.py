@@ -473,6 +473,9 @@ def _crypt(method: str, filekey: bytes, v: int, num: int, gen: int,
 # ---------------------------------------------------------------------------
 
 
+_EOL_RE = re.compile(r"[\r\n]")
+
+
 def _skip_string(text: str, j: int) -> int:
     """Index past the literal string '(...)', hex string '<...>' or
     '%' comment that starts at j (text[j] is '(', '%', or a '<' not
@@ -484,8 +487,8 @@ def _skip_string(text: str, j: int) -> int:
         return _parse_pdf_string(text, j)[1]
     if c == "<":
         return _parse_hex_string(text, j)[1]
-    k = text.find("\n", j)  # a comment runs to end of line
-    return len(text) if k < 0 else k + 1
+    m = _EOL_RE.search(text, j)  # a comment runs to end of line: CR or LF
+    return len(text) if m is None else m.end()
 
 
 def _scan_dict(text: str, i: int) -> tuple[str, int]:
@@ -558,8 +561,7 @@ def _dict_entries(body: str) -> dict[str, tuple[str, object]]:
             i += 1
             continue
         if c == "%":
-            k = body.find("\n", i)
-            i = n if k < 0 else k + 1
+            i = min(_skip_string(body, i), n)
             continue
         if c == "/":
             m = _NAME_RE.match(body, i)

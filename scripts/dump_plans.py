@@ -192,10 +192,10 @@ def main() -> None:
         (
             "semantic_dedup",
             _semantic_dedup_df(spark, sf),
-            "SemDeDup keep/drop: pair generation shuffles ONLY on the"
-            " cluster key (an equi-join at this k=8 codebook; grouped BLAS"
-            " scoring above _ARROW_ASSIGN_CELLS), cliques resolve on the"
-            " dup subgraph, and the corpus is touched by exactly ONE"
+            "SemDeDup keep/drop: the cliques enter as Scan ExistingRDD"
+            " (dedup_clusters materializes the dup subgraph, so no pair"
+            " stage shows here), the keep-one window is partitioned on the"
+            " clique rep, and the corpus is touched by exactly ONE"
             " LeftAnti equi-join — never re-joined for audit columns",
         ),
         (

@@ -615,3 +615,21 @@ class TestReviewHardening:
         assert doc.count(b"/Encrypt") == 2 and b"/Info 6 0 R" in doc
         assert decrypt_pdf(doc) is doc
         assert extract_pdf_text(doc.decode("latin-1")) == "Hello world"
+
+    def test_cr_only_eols_still_decrypt(self):
+        # ISO 32000 7.2.3 lets a bare CR end a line; the '%PDF-' header
+        # comment used to run to the next LF (or the end of the file), and
+        # that mask swallowed the trailer's /Encrypt entry: the ciphertext
+        # passed through undecrypted with no error row
+        enc = encrypt_pdf(
+            pdf_write([{"x": 50, "y": 60, "text": "Hello world"}]), variant="aesv2"
+        )
+        # LF -> CR outside stream bodies; the EOL after 'stream' must stay
+        # CRLF or LF (7.3.8.1). Same length, so the xref offsets hold.
+        parts = re.split(rb"(stream\r?\n.*?endstream)", enc, flags=re.S)
+        cr = b"".join(
+            p if i % 2 else p.replace(b"\n", b"\r") for i, p in enumerate(parts)
+        )
+        assert len(cr) == len(enc) and cr.startswith(b"%PDF-") and cr != enc
+        assert decrypt_pdf(cr) is not cr
+        assert extract_pdf_text(cr.decode("latin-1")) == "Hello world"

@@ -78,14 +78,15 @@ def force_star(monkeypatch):
 
 
 def test_dedup_clusters_small_graph(spark, force_star):
+    """Unnormalized edges: both orientations, a repeated pair and a
+    self-loop, which the distributed path must fold like union-find."""
     from ocr_spark.operators.dedup import dedup_clusters
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (9, 3)], "id_a long, id_b long"
-    )
+    edges = [(2, 1), (1, 2), (3, 2), (3, 2), (6, 5), (3, 9), (4, 4)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     stats = {}
     got = {r.id: r.rep for r in dedup_clusters(pairs, stats=stats).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
+    assert got == _uf_reference(edges) == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5, 4: 4}
     assert stats["converged"] and stats["rounds"] >= 1
 
 
@@ -108,9 +109,16 @@ def test_dedup_clusters_nonconvergence_warns(spark, force_star):
 
     chain = [(i, i + 1) for i in range(1, 12)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
+    stats = {}
     with pytest.warns(RuntimeWarning, match="still changing"):
-        labels = dedup_clusters(pairs, max_rounds=1)
-        labels.collect()
+        got = {
+            r.id: r.rep
+            for r in dedup_clusters(pairs, stats=stats, max_rounds=1).collect()
+        }
+    # the partial labels still cover every node and only ever point down
+    assert not stats["converged"] and stats["rounds"] == 1
+    assert set(got) == set(range(1, 13))
+    assert all(rep <= i for i, rep in got.items()) and len(set(got.values())) > 1
 
 
 def _uf_reference(pairs: list[tuple[int, int]]) -> dict[int, int]:
@@ -279,18 +287,28 @@ class TestClustersAuto:
         assert got == {"u1": "u1", "u2": "u1", "u3": "u1", "u7": "u7", "u8": "u7"}
 
     def test_driver_matches_distributed_on_random_graphs(self, spark, monkeypatch):
+        """String ids, unpadded so that their order is not the numeric one
+        ('n10' < 'n9'): both paths take the lexicographic min."""
         import random
 
         from ocr_spark.operators import dedup
 
         rng = random.Random(23)
         edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(50)]
-        edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        edges = [(f"n{a}", f"n{b}") for a, b in edges if a != b]
+        pairs = spark.createDataFrame(edges, "id_a string, id_b string")
         want = _uf_reference(edges)
-        auto = {r.id: r.rep for r in dedup.dedup_clusters(pairs).collect()}
+        st_auto, st_star = {}, {}
+        auto = {
+            r.id: r.rep
+            for r in dedup.dedup_clusters(pairs, stats=st_auto).collect()
+        }
         monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
-        star = {r.id: r.rep for r in dedup.dedup_clusters(pairs).collect()}
+        star = {
+            r.id: r.rep
+            for r in dedup.dedup_clusters(pairs, stats=st_star).collect()
+        }
+        assert (st_auto["algorithm"], st_star["algorithm"]) == ("driver", "star")
         assert auto == want == star
 
     def test_empty_pairs(self, spark):
