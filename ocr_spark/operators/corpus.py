@@ -49,7 +49,6 @@ def corpus_pipeline(
     dup_span_n: int | None = None,
     dup_span_min_count: int = 2,
     scrub: bool = True,
-    persist_stages: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
     stats: dict | None = None,
@@ -81,11 +80,12 @@ def corpus_pipeline(
     if quality == "v1":
         filtered = docs.where(quality_score(F.col(text_col)) >= F.lit(min_quality))
     else:
-        # v2 MUST go through the staged projections: the scalar quality_v2
-        # composition inlines the split/gram array subtrees dozens of times
-        # and falls out of codegen into interpreted eval — measured minutes
-        # vs seconds on a few hundred docs (see quality_repetition_select).
-        # A plain .where(quality_v2 >= x) would undo the staging too:
+        # v2 rides the staged projections: one expression composing the
+        # repetition signals would inline the split/gram array subtrees
+        # dozens of times and fall out of codegen into interpreted eval —
+        # measured minutes vs seconds on a few hundred docs (see
+        # quality_repetition_select). A plain .where(quality_v2 >= x) on the
+        # staged frame would undo the staging too:
         # PushPredicateThroughNonJoin substitutes aliases through
         # deterministic Projects unconditionally, re-inlining the whole
         # tree into one interpreted Filter. The rand() column is a pushdown
@@ -106,18 +106,17 @@ def corpus_pipeline(
     # dup_span reads the kept frame for grams, counts and the patch join;
     # decon reads it again). Without persistence every consumer re-runs the
     # whole upstream chain — the v2 quality scan alone re-executed 5+ times
-    # (measured 28 s -> much less at sf0.1). Spark evicts LRU; pass
-    # persist_stages=False for tight-memory loops. The persisted handles are
-    # exposed through stats['persisted'] so long-lived sessions composing
-    # many pipelines can release them deterministically after materializing
-    # the output (unpersist_stages) instead of leaning on LRU eviction.
+    # (measured 28 s -> much less at sf0.1), so both stages are always
+    # persisted. The handles are exposed through stats['persisted'] so
+    # long-lived sessions composing many pipelines can release them
+    # deterministically after materializing the output (unpersist_stages)
+    # instead of leaning on Spark's LRU eviction.
     persisted: list[DataFrame] = []
     if stats is not None:
         stats.setdefault("persisted", persisted)
         persisted = stats["persisted"]
-    if persist_stages:
-        filtered = filtered.persist()
-        persisted.append(filtered)
+    filtered = filtered.persist()
+    persisted.append(filtered)
     kept = near_dedup(
         filtered,
         method=dedup_method,
@@ -126,9 +125,8 @@ def corpus_pipeline(
         stats=stats,
         **dedup_kw,
     )
-    if persist_stages:
-        kept = kept.persist()
-        persisted.append(kept)
+    kept = kept.persist()
+    persisted.append(kept)
     if dup_span_n is not None:
         from ocr_spark.operators.corpus_clean import dup_span_removal
 
@@ -160,14 +158,14 @@ def corpus_pipeline(
     return kept
 
 
-def unpersist_stages(stats: dict, blocking: bool = False) -> int:
+def unpersist_stages(stats: dict) -> int:
     """Release the stage caches a corpus_pipeline(stats=...) run persisted.
     Call AFTER materializing (writing/collecting) the pipeline output —
     unpersisting earlier would just re-run the upstream chains. Returns the
     number of frames released; idempotent (the handle list is drained)."""
     n = 0
     for df in stats.pop("persisted", []):
-        df.unpersist(blocking)
+        df.unpersist()
         n += 1
     return n
 
@@ -189,7 +187,7 @@ def corpus_pipeline_sql(
     path loses nothing) resolved by the recursive-CTE transitive closure.
     `quality` mirrors corpus_pipeline's knob: 'v1' = ratio heuristic,
     'v2' = the Gopher-style composite (composed from quality_repetition_sql
-    so the filter semantics match quality_v2 exactly)."""
+    so the filter semantics match the staged quality_v2 column exactly)."""
     from ocr_spark.operators.dedup import (
         _shingles_sql,
         dedup_clusters_sql,

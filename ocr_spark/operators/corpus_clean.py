@@ -547,8 +547,8 @@ __all__ = [
 # transform over the staged token array, same staging trick as
 # _exploded_shingles); the occurrence count is ONE partial-agg shuffle of
 # 8-byte gram keys; the dup-gram set (count >= min_count) is the bounded
-# boilerplate tail and is broadcast back (escape hatch: broadcast_dups=False
-# leaves it to AQE); covered positions re-aggregate per doc (narrow rows);
+# boilerplate tail and is always broadcast back (no corpus-side shuffle for
+# the gram join); covered positions re-aggregate per doc (narrow rows);
 # the final patch join is narrow-into-wide on doc_id — with a bucketed doc
 # store it co-locates, otherwise AQE broadcasts when the covered-doc set is
 # small.
@@ -561,7 +561,6 @@ def dup_span_removal(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_dups: bool = True,
 ) -> DataFrame:
     """Remove every occurrence of any word n-gram whose verbatim corpus-wide
     occurrence count >= min_count. Returns (id_col, text, n_tokens,
@@ -593,10 +592,8 @@ def dup_span_removal(
         .where(F.col("cnt") >= F.lit(min_count))
         .select("sh")
     )
-    if broadcast_dups:
-        dups = F.broadcast(dups)
     cov = (
-        g.join(dups, "sh")
+        g.join(F.broadcast(dups), "sh")
         .groupBy("id")
         .agg(
             F.array_sort(

@@ -972,13 +972,17 @@ FROM co JOIN ev USING (sh) GROUP BY co.id
 # produced, almost all of which match nothing. A Bloom filter is the
 # fixed-size broadcastable summary of the eval set: ~1.5 bytes/shingle at
 # k=8 (vs 8-byte keys + hash-table overhead), so a 10^9-shingle eval side
-# becomes a ~1.7 GB bitmap — or, at bits_per_item=12 and the default cap,
-# 256 MiB with a still-tiny false-positive rate. Corpus shingles test
-# against the bitmap map-side (vectorized numpy over Arrow batches, zero
-# per-row Python) and only survivors — true hits plus the fpp sliver —
-# enter the exact verify join, which AQE then usually broadcasts. False
-# positives cost only wasted verify work; the exact join removes them, so
-# the result is bit-identical to `contamination`.
+# becomes a ~1.7 GB bitmap — or, at 12 bits per item and the
+# _BLOOM_MAX_BITS cap, 256 MiB with a still-tiny false-positive rate.
+# Corpus shingles test against the bitmap map-side (vectorized numpy over
+# Arrow batches, zero per-row Python) and only survivors — true hits plus
+# the fpp sliver — enter the exact verify join, which AQE then usually
+# broadcasts. False positives cost only wasted verify work; the exact join
+# removes them, so the result is bit-identical to `contamination`.
+
+_BLOOM_BITS_PER_ITEM = 12
+_BLOOM_HASHES = 8
+_BLOOM_MAX_BITS = 1 << 31  # 256 MiB: past this, fpp rises instead of memory
 
 
 def _bloom_mix64(z: "np.ndarray") -> "np.ndarray":
@@ -1014,11 +1018,7 @@ def _bloom_positions(h: "np.ndarray", n_hashes: int, m: int):
 
 
 def bloom_build(
-    sh: DataFrame,
-    n_items: int | None = None,
-    bits_per_item: int = 12,
-    n_hashes: int = 8,
-    max_bits: int = 1 << 31,
+    sh: DataFrame, n_items: int | None = None
 ) -> tuple[bytes, int, int]:
     """Build a Bloom bitmap from the `sh` (long) column of a DataFrame.
     Returns (bitmap bytes, m bits, n_hashes).
@@ -1027,16 +1027,18 @@ def bloom_build(
     inside one vectorized Arrow stage (np.bitwise_or.at), then the P
     per-partition bitmaps tree-OR on the cluster (treeReduce, depth 2) so
     the driver receives O(sqrt(P)) bitmaps, never the raw keys. m is the
-    next power of two >= n_items * bits_per_item, capped at max_bits
-    (2^31 bits = 256 MiB default — past that, fpp rises instead of memory)."""
+    next power of two >= n_items * _BLOOM_BITS_PER_ITEM, capped at
+    _BLOOM_MAX_BITS; n_items defaults to a count job over `sh`."""
     import math
 
     import numpy as np
 
     if n_items is None:
         n_items = sh.count()
-    m = 1 << max(10, math.ceil(math.log2(max(n_items, 1) * bits_per_item)))
-    m = min(m, max_bits)
+    m = 1 << max(
+        10, math.ceil(math.log2(max(n_items, 1) * _BLOOM_BITS_PER_ITEM))
+    )
+    m = min(m, _BLOOM_MAX_BITS)
     nbytes = m // 8
 
     def build(batches):
@@ -1049,7 +1051,7 @@ def bloom_build(
             if len(h) == 0:
                 continue
             any_rows = True
-            for pos in _bloom_positions(h, n_hashes, m):
+            for pos in _bloom_positions(h, _BLOOM_HASHES, m):
                 np.bitwise_or.at(bm, pos >> np.uint64(3), np.left_shift(
                     np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)))
         if any_rows:
@@ -1068,7 +1070,7 @@ def bloom_build(
         )
     except ValueError:  # every partition empty -> no bitmap rows at all
         merged = bytes(nbytes)
-    return merged, m, n_hashes
+    return merged, m, _BLOOM_HASHES
 
 
 def bloom_prefilter(
@@ -1120,15 +1122,11 @@ def contamination_bloom(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_items: int | None = None,
-    bits_per_item: int = 12,
-    n_hashes: int = 8,
 ) -> DataFrame:
     """`contamination` for the big-eval regime: identical output (the exact
     verify join removes Bloom false positives), but the corpus side never
     sorts or shuffles non-candidate shingles — they die map-side against
-    the broadcast bitmap. Pass n_items (e.g. from parquet footer counts) to
-    skip the sizing count job over the eval side.
+    the broadcast bitmap.
 
     The corpus side deliberately skips shingles_hashed's per-doc .distinct():
     that distinct is its own full shuffle of every corpus shingle BEFORE the
@@ -1136,12 +1134,11 @@ def contamination_bloom(
     countDistinct aggregation dedups survivors anyway. Raw shingles flow
     scan → explode → hash → bloom test with no exchange in between.
 
-    The eval shingle set is persisted for the operator's lifetime: it is
-    read up to three times (sizing count when n_items is None, bitmap
-    build, verify join) and each read would otherwise re-run the full
-    explode + distinct shuffle — two redundant passes in exactly the
-    big-eval regime this operator targets. Spark evicts the cache LRU; call
-    .unpersist() on the eval side yourself for tight-memory loops."""
+    The eval shingle set is persisted only across the two jobs this call
+    runs itself (the sizing count and the bitmap build), so the explode +
+    distinct shuffle runs once for both; it is released before returning,
+    and the verify join derives the eval shingles once more when the
+    output is materialized. No cache outlives the call."""
     from ocr_spark.operators.text_analysis import h60
 
     sh_c = _exploded_shingles(corpus, n, id_col, text_col).select(
@@ -1150,10 +1147,10 @@ def contamination_bloom(
     sh_e = shingles_hashed(
         eval_docs, n=n, id_col=id_col, text_col=text_col
     ).persist()
-    bloom = bloom_build(
-        sh_e.select("sh"), n_items=n_items,
-        bits_per_item=bits_per_item, n_hashes=n_hashes,
-    )
+    try:
+        bloom = bloom_build(sh_e.select("sh"))
+    finally:
+        sh_e.unpersist()
     surv = bloom_prefilter(sh_c, bloom, col="sh")
     j = surv.join(
         sh_e.withColumnRenamed("id", "eval_id"), "sh"

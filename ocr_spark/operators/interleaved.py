@@ -310,7 +310,6 @@ def interleave_training(
     id_col: str = "doc_id",
     spans_col: str = "spans",
     stats: dict | None = None,
-    persist_enc: bool = True,
 ) -> DataFrame:
     """Interleaved spans -> multimodal training sequences in one call:
     encode_interleaved (sep appended BEFORE packing, budgets exact) ->
@@ -327,10 +326,9 @@ def interleave_training(
         id_col=id_col,
         spans_col=spans_col,
     )
-    if persist_enc:
-        enc = enc.persist()
-        if stats is not None:
-            stats.setdefault("persisted", []).append(enc)
+    enc = enc.persist()
+    if stats is not None:
+        stats.setdefault("persisted", []).append(enc)
     counts = enc.select(id_col, F.size("input_ids").alias("_n"))
     packed = pack_sequences(
         counts,

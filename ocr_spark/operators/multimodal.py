@@ -353,7 +353,7 @@ def audio_segments(
     return assets.mapInPandas(gen, schema=AUDIO_SEGMENT_SCHEMA)
 
 
-def media_assets_df(docs: DataFrame, backend: str = "synthetic") -> DataFrame:
+def media_assets_df(docs: DataFrame) -> DataFrame:
     """Distinct media assets referenced by a spans table, payload resolved
     inside an Arrow-batched stage (never on the driver)."""
     refs = (
@@ -367,7 +367,7 @@ def media_assets_df(docs: DataFrame, backend: str = "synthetic") -> DataFrame:
         from ocr_spark.sources.media import resolve_batch
 
         for pdf in batches:
-            payloads = resolve_batch(list(pdf["media_ref"]), backend)
+            payloads = resolve_batch(list(pdf["media_ref"]))
             metas = [
                 {"width": 32, "height": 32, "n_bytes": len(p or b""), "codec": "synthetic"}
                 for p in payloads

@@ -39,7 +39,9 @@ import struct
 
 try:  # optional OpenSSL fast path (AES-NI) — import-try gated, never
     # required: the pure-Python FIPS-197 implementation below is the
-    # authoritative one (tests pin BOTH paths to the appendix vectors).
+    # authoritative one and the only path on a host without
+    # `cryptography` (tests pin BOTH paths to the appendix vectors, the
+    # pure one by patching _HAVE_CG off).
     # Matters for R6: Algorithm 2.B is deliberately iteration-heavy
     # (~29k AES blocks per authentication) — ~1 s pure vs ~1 ms native.
     from cryptography.hazmat.primitives.ciphers import Cipher as _CgCipher
@@ -197,16 +199,15 @@ def aes_decrypt_block(round_keys: list[bytes], block: bytes) -> bytes:
     return bytes(x ^ k for x, k in zip(s, round_keys[0]))
 
 
-def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True,
-                    pure: bool = False) -> bytes:
+def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True) -> bytes:
     """AES-CBC; pad=True applies PKCS#7 (the PDF crypt-filter padding).
-    pure=True forces the from-scratch block cipher (test hook)."""
+    OpenSSL when `cryptography` imports, else the from-scratch cipher."""
     if pad:
         n = 16 - len(data) % 16
         data = data + bytes([n]) * n
     elif len(data) % 16:
         raise ValueError("AES-CBC (no pad): data not a block multiple")
-    if _HAVE_CG and not pure:
+    if _HAVE_CG:
         if len(key) not in (16, 24, 32):
             raise ValueError(f"AES key must be 16/24/32 bytes, got {len(key)}")
         e = _CgCipher(_CgAES(key), _CgCBC(iv)).encryptor()
@@ -220,13 +221,12 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True,
     return bytes(out)
 
 
-def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True,
-                    pure: bool = False) -> bytes:
+def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True) -> bytes:
     """AES-CBC decrypt; pad=True strips and validates PKCS#7 padding.
-    pure=True forces the from-scratch block cipher (test hook)."""
+    OpenSSL when `cryptography` imports, else the from-scratch cipher."""
     if len(data) % 16 or (pad and not data):
         raise ValueError("AES-CBC: ciphertext not a block multiple")
-    if _HAVE_CG and not pure:
+    if _HAVE_CG:
         if len(key) not in (16, 24, 32):
             raise ValueError(f"AES key must be 16/24/32 bytes, got {len(key)}")
         d = _CgCipher(_CgAES(key), _CgCBC(iv)).decryptor()
@@ -911,16 +911,18 @@ def _set_length(ddict: str, n: int) -> str:
 
 
 def _stream_exempt(ddict: str, num: int | None, enc_num: int | None,
-                   encrypt_metadata: bool) -> bool:
-    """Streams the standard handler never encrypts: the XRef stream, the
-    /Encrypt object itself, and /Metadata when /EncryptMetadata false."""
-    if num is not None and num == enc_num:
-        return True
-    if re.search(r"/Type\s*/XRef\b", ddict):
-        return True
-    if not encrypt_metadata and re.search(r"/Type\s*/Metadata\b", ddict):
-        return True
-    return False
+                   encrypt_metadata: bool) -> tuple[bool, bool]:
+    """(body exempt, dict strings exempt) for one stream object. The XRef
+    stream (ISO 32000-1 §7.5.8.2) and the /Encrypt object itself are
+    plaintext throughout. /Metadata under /EncryptMetadata false exempts
+    only the body: strings in its dictionary are still encrypted (§7.6.1),
+    as they are under /StmF /Identity."""
+    if (num is not None and num == enc_num) or re.search(
+        r"/Type\s*/XRef\b", ddict
+    ):
+        return True, True
+    meta = not encrypt_metadata and re.search(r"/Type\s*/Metadata\b", ddict)
+    return bool(meta), False
 
 
 def decrypt_pdf(data: bytes, password: bytes = b"") -> bytes:
@@ -961,23 +963,24 @@ def decrypt_pdf(data: bytes, password: bytes = b"") -> bytes:
                     "encrypted PDF: per-stream /Crypt filter chains are not "
                     "supported"
                 )
-            if _stream_exempt(ddict, num, enc_num, em) or stm_m == "identity":
-                body = raw
-            else:
+            body_ex, strings_ex = _stream_exempt(ddict, num, enc_num, em)
+            body = raw
+            if not body_ex and stm_m != "identity":
                 if num is None:
                     raise ValueError(
                         "encrypted PDF: stream without an enclosing object header"
                     )
                 body = _crypt(stm_m, filekey, v, num, gen or 0, raw, decrypt=True)
-                if str_m != "identity":
-                    # strings inside the stream's own dictionary (embedded-
-                    # file /Params dates, say) are encrypted like any other
-                    ddict = _rewrite_span(
-                        ddict, num, gen or 0,
-                        lambda n_, g_, r_: _crypt(
-                            str_m, filekey, v, n_, g_, r_, decrypt=True
-                        ),
-                    )
+            if not strings_ex and str_m != "identity" and num is not None:
+                # strings inside the stream's own dictionary (embedded-file
+                # /Params dates, say) are encrypted like any other, whatever
+                # the body's crypt filter
+                ddict = _rewrite_span(
+                    ddict, num, gen or 0,
+                    lambda n_, g_, r_: _crypt(
+                        str_m, filekey, v, n_, g_, r_, decrypt=True
+                    ),
+                )
             out.append(
                 _set_length(ddict, len(body)).encode("latin-1")
                 + b"\nstream\n" + body + b"\nendstream"
@@ -1088,12 +1091,13 @@ def encrypt_pdf(
             _, ddict, raw, num, gen = seg
             if num is None:
                 raise ValueError("encrypt_pdf: stream outside any object")
-            if _stream_exempt(ddict, num, None, encrypt_metadata):
-                body = raw
-            else:
-                body = enc_bytes(num, gen or 0, raw)
+            body_ex, strings_ex = _stream_exempt(
+                ddict, num, None, encrypt_metadata
+            )
+            body = raw if body_ex else enc_bytes(num, gen or 0, raw)
+            if not strings_ex:
                 # symmetric with decrypt_pdf: stream-dict strings are
-                # encrypted alongside the body
+                # encrypted even when the body is exempt
                 ddict = _rewrite_span(ddict, num, gen or 0, enc_bytes)
             pieces.append(
                 _set_length(ddict, len(body)).encode("latin-1")

@@ -1400,11 +1400,6 @@ def extract_pdf_text(payload: str) -> str:
     return "\n".join(str(blocks[i].get("text", "")) for i in order)
 
 
-def extract_pdf_batch(payloads: list[str]) -> list[str]:
-    """Batch API used by the dispatch mapInPandas stage."""
-    return [extract_pdf_text(p) for p in payloads]
-
-
 # ---------------------------------------------------------------------------
 # embedded image XObjects — the scanned-document OCR feed
 #

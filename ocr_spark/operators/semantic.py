@@ -290,7 +290,6 @@ def semantic_prune(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int | None = None,
-    sub_salt: str = "sp0",
     stats: dict | None = None,
 ) -> DataFrame:
     """SemDeDup over a fixed codebook: assign every vector to its nearest
@@ -328,7 +327,6 @@ def semantic_prune(
         id_col=id_col,
         vec_col=vec_col,
         max_cluster=max_cluster,
-        sub_salt=sub_salt,
         stats=stats,
     )
     # attaching rep to EVERY row costs one corpus equi-join (the audit
@@ -370,7 +368,6 @@ def _prune_parts(
     id_col: str,
     vec_col: str,
     max_cluster: int | None,
-    sub_salt: str,
     stats: dict | None,
 ):
     """Shared machinery: (staged corpus view, clique labels, keeper-per-
@@ -452,7 +449,7 @@ def _prune_parts(
             ]
         )
         sub = F.pmod(
-            h32(F.concat(F.col("id").cast("string"), F.lit(":" + sub_salt))),
+            h32(F.concat(F.col("id").cast("string"), F.lit(":sp0"))),
             F.coalesce(
                 F.element_at(sub_map, F.col("ivf_list")), F.lit(1)
             ),
@@ -524,7 +521,8 @@ def semantic_dedup(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     emb_id_col: str = "vec_id",
-    **prune_kw,
+    max_cluster: int | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """The keep/drop composition (near_dedup's contract, SemDeDup flavor):
     docs minus pruned members. The drop set is built from the duplicate
@@ -532,7 +530,8 @@ def semantic_dedup(
     corpus is touched by exactly ONE left_anti equi-join on the id
     (broadcast when the drop set is small; AQE picks), never shuffled or
     re-joined for the audit columns semantic_prune carries. The embeddings
-    frame's vector ids must be the doc ids."""
+    frame's vector ids must be the doc ids. `max_cluster` and `stats` are
+    semantic_prune's."""
     _, cliques, keepers = _prune_parts(
         emb,
         centroids,
@@ -540,7 +539,8 @@ def semantic_dedup(
         keep=keep,
         id_col=emb_id_col,
         vec_col=vec_col,
-        **_prune_defaults(prune_kw),
+        max_cluster=max_cluster,
+        stats=stats,
     )
     if keepers is None:  # min_id: the rep IS the keeper
         drop = cliques.where(F.col("id") != F.col("rep"))
@@ -552,15 +552,3 @@ def semantic_dedup(
         drop.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
 
-
-def _prune_defaults(kw: dict) -> dict:
-    out = {
-        "max_cluster": None,
-        "sub_salt": "sp0",
-        "stats": None,
-    }
-    unknown = set(kw) - set(out)
-    if unknown:
-        raise TypeError(f"unexpected semantic_dedup option(s): {sorted(unknown)}")
-    out.update(kw)
-    return out

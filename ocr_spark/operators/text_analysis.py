@@ -310,103 +310,26 @@ def _nonempty_lines(col: Column) -> Column:
     return F.filter(F.split(col, "\n"), lambda x: x != F.lit(""))
 
 
-def dup_line_fraction(col: Column) -> Column:
-    """Fraction of non-empty lines that are exact duplicates of another line
-    (all occurrences beyond the first count)."""
-    lines = _nonempty_lines(col)
-    n = F.size(lines)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        (n - F.size(F.array_distinct(lines))) / n
-    )
-
-
-def dup_line_char_fraction(col: Column) -> Column:
-    """Fraction of line characters sitting in duplicated lines (every
-    occurrence of a line whose text appears >1 time counts)."""
-    lines = _nonempty_lines(col)
-    dl = F.array_distinct(lines)
-
-    def cnt(d):
-        return F.size(F.filter(lines, lambda x: x == d))
-
-    dup_chars = F.aggregate(
-        F.filter(dl, lambda d: cnt(d) > 1),
-        F.lit(0).cast("long"),
-        lambda acc, d: acc + cnt(d).cast("long") * F.length(d).cast("long"),
-    )
-    tot_chars = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
-    )
-    return F.when(tot_chars <= 0, F.lit(0.0)).otherwise(dup_chars / tot_chars)
-
-
-def top_ngram_char_fraction(col: Column, n: int = 2) -> Column:
-    """Fraction of text characters covered by the single most frequent word
-    n-gram (count × gram length / text length). Tie-break: lexicographically
-    smallest gram among the most frequent."""
-    words = F.filter(F.split(F.lower(col), r"[^a-z0-9]+"), lambda x: x != F.lit(""))
-    k = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + j + 1) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    dg = F.array_distinct(grams)
-
-    def cnt(d):
-        return F.size(F.filter(grams, lambda x: x == d))
-
-    maxc = F.array_max(F.transform(dg, cnt))
-    top = F.array_min(F.filter(dg, lambda d: cnt(d) == maxc))
-    return F.when(F.size(dg) <= 0, F.lit(0.0)).otherwise(
-        (maxc * F.length(top)) / F.greatest(F.length(col), F.lit(1))
-    )
-
-
-def char_run_repetition(col: Column) -> Column:
-    """Fraction of adjacent character positions repeating the previous
-    character (catches aaaaa/!!!!!-style degenerate text)."""
-    chars = F.split(col, "")
-    m = F.size(chars)
-    reps = F.size(
-        F.filter(
-            F.zip_with(
-                F.slice(chars, 1, F.greatest(m - 1, F.lit(0))),
-                F.slice(chars, 2, F.greatest(m - 1, F.lit(0))),
-                lambda a, b: a == b,
-            ),
-            lambda x: x,
-        )
-    )
-    return F.when(m <= 1, F.lit(0.0)).otherwise(reps / (m - 1))
-
-
-def quality_v2(col: Column) -> Column:
-    """quality_score blended with the repetition signals — the Gopher-style
-    composite: ratio heuristics 60%, line-dedup 15%, top-bigram 15%,
-    char-run 10%. NOTE: composes the scalar signal trees inline — fine for
-    one column; for a frame with ALL signals use quality_repetition_select
-    (staged projections, each heavy array computed once)."""
-    return (
-        quality_score(col) * 0.6
-        + (1.0 - dup_line_fraction(col)) * 0.15
-        + (1.0 - top_ngram_char_fraction(col, 2)) * 0.15
-        + (1.0 - char_run_repetition(col)) * 0.1
-    )
-
-
 def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2):
-    """All repetition signals + quality_v2 in STAGED projections: lines,
-    grams, distinct sets and per-distinct counts are each computed ONCE as
-    intermediate columns, then the fractions read those columns. Composing
-    the scalar functions instead would inline the O(len) array subtrees
-    dozens of times (the count lambda appears inside max, tie-break and
-    fraction) — the plan explodes and codegen/analysis dominates. Values are
-    identical to the scalar functions; the DuckDB twin
+    """All repetition signals + quality_v2 in STAGED projections, one row
+    per input row (id_cols + the five columns below):
+      dup_line_frac        non-empty lines that duplicate an earlier line
+                           (all occurrences beyond the first count);
+      dup_line_char_frac   line characters in duplicated lines (every
+                           occurrence of a repeated line counts);
+      top_bigram_char_frac characters covered by the most frequent word
+                           n-gram (count x gram length / text length; ties
+                           -> the lexicographically smallest gram);
+      char_run_rep         adjacent character positions repeating the
+                           previous one (aaaaa / !!!!!);
+      quality_v2           the Gopher-style composite: quality_score 60%,
+                           1 - dup_line_frac 15%, 1 - top_bigram 15%,
+                           1 - char_run 10%.
+    Lines, grams, distinct sets and per-distinct counts are each computed
+    ONCE as intermediate columns, then the fractions read those columns.
+    One expression per signal would inline the O(len) array subtrees dozens
+    of times (the count lambda appears inside max, tie-break and fraction)
+    — the plan explodes and codegen/analysis dominates. The DuckDB twin
     (quality_repetition_sql) stages the same way with CTEs."""
     s1 = df.select(*id_cols, text.alias("_t"))
     # stage the token array BEFORE building grams: element_at inside a

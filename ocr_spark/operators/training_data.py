@@ -242,16 +242,15 @@ def materialize_training(
     id_col: str = "doc_id",
     text_col: str = "text",
     stats: dict | None = None,
-    persist_ids: bool = True,
     boundaries: bool = False,
 ) -> DataFrame:
     """text -> training sequences in one call: encode_token_ids (with the
     doc separator appended BEFORE packing, so budgets are exact) ->
     pack_sequences on size(input_ids) -> the grouped materializer.
 
-    The id frame feeds both the packer and the materializer; with
-    persist_ids (default) it is cached so the Arrow encode stage runs once
-    — pass stats={} and release with corpus.unpersist_stages(stats) after
+    The id frame feeds both the packer and the materializer, so it is
+    always cached and the Arrow encode stage runs once — pass stats={} and
+    release with corpus.unpersist_stages(stats) after
     materializing, the corpus_pipeline convention. Without stats the
     cached ids (~4 bytes/token of the whole corpus) stay pinned until
     Spark's LRU eviction reclaims them — fine for one-shot jobs, pass
@@ -267,10 +266,9 @@ def materialize_training(
         merges=merges,
         sep_id=SEP_ID if sep else None,
     )
-    if persist_ids:
-        ids = ids.persist()
-        if stats is not None:
-            stats.setdefault("persisted", []).append(ids)
+    ids = ids.persist()
+    if stats is not None:
+        stats.setdefault("persisted", []).append(ids)
     counts = ids.select(id_col, F.size("input_ids").alias("_n"))
     packed = pack_sequences(
         counts,

@@ -123,13 +123,8 @@ def resolve_gray_batch(
     return grays, ok
 
 
-def resolve_batch(refs: list[str], backend: str = "synthetic") -> list[bytes | None]:
-    if backend != "synthetic":
-        raise NotImplementedError(
-            f"media backend {backend!r}: production path is a broadcast join "
-            "against a binaryFile sidecar (see sidecar_df), not per-row fetch"
-        )
-    grays, ok = resolve_gray_batch(refs, backend)
+def resolve_batch(refs: list[str]) -> list[bytes | None]:
+    grays, ok = resolve_gray_batch(refs)
     return [g.tobytes() if o else None for g, o in zip(grays, ok)]
 
 

@@ -20,6 +20,7 @@ import re
 import numpy as np
 import pytest
 
+from ocr_spark.operators import pdf_crypt
 from ocr_spark.operators.pdf_crypt import (
     _alg2_key,
     _alg3_O,
@@ -92,18 +93,20 @@ class TestCipherVectors:
         assert rc4(key, pt).hex() == ct_hex
         assert rc4(key, bytes.fromhex(ct_hex)) == pt  # self-inverse
 
-    def test_cbc_pure_equals_fast_path(self):
+    def test_cbc_pure_equals_fast_path(self, monkeypatch):
         key = bytes(range(32))
         iv = bytes(range(16, 32))
         data = b"0123456789abcdef" * 9 + b"tail-bytes"
         for k in (key[:16], key[:24], key):
             ct_fast = aes_cbc_encrypt(k, iv, data)
-            ct_pure = aes_cbc_encrypt(k, iv, data, pure=True)
+            with monkeypatch.context() as m:
+                m.setattr(pdf_crypt, "_HAVE_CG", False)
+                ct_pure = aes_cbc_encrypt(k, iv, data)
+                assert aes_cbc_decrypt(k, iv, ct_fast) == data
             assert ct_fast == ct_pure
-            assert aes_cbc_decrypt(k, iv, ct_fast, pure=True) == data
             assert aes_cbc_decrypt(k, iv, ct_pure) == data
 
-    def test_cbc_against_cryptography_if_present(self):
+    def test_cbc_against_cryptography_if_present(self, monkeypatch):
         cryptography = pytest.importorskip("cryptography")  # noqa: F841
         from cryptography.hazmat.primitives.ciphers import Cipher
         from cryptography.hazmat.primitives.ciphers.algorithms import AES
@@ -113,7 +116,8 @@ class TestCipherVectors:
         data = b"independent-oracle-check-payload"  # 32 bytes
         e = Cipher(AES(key), CBC(iv)).encryptor()
         expect = e.update(data) + e.finalize()
-        assert aes_cbc_encrypt(key, iv, data, pad=False, pure=True) == expect
+        monkeypatch.setattr(pdf_crypt, "_HAVE_CG", False)
+        assert aes_cbc_encrypt(key, iv, data, pad=False) == expect
 
     def test_cbc_bad_padding_raises(self):
         key, iv = bytes(16), bytes(16)
@@ -400,7 +404,8 @@ class TestSparkE2E:
     def test_encrypted_pdf_through_extract_pipeline(self, spark):
         """An encrypted PDF doc in the interleaved-spans table extracts
         identically to its plaintext twin — the heavy-kind dispatch path
-        (pdf kind → extract_pdf_batch → pdf_crypt) under mapInArrow."""
+        (pdf kind → the `pdf_xycut` extractor, pdf_layout.extract_pdf_text →
+        pdf_crypt) inside dispatch._process_batch under mapInArrow."""
         from ocr_spark.pipeline import extract_documents
         from ocr_spark.schema import DOC_SCHEMA
 
@@ -564,6 +569,61 @@ class TestReviewHardening:
         dec = decrypt_pdf(enc)
         assert b"D:20260821120000Z".hex().encode() in dec  # hex re-emission
         assert b"filebytes" in dec
+
+    def test_stream_dict_strings_decrypt_under_identity_stmf(self):
+        # V4 with /StmF /Identity + /StrF /StdCF: stream bodies are
+        # plaintext but the strings in a stream's own dictionary are still
+        # encrypted (ISO 32000-1 §7.6.1) and must decrypt
+        plain = pdf_write(BLOCKS)
+        ef = (
+            b"6 0 obj\n<< /Type /EmbeddedFile "
+            b"/Params << /ModDate (D:20260821120000Z) >> /Length 9 >>\n"
+            b"stream\nfilebytes\nendstream\nendobj\n"
+        )
+        plain = plain.replace(b"xref\n", ef + b"xref\n", 1)
+        enc = encrypt_pdf(plain, variant="aesv2")
+        # put every stream body back in plaintext and declare it Identity
+        bodies = iter(
+            seg[2] for seg in pdf_crypt._segments(decrypt_pdf(enc))
+            if seg[0] == "stream"
+        )
+        parts = []
+        for seg in pdf_crypt._segments(enc):
+            if seg[0] == "text":
+                parts.append(seg[1])
+                continue
+            body = next(bodies)
+            parts.append(
+                pdf_crypt._set_length(seg[1], len(body)).encode("latin-1")
+                + b"\nstream\n" + body + b"\nendstream"
+            )
+        ident = b"".join(parts).replace(b"/StmF /StdCF", b"/StmF /Identity", 1)
+        assert b"/StmF /Identity" in ident and b"filebytes" in ident
+        assert b"D:20260821120000Z" not in ident
+        dec = decrypt_pdf(ident)
+        assert b"D:20260821120000Z".hex().encode() in dec
+        assert b"filebytes" in dec
+        ref = extract_pdf_text(plain.decode("latin-1"))
+        assert extract_pdf_text(ident.decode("latin-1")) == ref
+
+    def test_exempt_metadata_stream_dict_strings_encrypted(self):
+        # /EncryptMetadata false exempts the /Metadata BODY only; a string
+        # in its dictionary is encrypted by encrypt_pdf and decrypted back
+        plain = pdf_write(BLOCKS)
+        marker = b"<x:xmpmeta>golden-xmp-marker</x:xmpmeta>"
+        meta_obj = (
+            b"6 0 obj\n<< /Type /Metadata /Subtype /XML "
+            b"/Label (golden-meta-label) /Length "
+            + str(len(marker)).encode()
+            + b" >>\nstream\n" + marker + b"\nendstream\nendobj\n"
+        )
+        plain = plain.replace(b"xref\n", meta_obj + b"xref\n", 1)
+        enc = encrypt_pdf(plain, variant="aesv2", encrypt_metadata=False)
+        assert marker in enc
+        assert b"golden-meta-label" not in enc
+        dec = decrypt_pdf(enc)
+        assert marker in dec
+        assert b"golden-meta-label".hex().encode() in dec
 
     def test_crypt_bytes_in_unrelated_name_not_rejected(self):
         # '/Crypt' as a substring of another NAME must not trip the

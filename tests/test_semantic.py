@@ -256,12 +256,17 @@ class TestSemanticDedup:
         docs = spark.createDataFrame(
             [(int(i), f"doc {i}") for i in ids], "doc_id long, text string"
         )
-        kept = semantic_dedup(
-            docs, emb, C, eps=0.97, emb_id_col="vec_id"
-        )
-        pruned = semantic_prune(emb, C, eps=0.97)
-        n_pruned = pruned.where(~F.col("is_kept")).count()
-        assert kept.count() == len(ids) - n_pruned
+        n_pruned = {}
+        # max_cluster=2 sub-buckets every cluster before pair generation
+        for mc in (None, 2):
+            kept = semantic_dedup(
+                docs, emb, C, eps=0.97, emb_id_col="vec_id", max_cluster=mc
+            )
+            pruned = semantic_prune(emb, C, eps=0.97, max_cluster=mc)
+            n_pruned[mc] = pruned.where(~F.col("is_kept")).count()
+            assert kept.count() == len(ids) - n_pruned[mc]
+        # sub-bucketing misses cross-bucket pairs: fewer rows pruned
+        assert n_pruned[2] < n_pruned[None]
         # plan: the drop side reaches the corpus as ONE left_anti join
         plan = kept._jdf.queryExecution().executedPlan().toString()
         assert "LeftAnti" in plan

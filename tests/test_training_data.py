@@ -290,9 +290,13 @@ class TestTrainedMergesCompose:
             [(i, t) for i, t in enumerate(corpus)],
             "doc_id long, text string",
         )
+        from ocr_spark.operators.corpus import unpersist_stages
+
+        stats = {}
         seqs = materialize_training(
-            df, merges=merges, max_tokens=48, n_buckets=2, persist_ids=False
+            df, merges=merges, max_tokens=48, n_buckets=2, stats=stats
         ).collect()
+        assert unpersist_stages(stats) == 1
         assert sum(r["n_docs"] for r in seqs) == 2
         vocab = bpe_vocab(merges)
         inv = {v: k for k, v in vocab.items()}

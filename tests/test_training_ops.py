@@ -557,46 +557,42 @@ def test_parquet_rowcount_footer_only(spark, tmp_path):
 
 
 def test_repetition_signals_goldens(spark):
-    """Hand-computed goldens for the Gopher/C4 repetition signals, through
-    both the scalar functions and the staged frame (values must agree)."""
+    """Hand-computed goldens for the Gopher/C4 repetition signals of the
+    staged frame, and the quality_v2 blend reproduced from its parts."""
     from ocr_spark.operators import text_analysis as TA
 
     txt = "ab ab\nxx\nxx\nxx\nzz"  # 5 lines: 'ab ab','xx','xx','xx','zz'
     df = spark.createDataFrame([(1, txt), (2, ""), (3, "aaaa")], "doc_id long, text string")
-    scal = df.select(
-        "doc_id",
-        TA.dup_line_fraction(F.col("text")).alias("dlf"),
-        TA.dup_line_char_fraction(F.col("text")).alias("dlcf"),
-        TA.top_ngram_char_fraction(F.col("text"), 2).alias("tbf"),
-        TA.char_run_repetition(F.col("text")).alias("crr"),
-    )
-    rows = {r.doc_id: r for r in scal.collect()}
-    # 5 lines, 3 distinct → 2/5 duplicated occurrences beyond first
-    assert rows[1].dlf == pytest.approx(2 / 5)
-    # duplicated-line chars: 'xx' ×3 → 6 of 13 total line chars
-    assert rows[1].dlcf == pytest.approx(6 / 13)
-    # top bigram 'xx xx' count 2, len 5; text len 17 → 10/17
-    assert rows[1].tbf == pytest.approx(10 / 17)
-    # adjacent repeats in 'ab ab\nxx\nxx\nxx\nzz': xx,xx,xx,zz → 4 of 16
-    assert rows[1].crr == pytest.approx(4 / 16)
-    assert (rows[2].dlf, rows[2].dlcf, rows[2].tbf, rows[2].crr) == (0, 0, 0, 0)
-    assert rows[3].crr == pytest.approx(1.0)  # 'aaaa' → 3/3
-
-    staged = {
+    rows = {
         r.doc_id: r
         for r in TA.quality_repetition_select(df, F.col("text")).collect()
     }
+    # 5 lines, 3 distinct → 2/5 duplicated occurrences beyond first
+    assert rows[1].dup_line_frac == pytest.approx(2 / 5)
+    # duplicated-line chars: 'xx' ×3 → 6 of 13 total line chars
+    assert rows[1].dup_line_char_frac == pytest.approx(6 / 13)
+    # top bigram 'xx xx' count 2, len 5; text len 17 → 10/17
+    assert rows[1].top_bigram_char_frac == pytest.approx(10 / 17)
+    # adjacent repeats in 'ab ab\nxx\nxx\nxx\nzz': xx,xx,xx,zz → 4 of 16
+    assert rows[1].char_run_rep == pytest.approx(4 / 16)
+    r2 = rows[2]
+    assert (
+        r2.dup_line_frac, r2.dup_line_char_frac,
+        r2.top_bigram_char_frac, r2.char_run_rep,
+    ) == (0, 0, 0, 0)
+    assert rows[3].char_run_rep == pytest.approx(1.0)  # 'aaaa' → 3/3
+
     for i in (1, 2, 3):
-        assert staged[i].dup_line_frac == rows[i].dlf
-        assert staged[i].dup_line_char_frac == rows[i].dlcf
-        assert staged[i].top_bigram_char_frac == rows[i].tbf
-        assert staged[i].char_run_rep == rows[i].crr
+        r = rows[i]
         # blended composite reproduced from the parts
         q = df.where(F.col("doc_id") == i).select(
             TA.quality_score(F.col("text")).alias("q")
         ).collect()[0].q
-        want = q * 0.6 + (1 - rows[i].dlf) * 0.15 + (1 - rows[i].tbf) * 0.15 + (1 - rows[i].crr) * 0.1
-        assert staged[i].quality_v2 == pytest.approx(want)
+        want = (
+            q * 0.6 + (1 - r.dup_line_frac) * 0.15
+            + (1 - r.top_bigram_char_frac) * 0.15 + (1 - r.char_run_rep) * 0.1
+        )
+        assert r.quality_v2 == pytest.approx(want)
 
 
 def test_multimodal_plumbing(spark):
@@ -870,6 +866,21 @@ def test_contamination_bloom_identical_to_exact(spark):
     exact = {tuple(r) for r in contamination(corpus, ev, n=4).collect()}
     bloom = {tuple(r) for r in contamination_bloom(corpus, ev, n=4).collect()}
     assert exact and bloom == exact
+
+
+def test_contamination_bloom_leaves_no_cache(spark):
+    """The eval shingle set is cached only while the operator sizes and
+    builds the bitmap: no persistent RDD outlives the call."""
+    from ocr_spark.operators.dedup import contamination_bloom
+
+    rows = [(i, f"w{i % 7} shared tail words here w{i % 3} end") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    out = contamination_bloom(
+        df.where(F.col("doc_id") % 4 != 0), df.where(F.col("doc_id") % 4 == 0), n=3
+    ).collect()
+    assert out
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
 
 
 def test_contamination_bloom_empty_eval(spark):
