@@ -142,21 +142,11 @@ def _append_history(result: dict) -> None:
     """Persist per-run, per-query timings to BENCH/history.jsonl so
     round-over-round regression checks are mechanical (diffable history,
     independent of the driver's BENCH_r{N}.json snapshots)."""
-    import subprocess
+    from scripts.microbench import git_commit
 
     entry = dict(result)
     entry["ts"] = int(time.time())
-    try:
-        entry["commit"] = (
-            subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, timeout=10,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            ).stdout.strip()
-            or None
-        )
-    except Exception:
-        entry["commit"] = None
+    entry["commit"] = git_commit(short=True)
     try:
         bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
         os.makedirs(bench_dir, exist_ok=True)

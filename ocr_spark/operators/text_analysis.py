@@ -299,8 +299,9 @@ def fingerprint_sql(expr: str) -> str:
 # duplicate-line CHAR fraction, top-bigram char fraction, adjacent-char
 # repetition — the signals that dominate real corpus filtering, as native
 # array/lambda expressions (codegen; no explode, no UDF). Per-doc cost is
-# O(L²) in distinct lines/grams — the in-row twin of the explode-based
-# corpus machinery (dedup.ngram_topk) that handles corpus-wide stats.
+# O(L log L) in lines/grams: each array is sorted once and counted by runs
+# of equal neighbours — the in-row twin of the explode-based corpus
+# machinery (dedup.ngram_topk) that handles corpus-wide stats.
 # All fractions are RAW doubles of integer-count divisions, so both engines
 # produce bit-identical values (no round() boundary hazards).
 # ---------------------------------------------------------------------------
@@ -308,6 +309,33 @@ def fingerprint_sql(expr: str) -> str:
 
 def _nonempty_lines(col: Column) -> Column:
     return F.filter(F.split(col, "\n"), lambda x: x != F.lit(""))
+
+
+def _run_starts(a: Column) -> Column:
+    """1-based positions of the sorted array `a` where a run of equal
+    elements starts (one per distinct element; NULL for NULL a)."""
+    n = F.size(a)
+    return F.when(n == 0, F.array().cast("array<int>")).otherwise(
+        F.filter(
+            F.sequence(F.lit(1), n),
+            lambda i: F.when(i == 1, F.lit(True)).otherwise(
+                F.element_at(a, i) != F.element_at(a, i - 1)
+            ),
+        )
+    )
+
+
+def _runs(a: Column, starts: Column) -> Column:
+    """struct(s = run start, c = run length) per run of the sorted array
+    `a`, from its _run_starts: each run ends where the next one starts."""
+    nxt = F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0)))
+    return F.zip_with(
+        starts,
+        nxt,
+        lambda s, e: F.struct(
+            s.alias("s"), (F.coalesce(e, F.size(a) + 1) - s).alias("c")
+        ),
+    )
 
 
 def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2):
@@ -325,12 +353,14 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
       quality_v2           the Gopher-style composite: quality_score 60%,
                            1 - dup_line_frac 15%, 1 - top_bigram 15%,
                            1 - char_run 10%.
-    Lines, grams, distinct sets and per-distinct counts are each computed
+    Lines and grams are sorted once, then counted as runs of equal
+    neighbours: O(L log L) per doc, where one count per distinct element
+    over the whole array was O(L²) (a 20,000-word doc stalled its task for
+    tens of seconds). Sorted arrays, run starts and runs are each computed
     ONCE as intermediate columns, then the fractions read those columns.
     One expression per signal would inline the O(len) array subtrees dozens
-    of times (the count lambda appears inside max, tie-break and fraction)
-    — the plan explodes and codegen/analysis dominates. The DuckDB twin
-    (quality_repetition_sql) stages the same way with CTEs."""
+    of times — the plan explodes and codegen/analysis dominates. The DuckDB
+    twin (quality_repetition_sql) stages the same way with CTEs."""
     s1 = df.select(*id_cols, text.alias("_t"))
     # stage the token array BEFORE building grams: element_at inside a
     # transform lambda re-evaluates inline subtrees per element (the regex
@@ -358,51 +388,42 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
         grams.alias("_grams"),
         F.split(F.col("_t"), "").alias("_chars"),
     ).drop("_words")
+    # ascending sort: the same string order as array_min, so the first run
+    # of maximal length is the lexicographically smallest top gram
     s3 = s2.select(
         "*",
-        F.array_distinct("_lines").alias("_dl"),
-        F.array_distinct("_grams").alias("_dg"),
-    )
+        F.sort_array("_lines").alias("_sl"),
+        F.sort_array("_grams").alias("_sg"),
+    ).drop("_lines", "_grams")
     s4 = s3.select(
         "*",
-        F.transform(
-            F.col("_dl"),
-            lambda d: F.struct(
-                F.size(F.filter(F.col("_lines"), lambda x: x == d)).alias("c"),
-                F.length(d).alias("l"),
-            ),
-        ).alias("_dlc"),
-        F.transform(
-            F.col("_dg"),
-            lambda d: F.size(F.filter(F.col("_grams"), lambda x: x == d)),
-        ).alias("_dgc"),
+        _run_starts(F.col("_sl")).alias("_ls"),
+        _run_starts(F.col("_sg")).alias("_gs"),
     )
-    n_lines = F.size("_lines")
+    s5 = s4.select(
+        "*",
+        _runs(F.col("_sl"), F.col("_ls")).alias("_lr"),
+        _runs(F.col("_sg"), F.col("_gs")).alias("_gr"),
+    )
+    n_lines = F.size("_sl")
     dup_line = F.when(n_lines <= 0, F.lit(0.0)).otherwise(
-        (n_lines - F.size("_dl")) / n_lines
+        (n_lines - F.size("_ls")) / n_lines
     )
     dup_chars = F.aggregate(
-        F.filter(F.col("_dlc"), lambda s: s["c"] > 1),
+        F.filter(F.col("_lr"), lambda r: r["c"] > 1),
         F.lit(0).cast("long"),
-        lambda acc, s: acc + s["c"].cast("long") * s["l"].cast("long"),
+        lambda acc, r: acc
+        + r["c"].cast("long") * F.length(F.element_at("_sl", r["s"])).cast("long"),
     )
     tot_chars = F.aggregate(
-        F.col("_lines"), F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
+        F.col("_sl"), F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
     )
     dup_line_char = F.when(tot_chars <= 0, F.lit(0.0)).otherwise(dup_chars / tot_chars)
-    maxc = F.array_max("_dgc")
-    top = F.array_min(
-        F.transform(
-            F.filter(
-                F.zip_with(
-                    F.col("_dg"), F.col("_dgc"), lambda d, c: F.struct(d.alias("d"), c.alias("c"))
-                ),
-                lambda s: s["c"] == maxc,
-            ),
-            lambda s: s["d"],
-        )
-    )
-    top_frac = F.when(F.size("_dg") <= 0, F.lit(0.0)).otherwise(
+    counts = F.transform(F.col("_gr"), lambda r: r["c"])
+    maxc = F.array_max(counts)
+    top_run = F.element_at(F.col("_gr"), F.array_position(counts, maxc).cast("int"))
+    top = F.element_at(F.col("_sg"), top_run["s"])
+    top_frac = F.when(F.size("_sg") <= 0, F.lit(0.0)).otherwise(
         (maxc * F.length(top)) / F.greatest(F.length("_t"), F.lit(1))
     )
     m = F.size("_chars")
@@ -417,7 +438,7 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
         )
     )
     char_run = F.when(m <= 1, F.lit(0.0)).otherwise(reps / (m - 1))
-    s5 = s4.select(
+    s6 = s5.select(
         *id_cols,
         F.col("_t").alias("_t2"),
         dup_line.alias("dup_line_frac"),
@@ -431,7 +452,7 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
         + (1.0 - F.col("top_bigram_char_frac")) * 0.15
         + (1.0 - F.col("char_run_rep")) * 0.1
     )
-    return s5.select(
+    return s6.select(
         *id_cols,
         "dup_line_frac",
         "dup_line_char_frac",

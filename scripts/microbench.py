@@ -95,14 +95,22 @@ CASES: dict[str, Case] = {
 }
 
 
-def _commit() -> str | None:
+def git_commit(short: bool = False) -> str | None:
+    """HEAD's hash (abbreviated if `short`), with "-dirty" appended when
+    tracked files differ from it, so a run of uncommitted code is not filed
+    under its parent commit. None outside a git checkout."""
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout.strip()
+
     try:
-        out = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True, check=True
-        )
+        head = git("rev-parse", *(["--short"] if short else []), "HEAD")
+        dirty = git("status", "--porcelain", "--untracked-files=no")
     except (OSError, subprocess.CalledProcessError):
         return None
-    return out.stdout.strip()
+    return head + ("-dirty" if dirty else "")
 
 
 def run_case(spark, name: str, n: int | None = None, history: str = HISTORY) -> dict:
@@ -124,7 +132,7 @@ def run_case(spark, name: str, n: int | None = None, history: str = HISTORY) -> 
         spark.conf.set(key, saved)
     rec = {
         "case": name,
-        "commit": _commit(),
+        "commit": git_commit(),
         "cpus": cpus,
         "n": n,
         "wall_s": round(wall, 2),

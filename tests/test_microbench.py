@@ -5,9 +5,11 @@ the common schema to the given history file — never to BENCH/."""
 
 import json
 import os
+import subprocess
 
 import pytest
 
+from scripts import microbench
 from scripts.microbench import CASES, HISTORY, Case, run_case
 
 BENCH = os.path.dirname(HISTORY)
@@ -61,3 +63,26 @@ def test_failed_assert_writes_no_line(spark, tmp_path, monkeypatch):
     with pytest.raises(AssertionError):
         run_case(spark, "fails", history=str(history))
     assert not history.exists()
+
+
+def test_commit_marks_a_dirty_tree(tmp_path, monkeypatch):
+    def git(*args):
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    monkeypatch.setattr(microbench, "REPO", str(tmp_path))
+    assert microbench.git_commit() is None  # not a checkout yet
+    git("init", "-q")
+    (tmp_path / "a.txt").write_text("one\n")
+    git("add", "a.txt")
+    git("commit", "-q", "-m", "one")
+    head = git("rev-parse", "HEAD")
+    assert microbench.git_commit() == head
+    assert microbench.git_commit(short=True) == git("rev-parse", "--short", "HEAD")
+    (tmp_path / "new.txt").write_text("untracked\n")
+    assert microbench.git_commit() == head  # untracked files do not count
+    (tmp_path / "a.txt").write_text("two\n")
+    assert microbench.git_commit() == head + "-dirty"
+    assert microbench.git_commit(short=True) == git("rev-parse", "--short", "HEAD") + "-dirty"
