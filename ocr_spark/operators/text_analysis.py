@@ -354,13 +354,14 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
                            1 - dup_line_frac 15%, 1 - top_bigram 15%,
                            1 - char_run 10%.
     Lines and grams are sorted once, then counted as runs of equal
-    neighbours: O(L log L) per doc, where one count per distinct element
-    over the whole array was O(L²) (a 20,000-word doc stalled its task for
-    tens of seconds). Sorted arrays, run starts and runs are each computed
-    ONCE as intermediate columns, then the fractions read those columns.
-    One expression per signal would inline the O(len) array subtrees dozens
-    of times — the plan explodes and codegen/analysis dominates. The DuckDB
-    twin (quality_repetition_sql) stages the same way with CTEs."""
+    neighbours: O(L log L) per doc, so one long doc cannot stall its task
+    (one count per distinct element over the whole array would be O(L²):
+    tens of seconds at 20,000 words). Sorted arrays, run starts and runs
+    are each computed ONCE as intermediate columns, then the fractions read
+    those columns. One expression per signal would inline the O(len) array
+    subtrees dozens of times — the plan explodes and codegen/analysis
+    dominates. The DuckDB twin (quality_repetition_sql) stages the same way
+    with CTEs."""
     s1 = df.select(*id_cols, text.alias("_t"))
     # stage the token array BEFORE building grams: element_at inside a
     # transform lambda re-evaluates inline subtrees per element (the regex
@@ -388,8 +389,8 @@ def quality_repetition_select(df, text: Column, id_cols=("doc_id",), n: int = 2)
         grams.alias("_grams"),
         F.split(F.col("_t"), "").alias("_chars"),
     ).drop("_words")
-    # ascending sort: the same string order as array_min, so the first run
-    # of maximal length is the lexicographically smallest top gram
+    # ascending sort: the first run of maximal length is then the
+    # lexicographically smallest top gram, the twin's list_min tie rule
     s3 = s2.select(
         "*",
         F.sort_array("_lines").alias("_sl"),

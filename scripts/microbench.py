@@ -98,7 +98,8 @@ CASES: dict[str, Case] = {
 def git_commit(short: bool = False) -> str | None:
     """HEAD's hash (abbreviated if `short`), with "-dirty" appended when
     tracked files differ from it, so a run of uncommitted code is not filed
-    under its parent commit. None outside a git checkout."""
+    under its parent commit. The history files under BENCH/ do not count:
+    each run appends to them. None outside a git checkout."""
 
     def git(*args: str) -> str:
         return subprocess.run(
@@ -107,7 +108,7 @@ def git_commit(short: bool = False) -> str | None:
 
     try:
         head = git("rev-parse", *(["--short"] if short else []), "HEAD")
-        dirty = git("status", "--porcelain", "--untracked-files=no")
+        dirty = git("status", "--porcelain", "--untracked-files=no", "--", ".", ":!BENCH")
     except (OSError, subprocess.CalledProcessError):
         return None
     return head + ("-dirty" if dirty else "")

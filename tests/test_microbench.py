@@ -83,6 +83,13 @@ def test_commit_marks_a_dirty_tree(tmp_path, monkeypatch):
     assert microbench.git_commit(short=True) == git("rev-parse", "--short", "HEAD")
     (tmp_path / "new.txt").write_text("untracked\n")
     assert microbench.git_commit() == head  # untracked files do not count
+    (tmp_path / "BENCH").mkdir()
+    (tmp_path / "BENCH" / "history.jsonl").write_text("{}\n")
+    git("add", "BENCH")
+    git("commit", "-q", "-m", "history")
+    head = git("rev-parse", "HEAD")
+    (tmp_path / "BENCH" / "history.jsonl").write_text("{}\n{}\n")
+    assert microbench.git_commit() == head  # nor do appended history lines
     (tmp_path / "a.txt").write_text("two\n")
     assert microbench.git_commit() == head + "-dirty"
     assert microbench.git_commit(short=True) == git("rev-parse", "--short", "HEAD") + "-dirty"

@@ -623,8 +623,9 @@ def _long_repetitive_doc(n_words: int = 20_000) -> str:
 
 def test_repetition_signals_long_doc_match_twin(spark):
     """A 20,000-word doc with repeated lines and a tied top bigram: the
-    Spark signals equal the DuckDB twin's, in one task, in seconds (one
-    count per distinct element over the whole array took ~40 s)."""
+    Spark signals equal the DuckDB twin's, in one task, in seconds (a
+    count per distinct element over the whole array, O(L²), takes tens of
+    seconds on this doc)."""
     import time
     from collections import Counter
 
