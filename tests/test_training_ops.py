@@ -597,7 +597,7 @@ def test_repetition_signals_goldens(spark):
 
 def _long_repetitive_doc(n_words: int = 20_000) -> str:
     """~n_words of seeded prose: random lines over a 200-word vocabulary,
-    one line in six repeated, and two planted one-gram lines ('zeta eta',
+    one line in six repeated, and two planted two-word lines ('zeta eta',
     'kappa iota') 300 times each, never adjacent, so they tie as the top
     bigram."""
     import random
