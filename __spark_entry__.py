@@ -1911,11 +1911,13 @@ def q_temperature_sample(spark, sf_dir):
 def q_dup_span_removal(spark, sf_dir):
     """Exact-substring dedup (Lee et al. family): every verbatim word 6-gram
     occurring >= 2 times corpus-wide is removed from every document — one
-    partial-agg shuffle of 8-byte gram keys, broadcast dup set, narrow
-    covered-position patch join."""
+    partial-agg shuffle of 8-byte gram keys, broadcast dup set, covered
+    positions left-joined back onto the row. Fed (doc_id, text), the
+    oracle's `src`, so the row stays (doc_id, text, n_tokens, n_removed)."""
     from ocr_spark.operators.corpus_clean import dup_span_removal
 
-    return dup_span_removal(_t(spark, sf_dir, "documents"), n=6, min_count=2)
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return dup_span_removal(docs, n=6, min_count=2)
 
 
 def q_ngram_perplexity(spark, sf_dir):

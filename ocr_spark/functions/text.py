@@ -20,12 +20,9 @@ Unicode tables and runs as a SPARSE vectorized UDF (non-ASCII rows only).
 Each Spark expression has a DuckDB-SQL twin (``*_sql``) used by the oracle in
 ``__spark_entry__.py`` so the two can never drift apart silently.
 
-Whitespace-domain contract: bit-parity with Python's ``str.strip()`` (T2) is
-guaranteed over the whitespace the reference emits — {space, \\t, \\r, \\n}.
-Exotic whitespace diverges by engine (Python strips \\v \\f \\xa0 and other
-Unicode spaces; Java regex ``\\s`` is ASCII ``[ \\t\\n\\x0B\\f\\r]``; RE2
-``\\s`` is ``[ \\t\\n\\f\\r]``), so no single pattern matches all three —
-property-tested over the contractual domain in tests/test_property_text.py.
+Whitespace-domain contract: T2 strips exactly Python's ``str.isspace()``
+set (29 code points, \\xa0 and the Unicode spaces included) in both
+engines. T3 squeezes only space and tab, as the reference does.
 """
 
 from __future__ import annotations
@@ -49,17 +46,26 @@ def normalize_newlines_sql(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# T2 — strip: Python str.strip() strips ALL leading/trailing whitespace
-# (space, tab, newline, CR, FF, VT) — NOT Spark `trim` (space only).
+# T2 — strip: Python str.strip() strips ALL leading/trailing whitespace —
+# NOT Spark `trim` (space only), and not regex `\s` either (ASCII-only in
+# Java, narrower still in RE2). The class below is exactly the 29 code
+# points of Python's str.isspace(), spelled so Java regex and RE2 both read
+# it the same way.
 # ---------------------------------------------------------------------------
+
+_PY_SPACE = (
+    r"[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
+_STRIP = f"^{_PY_SPACE}|{_PY_SPACE}$"
 
 
 def strip_all(col: Column) -> Column:
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
+    return F.regexp_replace(col, _STRIP, "")
 
 
 def strip_all_sql(expr: str) -> str:
-    return rf"regexp_replace({expr}, '^\s+|\s+$', '', 'g')"
+    return f"regexp_replace({expr}, '{_STRIP}', '', 'g')"
 
 
 # ---------------------------------------------------------------------------

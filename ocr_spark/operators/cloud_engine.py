@@ -144,16 +144,38 @@ _ADAM7 = [
 ]
 
 
-def _png_inflate(idat_parts: list[bytes], expected: int) -> bytes:
-    """Inflate the joined IDAT stream to exactly `expected` bytes.
-    Decompression is bounded by the IHDR-derived size, so a crafted
-    zlib-bomb IDAT cannot balloon past the declared image."""
+# Inflate budget for a zlib stream whose format declares no decompressed
+# size (PDF content and object streams), and per zip entry (doc_formats).
+MAX_INFLATE_BYTES = 64 * 1024 * 1024
+
+
+def inflate_bounded(
+    data: bytes, limit: int, what: str, *, truncate: bool = False
+) -> bytes:
+    """Inflate the zlib stream `data` to at most `limit` bytes — the size
+    its format declares (PNG image, TIFF strip or tile, PDF image XObject),
+    else MAX_INFLATE_BYTES — so a crafted zlib bomb never balloons past it.
+    A stream holding more raises ValueError naming the budget, unless
+    `truncate` (for callers that keep only the declared prefix anyway).
+    A stream that ends early raises zlib.error, as zlib.decompress does."""
+    if limit < 1:
+        raise ValueError(f"{what}: no room to inflate into ({limit} bytes)")
     dec = zlib.decompressobj()
-    raw = dec.decompress(b"".join(idat_parts), expected)
+    out = dec.decompress(data, limit)
+    if len(out) < limit:
+        if not dec.eof:
+            raise zlib.error("incomplete or truncated stream")
+    elif not truncate and dec.decompress(dec.unconsumed_tail, 1):
+        raise ValueError(f"{what} inflates past its {limit}-byte budget")
+    return out
+
+
+def _png_inflate(idat_parts: list[bytes], expected: int) -> bytes:
+    """Inflate the joined IDAT stream to exactly `expected` bytes (the
+    IHDR-derived size)."""
+    raw = inflate_bounded(b"".join(idat_parts), expected, "PNG IDAT stream")
     if len(raw) != expected:
         raise ValueError("corrupt PNG: wrong decompressed length")
-    if dec.unconsumed_tail and dec.decompress(dec.unconsumed_tail, 1):
-        raise ValueError("corrupt PNG: stream longer than the declared image")
     return raw
 
 

@@ -101,16 +101,19 @@ def corpus_pipeline(
             >= F.lit(min_quality)
         )
         filtered = staged.where(keep).select(*docs.columns)
-    # Stage boundaries are consumed MULTIPLE times downstream (near_dedup
+    # Stage boundaries are consumed MULTIPLE times downstream: near_dedup
     # reads the filtered frame for pair generation AND the keep anti-join;
-    # dup_span reads the kept frame for grams, counts and the patch join;
-    # decon reads it again). Without persistence every consumer re-runs the
-    # whole upstream chain — the v2 quality scan alone re-executed 5+ times
-    # (measured 28 s -> much less at sf0.1), so both stages are always
-    # persisted. The handles are exposed through stats['persisted'] so
-    # long-lived sessions composing many pipelines can release them
-    # deterministically after materializing the output (unpersist_stages)
-    # instead of leaning on Spark's LRU eviction.
+    # decontamination and the output both read the last text-rewriting
+    # stage (the dup-span output when it runs, else the near-dedup output).
+    # Without persistence every consumer re-runs the whole upstream chain —
+    # the v2 quality scan alone re-executed 5+ times (measured 28 s -> much
+    # less at sf0.1), so both frames are always persisted. The near-dedup
+    # output under dup-span needs no cache: it is one broadcast anti-join
+    # against materialized cluster labels away from the cached filtered
+    # frame. The handles are exposed through stats['persisted'] so
+    # long-lived sessions can release them deterministically after
+    # materializing the output (unpersist_stages) instead of leaning on
+    # Spark's LRU eviction.
     persisted: list[DataFrame] = []
     if stats is not None:
         stats.setdefault("persisted", persisted)
@@ -125,21 +128,15 @@ def corpus_pipeline(
         stats=stats,
         **dedup_kw,
     )
-    kept = kept.persist()
-    persisted.append(kept)
     if dup_span_n is not None:
         from ocr_spark.operators.corpus_clean import dup_span_removal
 
-        ds = dup_span_removal(
+        kept = dup_span_removal(
             kept, n=dup_span_n, min_count=dup_span_min_count,
             id_col=id_col, text_col=text_col,
-        )
-        # narrow (id, cleaned-text) patch join back onto the wide row
-        kept = (
-            kept.drop(text_col)
-            .join(ds.select(id_col, text_col), id_col)
-            .select(*docs.columns)
-        )
+        ).select(*docs.columns)
+    kept = kept.persist()
+    persisted.append(kept)
     if eval_docs is not None:
         from ocr_spark.operators.dedup import contamination
 
@@ -223,29 +220,19 @@ def corpus_pipeline_sql(
     scrubbed_cols = out_cols.replace(
         "text", f"{pii_scrub_sql('text')} AS text", 1
     )
+    kd = (
+        "SELECT * FROM fd "
+        "WHERE doc_id NOT IN (SELECT id FROM cl WHERE id <> rep)"
+    )
     if dup_span_n is not None:
         from ocr_spark.operators.corpus_clean import dup_span_removal_sql
 
-        ds = dup_span_removal_sql(
-            "SELECT doc_id, text FROM kd0", n=dup_span_n,
-            min_count=dup_span_min_count,
-        )
-        span_ctes = (
-            f"kd0 AS (SELECT * FROM fd "
-            f"WHERE doc_id NOT IN (SELECT id FROM cl WHERE id <> rep)),\n"
-            f"ds AS ({ds}),\n"
-            f"kd AS (SELECT kd0.* REPLACE (ds.text AS text) "
-            f"FROM kd0 JOIN ds USING (doc_id))"
-        )
-    else:
-        span_ctes = (
-            "kd AS (SELECT * FROM fd "
-            "WHERE doc_id NOT IN (SELECT id FROM cl WHERE id <> rep))"
-        )
+        ds = dup_span_removal_sql(kd, n=dup_span_n, min_count=dup_span_min_count)
+        kd = f"SELECT * EXCLUDE (n_tokens, n_removed) FROM ({ds})"
     return f"""
 WITH fd AS ({fd}),
 cl AS ({dedup_clusters_sql(pairs)}),
-{span_ctes},
+kd AS ({kd}),
 ksh AS (SELECT DISTINCT id, {h60_sql('shingle')} AS sh
         FROM ({_shingles_sql(contamination_n, table='kd')})),
 ed AS (SELECT * FROM documents WHERE doc_id % {eval_mod} = 0),

@@ -548,10 +548,9 @@ __all__ = [
 # _exploded_shingles); the occurrence count is ONE partial-agg shuffle of
 # 8-byte gram keys; the dup-gram set (count >= min_count) is the bounded
 # boilerplate tail and is always broadcast back (no corpus-side shuffle for
-# the gram join); covered positions re-aggregate per doc (narrow rows);
-# the final patch join is narrow-into-wide on doc_id — with a bucketed doc
-# store it co-locates, otherwise AQE broadcasts when the covered-doc set is
-# small.
+# the gram join); covered positions re-aggregate per doc (narrow rows) and
+# left-join back onto the input row, whose text is rewritten in place: the
+# caller gets its own row back, so nothing downstream patch-joins the text.
 # ---------------------------------------------------------------------------
 
 
@@ -563,14 +562,15 @@ def dup_span_removal(
     text_col: str = "text",
 ) -> DataFrame:
     """Remove every occurrence of any word n-gram whose verbatim corpus-wide
-    occurrence count >= min_count. Returns (id_col, text, n_tokens,
-    n_removed): `text` has the covered word positions deleted (remaining
-    words joined with single spaces), n_removed counts deleted positions.
-    Every input doc yields exactly one output row; null text stays null."""
+    occurrence count >= min_count. Returns the input's columns in their
+    order, then n_tokens and n_removed: `text_col` has the covered word
+    positions deleted (remaining words joined with single spaces),
+    n_removed counts deleted positions. Every input doc yields exactly one
+    output row; null text stays null."""
     if n < 2:
         raise ValueError(f"n={n}: need word n-grams of at least 2")
     staged = docs.select(
-        F.col(id_col).alias("id"), ws_tokens(F.col(text_col)).alias("_w")
+        F.col(id_col).alias("_id"), ws_tokens(F.col(text_col)).alias("_w")
     )
     wc = F.col("_w")
     k = F.greatest(F.size(wc) - (n - 1), F.lit(0))
@@ -581,7 +581,7 @@ def dup_span_removal(
         ),
     )
     g = staged.select(
-        "id",
+        "_id",
         F.posexplode(
             F.when(k > 0, grams).otherwise(F.array().cast("array<bigint>"))
         ).alias("pos", "sh"),
@@ -594,7 +594,7 @@ def dup_span_removal(
     )
     cov = (
         g.join(F.broadcast(dups), "sh")
-        .groupBy("id")
+        .groupBy("_id")
         .agg(
             F.array_sort(
                 F.array_distinct(
@@ -612,8 +612,8 @@ def dup_span_removal(
     # subtrees per element, so an unstaged ws_tokens would re-split the
     # full document text once per surviving word
     joined = (
-        docs.join(cov, docs[id_col] == cov["id"], "left")
-        .drop("id")
+        docs.join(cov, docs[id_col] == cov["_id"], "left")
+        .drop("_id")
         .withColumn("_w2", ws_tokens(F.col(text_col)))
     )
     w2 = F.col("_w2")
@@ -640,24 +640,27 @@ def dup_span_removal(
             )
         )
     )
-    return joined.select(
-        F.col(id_col),
+    cleaned = (
         F.when(F.col(text_col).isNull(), F.lit(None).cast("string"))
         .otherwise(F.array_join(kept, " "))
-        .alias(text_col),
+        .alias(text_col)
+    )
+    return joined.select(
+        *[cleaned if c == text_col else F.col(c) for c in docs.columns],
         F.coalesce(F.size(w2), F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce(F.size(F.col("_cov")), F.lit(0)).cast("long").alias("n_removed"),
     )
 
 
 def dup_span_removal_sql(src: str, n: int = 8, min_count: int = 2) -> str:
-    """DuckDB twin of dup_span_removal over `src` (a subquery yielding
-    (doc_id, text)). Positions are 1-based here and 0-based in Spark — each
+    """DuckDB twin of dup_span_removal over `src` (a subquery with doc_id
+    and text columns): `src.*` with text rewritten, then n_tokens and
+    n_removed. Positions are 1-based here and 0-based in Spark — each
     engine is internally consistent, so outputs match exactly."""
     gram = h60_sql("concat_ws(' ', " + ", ".join(f"w[i+{j}]" for j in range(n)) + ")")
     return f"""
 WITH src AS ({src}),
-w AS (SELECT doc_id, text, {ws_tokens_sql('text')} AS w FROM src),
+w AS (SELECT *, {ws_tokens_sql('text')} AS w FROM src),
 g AS (SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(w) - {n - 1}, 0) + 1),
                     i -> struct_pack(pos := i, sh := {gram}))) AS s
@@ -667,12 +670,12 @@ dup AS (SELECT sh FROM gg GROUP BY sh HAVING count(*) >= {min_count}),
 cov AS (SELECT doc_id,
                list_sort(list_distinct(flatten(list(range(pos, pos + {n}))))) AS cov
         FROM gg JOIN dup USING (sh) GROUP BY doc_id)
-SELECT w.doc_id,
+SELECT w.* EXCLUDE (w) REPLACE (
        CASE WHEN w.text IS NULL THEN NULL
             -- array_to_string([]) is NULL in DuckDB, '' in Spark
             ELSE coalesce(array_to_string(list_filter(w.w,
                  (x, i) -> cov.cov IS NULL OR NOT list_contains(cov.cov, i)), ' '), '')
-       END AS text,
+       END AS text),
        coalesce(len(w.w), 0)::BIGINT AS n_tokens,
        coalesce(len(cov.cov), 0)::BIGINT AS n_removed
 FROM w LEFT JOIN cov USING (doc_id)

@@ -234,13 +234,6 @@ def incremental_dedup(
     bb = minhash_band_buckets(
         ex_survivors, k=k, bands=bands_n, n=n, id_col=id_col, text_col=text_col
     )
-    # persist spans the two consumers (corpus join + batch self-join); the
-    # cache is POPULATED during dedup_clusters' mandatory pair
-    # materialization below (an action inside this function), and the
-    # returned `kept` frame carries no bb lineage afterwards — labels come
-    # from the clusterer's own checkpoint/driver frame and ex_survivors
-    # derives from the exact stage only — so the unpersist before return
-    # is deterministic release, not a cache-miss setup
 
     # batch ↔ corpus candidates: broadcast the batch's (band, bh, id, sig)
     # against the index band scan, then verify against the corpus signature
@@ -320,7 +313,6 @@ def incremental_dedup(
             near_dropped_batch=n_drop_total - n_drop_c,
             kept=n_kept,
         )
-    bb.unpersist()
     return kept
 
 

@@ -52,12 +52,14 @@ from xml.etree import ElementTree as ET
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ocr_spark.operators.cloud_engine import MAX_INFLATE_BYTES
+
 # ---------------------------------------------------------------------------
 # hardened ZIP access (shared by DOCX / EPUB / ODT)
 # ---------------------------------------------------------------------------
 
 MAX_ZIP_ENTRIES = 4096
-MAX_ENTRY_BYTES = 64 * 1024 * 1024  # 64 MiB decompressed per entry
+MAX_ENTRY_BYTES = MAX_INFLATE_BYTES  # 64 MiB decompressed per entry
 
 
 def _zip_open(data: bytes) -> zipfile.ZipFile:

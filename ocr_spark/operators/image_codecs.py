@@ -1315,14 +1315,14 @@ def _tiff_decode_tags(data: bytes, tags: dict[int, list[int]]) -> np.ndarray:
             if compression == 5:
                 parts.append(_tiff_lzw_decode(raw, expected))
             elif compression in (8, 32946):  # Adobe/legacy Deflate
-                import zlib
+                from ocr_spark.operators.cloud_engine import inflate_bounded
 
-                dec = zlib.decompress(raw)
+                dec = inflate_bounded(raw, expected, "TIFF strip", truncate=True)
                 if len(dec) < expected:
                     raise ValueError(
                         f"Deflate strip short: {len(dec)} < {expected}"
                     )
-                parts.append(dec[:expected])
+                parts.append(dec)
             else:
                 parts.append(_packbits_decode(raw, expected))
         buf = b"".join(parts)
@@ -1500,9 +1500,9 @@ def _tiff_tiled_decode(data: bytes, tags: dict[int, list[int]]) -> np.ndarray:
                 elif compression == 5:
                     buf = _tiff_lzw_decode(raw, expected)
                 elif compression in (8, 32946):
-                    import zlib
+                    from ocr_spark.operators.cloud_engine import inflate_bounded
 
-                    buf = zlib.decompress(raw)[:expected]
+                    buf = inflate_bounded(raw, expected, "TIFF tile", truncate=True)
                 else:
                     buf = _packbits_decode(raw, expected)
                 if len(buf) < expected:

@@ -928,6 +928,8 @@ def _inflate_streams(data: bytes) -> bytes:
     import re as _re
     import zlib
 
+    from ocr_spark.operators.cloud_engine import MAX_INFLATE_BYTES, inflate_bounded
+
     out = []
     pos = 0
     for ddict, raw, k, stream_end in _iter_raw_streams(data):
@@ -935,7 +937,7 @@ def _inflate_streams(data: bytes) -> bytes:
         if not fm or _re.findall(r"/(\w+)", fm.group(1)) != ["FlateDecode"]:
             continue  # not (plain) Flate: chains hit the caller's residual check
         try:
-            inflated = zlib.decompress(raw)
+            inflated = inflate_bounded(raw, MAX_INFLATE_BYTES, "FlateDecode stream")
         except zlib.error as e:
             raise ValueError(f"FlateDecode stream failed to inflate: {e}")
         pm = _re.search(
@@ -1464,9 +1466,8 @@ def pdf_images(data: bytes) -> list[dict]:
     survive. format 'jpeg' bodies pass through; Flate/raw samples are
     re-encoded as PNG with the repo's writer."""
     import re as _re
-    import zlib
 
-    from ocr_spark.operators.cloud_engine import png_encode
+    from ocr_spark.operators.cloud_engine import inflate_bounded, png_encode
 
     if isinstance(data, str):
         data = data.encode("latin-1", "replace")
@@ -1597,9 +1598,18 @@ def pdf_images(data: bytes) -> list[dict]:
                 continue
             if filters not in ([], ["FlateDecode"]):
                 raise ValueError(f"unsupported image filter chain {filters}")
+            bm = _re.search(r"/BitsPerComponent\s+(\d+)", ddict)
+            mask = bool(_re.search(r"/ImageMask\s+true", ddict))
+            bpc = int(bm.group(1)) if bm else (1 if mask else 8)
+            colors = 1 if mask else _pdf_colorspace_colors(ddict)
             body = raw
             if filters == ["FlateDecode"]:
-                body = zlib.decompress(raw)
+                # the declared size: h rows of samples, each with the tag
+                # byte a PNG predictor adds
+                body = inflate_bounded(
+                    raw, h * ((w * colors * bpc + 7) // 8 + 1),
+                    "image XObject", truncate=True,
+                )
                 pm = _re.search(
                     r"/DecodeParm?s\s*\[?\s*(?:null\s+)?<<([^>]*)>>", ddict
                 )
@@ -1618,10 +1628,6 @@ def pdf_images(data: bytes) -> list[dict]:
                         )
                 elif _re.search(r"/DecodePar", ddict):
                     raise ValueError("unsupported /DecodeParms form")
-            bm = _re.search(r"/BitsPerComponent\s+(\d+)", ddict)
-            mask = bool(_re.search(r"/ImageMask\s+true", ddict))
-            bpc = int(bm.group(1)) if bm else (1 if mask else 8)
-            colors = 1 if mask else _pdf_colorspace_colors(ddict)
             if bpc == 1 and colors == 1:
                 stride = (w + 7) // 8
                 if len(body) < stride * h:

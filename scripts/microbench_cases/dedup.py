@@ -299,8 +299,8 @@ def bench_dupspan(spark, n: int) -> dict:
 
     Shape under test: gram+position explode (codegen) -> ONE partial-agg
     shuffle of 8-byte gram keys -> broadcast dup set -> narrow
-    covered-position re-agg -> patch join with the in-row indexed-lambda
-    filter."""
+    covered-position re-agg -> left join back onto the row with the in-row
+    indexed-lambda filter."""
     blk = (F.col("id") / 100).cast("long")
     w_shared = lambda i: F.concat(
         F.lit("s"), F.pmod(F.xxhash64(blk, i), F.lit(5000)).cast("string")

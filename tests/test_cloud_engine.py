@@ -684,3 +684,46 @@ def test_png_palette_flows_through_decode_image():
     idx = np.tile(np.arange(4, dtype=np.uint8), (4, 2))
     got = decode_image(png_encode(idx, bit_depth=2, palette=pal))
     np.testing.assert_array_equal(got, pal[idx])
+
+
+# ---------------------------------------------------------------------------
+# bounded inflate (PNG / TIFF / PDF Flate share it)
+# ---------------------------------------------------------------------------
+
+
+def test_inflate_bounded_budget_rules():
+    from ocr_spark.operators.cloud_engine import inflate_bounded
+
+    data = zlib.compress(bytes(range(256)) * 64)  # 16,384 bytes inflated
+    assert inflate_bounded(data, 16384, "s") == bytes(range(256)) * 64
+    assert inflate_bounded(data, 1 << 20, "s") == bytes(range(256)) * 64
+    with pytest.raises(ValueError, match="16383-byte budget"):
+        inflate_bounded(data, 16383, "s")
+    assert inflate_bounded(data, 100, "s", truncate=True) == bytes(range(100))
+    with pytest.raises(zlib.error):
+        inflate_bounded(data[: len(data) // 2], 1 << 20, "s")
+    with pytest.raises(ValueError):
+        inflate_bounded(data, 0, "s")
+
+
+def test_deflate_tiff_strip_bomb_keeps_declared_size():
+    """A Deflate strip that inflates to 64 MiB decodes from its declared
+    8x8 prefix (the strip's long-is-sliced rule) without inflating the
+    rest: peak traced allocation stays far below the 64 MiB."""
+    import tracemalloc
+
+    from ocr_spark.operators.image_codecs import _tiff_wrap_ifd, tiff_decode
+
+    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    co = zlib.compressobj(9)
+    body = co.compress(img.tobytes())
+    body += b"".join(co.compress(b"\0" * (1 << 20)) for _ in range(64)) + co.flush()
+    tiff = _tiff_wrap_ifd(body, 8, 8, 1, 8)
+    tracemalloc.start()
+    try:
+        out = tiff_decode(tiff)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert np.array_equal(out, img)
+    assert peak < 8 << 20

@@ -275,3 +275,48 @@ def test_media_envelopes_across_chunk_boundaries(backend):
         assert got["spans"][:i] + got["spans"][i + 1 :] == (
             want["spans"][:i] + want["spans"][i + 1 :]
         )
+
+
+def _flate_bomb_pdf(inflated_mib: int) -> str:
+    """A one-page PDF (latin-1 text, as pdf spans carry it) whose single
+    FlateDecode content stream inflates to `inflated_mib` MiB of inert
+    whitespace; compressed chunk by chunk, so building it stays small."""
+    import zlib
+
+    from ocr_spark.operators.pdf_layout import pdf_write
+
+    co = zlib.compressobj(9)
+    chunk = b" " * (1 << 20)
+    bomb = b"".join(co.compress(chunk) for _ in range(inflated_mib)) + co.flush()
+    pdf = pdf_write([{"x": 40, "y": 50, "text": "never reached"}], compress=True)
+    head, rest = pdf.split(b"stream\n", 1)
+    body, tail = rest.split(b"\nendstream", 1)
+    head = head.replace(b"/Length %d" % len(body), b"/Length %d" % len(bomb))
+    return (head + b"stream\n" + bomb + b"\nendstream" + tail).decode("latin-1")
+
+
+def test_flate_bomb_pdf_fails_fast_per_doc():
+    """A FlateDecode stream is inflated against a budget: a 256 MiB bomb in
+    a few hundred KB becomes that doc's pdf error envelope in seconds (it
+    once inflated whole and scanned for minutes, then yielded "") and the
+    docs beside it extract normally."""
+    import time
+
+    from ocr_spark.operators.pdf_layout import pdf_write
+
+    bomb = _flate_bomb_pdf(256)
+    assert len(bomb) < 1 << 20
+    good = pdf_write([{"x": 40, "y": 50, "text": "plain page"}], compress=True)
+    docs = [
+        [("text", "before", None, 0)],
+        [("pdf", bomb, None, 0), ("text", "kept", None, 1)],
+        [("pdf", good.decode("latin-1"), None, 0)],
+    ]
+    t0 = time.perf_counter()
+    out = _run(_batch(docs))
+    assert time.perf_counter() - t0 < 10
+    assert out["d1"]["error_source"] == "pdf"
+    assert "budget" in out["d1"]["error"]
+    for d in ("d0", "d2"):
+        assert out[d]["error"] is None and out[d]["error_source"] is None
+    assert [s["text"] for s in out["d2"]["spans"]] == ["plain page"]

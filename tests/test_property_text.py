@@ -23,12 +23,13 @@ RULES = [["hte", "the"], ["ab", "XY"], ["--", "—"]]
 
 # characters that stress every operator: whitespace variants, CR/LF, rule
 # fragments, hyphens, unicode letters for the hyphenation repair class.
-# Whitespace domain is {space, tab, CR, LF} — the reference's own domain:
-# Python str.strip() also eats exotic whitespace (\v \f \xa0, unicode
-# spaces) where Java/RE2 \s is ASCII-only, so bit-parity is contractually
-# scoped to the whitespace the OCR reference emits (functions/text.py).
+# The whitespace includes code points outside ASCII and outside regex \s
+# (\v \x1f NEL NBSP LINE SEPARATOR IDEOGRAPHIC SPACE): T2 must strip
+# exactly what Python's str.strip() strips, in all three implementations.
 _ALPHABET = st.sampled_from(
-    list(" \t\n\r") + list("abehtAB-") + ["\r\n", "--", "hte", "ab", "é", "ß"]
+    list(" \t\n\r\x0b\x1f\x85\xa0\u2028\u3000")
+    + list("abehtAB-")
+    + ["\r\n", "--", "hte", "ab", "é", "ß"]
 )
 _TEXTS = st.lists(_ALPHABET, min_size=0, max_size=30).map("".join)
 

@@ -1,7 +1,7 @@
 """Regression tests for the round-5 ADVICE fixes:
 - rule_filter twins agree on wordless docs (empty/whitespace-only/null)
-- dup_span_removal honors a non-default text_col end-to-end (incl. the
-  corpus_pipeline patch join contract)
+- dup_span_removal honors a non-default text_col end-to-end (incl. in
+  corpus_pipeline) and hands back the caller's row
 - blocklist_filter_sql keeps the corpus when the blocklist contains NULL
 - temperature_sample tolerates NULL strata (excluded, never sampled)
 - phash64 returns a signed 64-bit int in pure Python (numpy>=2.0 raises
@@ -63,7 +63,32 @@ class TestDupSpanRemovalTextCol:
         # the shared 6-gram 'a b c d e f' is removed from both docs
         assert rows[1] == "g h" and rows[2] == "x y"
 
-    def test_pipeline_patch_join_with_text_col(self, spark):
+    @pytest.mark.parametrize("text_col", ["text", "body"])
+    def test_returns_the_callers_row(self, spark, text_col):
+        """The input's columns in their order, text rewritten in place,
+        then n_tokens and n_removed; the other columns pass through."""
+        from ocr_spark.operators.corpus_clean import dup_span_removal
+
+        rows = [
+            ("en", 1, "a b c d e f g h", 15, "web"),
+            ("de", 2, "a b c d e f x y", None, "books"),
+            (None, 3, None, 0, "web"),
+        ]
+        docs = spark.createDataFrame(
+            rows,
+            f"lang string, doc_id long, {text_col} string, n_chars long, "
+            "source string",
+        )
+        out = dup_span_removal(docs, n=6, min_count=2, text_col=text_col)
+        assert out.columns == docs.columns + ["n_tokens", "n_removed"]
+        got = sorted((tuple(r) for r in out.collect()), key=lambda t: t[1])
+        assert got == [
+            ("en", 1, "g h", 15, "web", 8, 6),
+            ("de", 2, "x y", None, "books", 8, 6),
+            (None, 3, None, 0, "web", 0, 0),
+        ]
+
+    def test_pipeline_dup_span_with_text_col(self, spark):
         from ocr_spark.operators.corpus import corpus_pipeline
 
         docs = spark.createDataFrame(

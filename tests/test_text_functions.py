@@ -147,3 +147,42 @@ def test_extract_text_order_t7_before_collapse(spark):
     df = spark.createDataFrame([(inp,)], "t string")
     got = df.select(TX.extract_text(F.col("t")).alias("o")).head()[0]
     assert got == expected
+
+
+# every code point Python's str.isspace() accepts (all lie below U+3001)
+_PY_SPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+
+
+def test_strip_is_python_strip_in_both_engines(spark):
+    """T2 strips exactly str.strip()'s set through extract_documents and
+    the DuckDB twin — not regex \\s, which is ASCII-only in Java and RE2
+    (NBSP, ideographic space, INFORMATION SEPARATORs, NEL, LINE SEPARATOR
+    came out unstripped)."""
+    import duckdb
+
+    from ocr_spark.pipeline import extract_documents
+    from ocr_spark.schema import DOC_SCHEMA
+
+    assert len(_PY_SPACE) == 29
+    texts = [
+        "\xa0hello\u3000",
+        "\x1chi\x1f",
+        "x\u2028",
+        "\x85y",
+        _PY_SPACE + "mid dle" + _PY_SPACE,
+    ]
+    doc = {
+        "doc_id": "d0",
+        "spans": [
+            {"kind": "text", "text": t, "media_ref": None, "offset": i}
+            for i, t in enumerate(texts)
+        ],
+    }
+    out = extract_documents(spark.createDataFrame([doc], DOC_SCHEMA)).collect()
+    got = [s["text"] for s in out[0]["spans"]]
+    want = [R.extract_text(t) for t in texts]
+    assert want[:4] == ["hello", "hi", "x", "y"]
+    assert got == want
+    con = duckdb.connect()
+    sql = f"SELECT {TX.extract_text_sql('t')} FROM (SELECT ?::VARCHAR AS t)"
+    assert [con.execute(sql, [t]).fetchone()[0] for t in texts] == want
