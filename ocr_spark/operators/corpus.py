@@ -129,11 +129,11 @@ def corpus_pipeline(
         **dedup_kw,
     )
     if dup_span_n is not None:
-        from ocr_spark.operators.corpus_clean import dup_span_removal
+        from ocr_spark.operators.corpus_clean import _dup_span_rewrite
 
-        kept = dup_span_removal(
-            kept, n=dup_span_n, min_count=dup_span_min_count,
-            id_col=id_col, text_col=text_col,
+        kept = _dup_span_rewrite(
+            kept, dup_span_n, dup_span_min_count, id_col, text_col,
+            counters=False,
         ).select(*docs.columns)
     kept = kept.persist()
     persisted.append(kept)
@@ -225,10 +225,11 @@ def corpus_pipeline_sql(
         "WHERE doc_id NOT IN (SELECT id FROM cl WHERE id <> rep)"
     )
     if dup_span_n is not None:
-        from ocr_spark.operators.corpus_clean import dup_span_removal_sql
+        from ocr_spark.operators.corpus_clean import _dup_span_rewrite_sql
 
-        ds = dup_span_removal_sql(kd, n=dup_span_n, min_count=dup_span_min_count)
-        kd = f"SELECT * EXCLUDE (n_tokens, n_removed) FROM ({ds})"
+        kd = _dup_span_rewrite_sql(
+            kd, dup_span_n, dup_span_min_count, counters=False
+        )
     return f"""
 WITH fd AS ({fd}),
 cl AS ({dedup_clusters_sql(pairs)}),

@@ -566,7 +566,25 @@ def dup_span_removal(
     order, then n_tokens and n_removed: `text_col` has the covered word
     positions deleted (remaining words joined with single spaces),
     n_removed counts deleted positions. Every input doc yields exactly one
-    output row; null text stays null."""
+    output row; null text stays null. An input that already has an
+    n_tokens or n_removed column raises ValueError rather than return two
+    columns of one name."""
+    clash = [c for c in ("n_tokens", "n_removed") if c in docs.columns]
+    if clash:
+        raise ValueError(
+            f"dup_span_removal: input already has column(s) {clash}, "
+            "which the output appends as counters"
+        )
+    return _dup_span_rewrite(docs, n, min_count, id_col, text_col, counters=True)
+
+
+def _dup_span_rewrite(
+    docs: DataFrame, n: int, min_count: int, id_col: str, text_col: str,
+    counters: bool,
+) -> DataFrame:
+    """dup_span_removal's row: the input's columns with `text_col`
+    rewritten, then the two counters only when `counters` is set (the
+    corpus pipeline keeps the caller's columns and nothing else)."""
     if n < 2:
         raise ValueError(f"n={n}: need word n-grams of at least 2")
     staged = docs.select(
@@ -645,19 +663,39 @@ def dup_span_removal(
         .otherwise(F.array_join(kept, " "))
         .alias(text_col)
     )
-    return joined.select(
-        *[cleaned if c == text_col else F.col(c) for c in docs.columns],
-        F.coalesce(F.size(w2), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.size(F.col("_cov")), F.lit(0)).cast("long").alias("n_removed"),
-    )
+    row = [cleaned if c == text_col else F.col(c) for c in docs.columns]
+    if counters:
+        row += [
+            F.coalesce(F.size(w2), F.lit(0)).cast("long").alias("n_tokens"),
+            F.coalesce(F.size(F.col("_cov")), F.lit(0)).cast("long").alias("n_removed"),
+        ]
+    return joined.select(*row)
 
 
 def dup_span_removal_sql(src: str, n: int = 8, min_count: int = 2) -> str:
     """DuckDB twin of dup_span_removal over `src` (a subquery with doc_id
     and text columns): `src.*` with text rewritten, then n_tokens and
     n_removed. Positions are 1-based here and 0-based in Spark — each
-    engine is internally consistent, so outputs match exactly."""
+    engine is internally consistent, so outputs match exactly. A `src`
+    that already has an n_tokens or n_removed column fails to bind
+    (ambiguous reference) rather than return two columns of one name."""
+    return _dup_span_rewrite_sql(src, n, min_count, counters=True)
+
+
+def _dup_span_rewrite_sql(src: str, n: int, min_count: int, counters: bool) -> str:
+    """dup_span_removal_sql's text; without `counters` the row is `src.*`
+    with text rewritten and nothing appended (corpus_pipeline_sql)."""
     gram = h60_sql("concat_ws(' ', " + ", ".join(f"w[i+{j}]" for j in range(n)) + ")")
+    counter_cols = guard = ""
+    if counters:
+        counter_cols = """,
+       coalesce(len(w.w), 0)::BIGINT AS n_tokens,
+       coalesce(len(cov.cov), 0)::BIGINT AS n_removed"""
+        # the guard's unqualified names are ambiguous, so DuckDB refuses to
+        # bind, when src already has either counter column
+        guard = """
+CROSS JOIN (SELECT NULL AS n_tokens, NULL AS n_removed) clash
+WHERE n_tokens IS NULL AND n_removed IS NULL"""
     return f"""
 WITH src AS ({src}),
 w AS (SELECT *, {ws_tokens_sql('text')} AS w FROM src),
@@ -675,10 +713,8 @@ SELECT w.* EXCLUDE (w) REPLACE (
             -- array_to_string([]) is NULL in DuckDB, '' in Spark
             ELSE coalesce(array_to_string(list_filter(w.w,
                  (x, i) -> cov.cov IS NULL OR NOT list_contains(cov.cov, i)), ' '), '')
-       END AS text),
-       coalesce(len(w.w), 0)::BIGINT AS n_tokens,
-       coalesce(len(cov.cov), 0)::BIGINT AS n_removed
-FROM w LEFT JOIN cov USING (doc_id)
+       END AS text){counter_cols}
+FROM w LEFT JOIN cov USING (doc_id){guard}
 """.strip()
 
 

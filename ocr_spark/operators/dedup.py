@@ -137,6 +137,12 @@ def _ensure_parallel(docs: DataFrame) -> DataFrame:
     return docs
 
 
+def _words_sql(text_col: str) -> str:
+    """Spark SQL text: lower-cased [a-z0-9]+ words of `text_col`."""
+    c = text_col.replace("`", "``")
+    return f"filter(split(lower(`{c}`), '[^a-z0-9]+'), x -> x != '')"
+
+
 def _exploded_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     """(id, shingle) with duplicates — shared base for the distinct variants.
 
@@ -146,21 +152,19 @@ def _exploded_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> D
     per row (measured 20× slower at sf0.1). Referencing the materialized
     `_w` column makes each element_at O(1); Catalyst's CollapseProject keeps
     multi-referenced non-cheap aliases staged (collapseProjectAlwaysInline
-    defaults false)."""
-    docs = _ensure_parallel(docs)
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda x: x != ""
+    defaults false). Both projections are sent as SQL text: one parse on
+    the JVM instead of a Py4J round trip per Column node."""
+    staged = _ensure_parallel(docs).select(
+        F.col(id_col).alias("id"), F.expr(_words_sql(text_col)).alias("_w")
     )
-    staged = docs.select(F.col(id_col).alias("id"), words.alias("_w"))
-    w = F.col("_w")
-    k = F.greatest(F.size(w) - (n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(0), k - 1),
-        lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(n)]),
-    )
+    k = f"greatest(size(_w) - {n - 1}, 0)"
+    gram = ", ".join(f"element_at(_w, i + {j + 1})" for j in range(n))
     return staged.select(
         "id",
-        F.explode(F.when(k > 0, grams).otherwise(F.array())).alias("shingle"),
+        F.expr(
+            f"explode(CASE WHEN {k} > 0 THEN transform(sequence(0, {k} - 1), "
+            f"i -> concat_ws(' ', {gram})) ELSE array() END)"
+        ).alias("shingle"),
     )
 
 
@@ -473,33 +477,42 @@ WHERE round(len(list_filter(range(1, {k + 1}), i -> sig_a[i] = sig_b[i])) / {flo
 # ---------------------------------------------------------------------------
 
 
+def _simhash_sig_sql(h: str, bits: int) -> str:
+    """Aggregate SQL text of the signature over token hashes `h`, valid in
+    Spark and DuckDB alike: bit i is set when more tokens have bit i set
+    than not. Bit 63's weight is spelled as BIGINT arithmetic: 2**63 is no
+    BIGINT literal, and DuckDB has no shiftleft while its << overflows."""
+    def weight(i: int) -> str:
+        return "(-9223372036854775807 - 1)" if i == 63 else f"{1 << i}::BIGINT"
+
+    return " + ".join(
+        f"(CASE WHEN sum(CASE WHEN (({h} >> {i}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
+        f"THEN {weight(i)} ELSE 0 END)"
+        for i in range(bits)
+    )
+
+
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 60) -> DataFrame:
     """(id, simhash:bigint) — per-bit majority vote over token hashes.
 
     Token hash is the cross-engine md5 prefix: h32 for bits<=32, h60 above
-    (60-bit default — the pigeonhole chunk join needs wide signatures, else
-    chunks are 4-5 bits and candidate buckets explode). One explode + one
-    groupBy(sum) shuffle.
-    """
-    tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda x: x != ""
-    )
-    tok = _ensure_parallel(docs).select(F.col(id_col).alias("id"), F.explode(tokens).alias("t"))
+    (60-bit default — the pigeonhole chunk buckets need wide signatures,
+    else chunks are 4-5 bits and candidate buckets explode). One explode +
+    one groupBy(sum) shuffle. The hash is projected once and the 60 votes
+    and their weighted sum go to the JVM as one SQL text
+    (_simhash_sig_sql, shared with simhash_sql): as Column trees they cost
+    thousands of Py4J round trips per call."""
     from ocr_spark.operators.text_analysis import h60
 
+    tok = _ensure_parallel(docs).select(
+        F.col(id_col).alias("id"), F.explode(F.expr(_words_sql(text_col))).alias("t")
+    )
     h = (h32 if bits <= 32 else h60)(F.col("t"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = tok.groupBy("id").agg(*votes)
-    sig = None
-    for i in range(bits):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else (sig + bit)
-    return agg.select("id", sig.alias("simhash"))
+    return (
+        tok.select("id", h.alias("h"))
+        .groupBy("id")
+        .agg(F.expr(_simhash_sig_sql("h", bits)).alias("simhash"))
+    )
 
 
 def simhash_sql(
@@ -509,17 +522,11 @@ def simhash_sql(
     from ocr_spark.operators.text_analysis import h32_sql, h60_sql
 
     h = (h32_sql if bits <= 32 else h60_sql)("t")
-    votes = ", ".join(
-        f"sum(CASE WHEN (({h} >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(bits)
-    )
-    sig = " + ".join(f"CASE WHEN b{i} > 0 THEN {2 ** i}::BIGINT ELSE 0 END" for i in range(bits))
     return (
-        f"SELECT id, ({sig}) AS simhash FROM ("
-        f"SELECT id, {votes} FROM ("
+        f"SELECT id, ({_simhash_sig_sql(h, bits)}) AS simhash FROM ("
         f"SELECT {id_col} AS id, unnest(list_filter(regexp_split_to_array("
         f"lower({text_expr}), '[^a-z0-9]+'), x -> x <> '')) AS t FROM {table}) "
-        f"GROUP BY id)"
+        f"GROUP BY id"
     )
 
 
@@ -527,31 +534,17 @@ def simhash_chunk_keys(sig: DataFrame, max_hamming: int = 3, bits: int = 60) -> 
     """(id, simhash) → (id, simhash, chunk, cv): the pigeonhole chunk keys.
     Chunk sizes partition ALL bits (pigeonhole requires full coverage); the
     first (bits % n_chunks) chunks get one extra bit. Exposed separately so
-    scale benches can measure bucket occupancy without running the join."""
+    scale benches can measure bucket occupancy without running the pairs."""
     n_chunks = max_hamming + 1
     base, extra = divmod(bits, n_chunks)
-    starts, sizes, pos = [], [], 0
+    structs, pos = [], 0
     for ci in range(n_chunks):
         sz = base + (1 if ci < extra else 0)
-        starts.append(pos)
-        sizes.append(sz)
+        mask = (1 << sz) - 1 if sz < 64 else -1
+        # shiftright, not >>: Spark's parser rejects >> inside array(...)
+        structs.append(f"named_struct('chunk', {ci}, 'cv', shiftright(simhash, {pos}) & {mask})")
         pos += sz
-    chunks = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(ci).alias("chunk"),
-                    F.shiftright(F.col("simhash"), starts[ci])
-                    .bitwiseAND(F.lit((1 << sizes[ci]) - 1))
-                    .alias("cv"),
-                )
-                for ci in range(n_chunks)
-            ]
-        )
-    ).alias("cc")
-    return sig.select("id", "simhash", chunks).select(
-        "id", "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.cv").alias("cv")
-    )
+    return sig.select("id", "simhash", F.expr(f"inline(array({', '.join(structs)}))"))
 
 
 def simhash_near_pairs(
@@ -562,15 +555,20 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Near-dup candidates: split the signature into (max_hamming+1) chunks —
-    any pair within hamming distance must share one exact chunk (pigeonhole);
-    equi-join per chunk, then verify with bit_count(xor).
+    """Near-dup candidates (id_a < id_b, hamming): split the signature into
+    (max_hamming+1) chunks — any pair within hamming distance must share one
+    exact chunk (pigeonhole). The chunk keys are aggregated once by
+    (chunk, cv) into sorted member lists; each bucket emits its pairs
+    (every member with the members after it), verified with bit_count(xor)
+    and de-duplicated across chunks: the signature is computed once and
+    its keyed rows shuffle once. Rows with a null id or signature join no
+    bucket.
 
     Scale guard: chunk-key cardinality is 2^(bits/(max_hamming+1)); narrow
-    chunks make within-bucket candidate counts grow O(N²/2^chunk_bits). The
-    default (max_hamming=3 over 60 bits → 15-bit chunks, 32k buckets) is the
-    scale-safe parameterization; wider radii at corpus scale should use
-    two-level chunk+verify instead."""
+    chunks make bucket sizes, and the pairs each bucket emits, grow
+    O(N²/2^chunk_bits). The default (max_hamming=3 over 60 bits → 15-bit
+    chunks, 32k buckets) is the scale-safe parameterization; wider radii at
+    corpus scale should use two-level chunk+verify instead."""
     n_chunks = max_hamming + 1
     if bits // n_chunks < 12:
         import warnings
@@ -585,24 +583,22 @@ def simhash_near_pairs(
         )
     if sig is None:
         sig = simhash(docs, bits=bits, id_col=id_col, text_col=text_col)
-    keyed = simhash_chunk_keys(sig, max_hamming=max_hamming, bits=bits)
-    a, b = keyed.alias("a"), keyed.alias("b")
+    buckets = (
+        simhash_chunk_keys(sig, max_hamming=max_hamming, bits=bits)
+        .where("id IS NOT NULL AND cv IS NOT NULL")
+        .groupBy("chunk", "cv")
+        .agg(F.expr("sort_array(collect_list(struct(id, simhash)))").alias("m"))
+        .where("size(m) > 1")
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.id") < F.col("b.id")),
+        buckets.selectExpr("posexplode(m) AS (i, a)", "m")
+        .selectExpr("a", "explode(slice(m, i + 2, size(m))) AS b")
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b",
+            "bit_count(a.simhash ^ b.simhash) AS hamming",
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
+        .where(f"id_a < id_b AND hamming <= {max_hamming}")
         .dropDuplicates(["id_a", "id_b"])
-        .where(F.col("hamming") <= max_hamming)
     )
 
 

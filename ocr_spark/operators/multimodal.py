@@ -721,7 +721,7 @@ def phash64(gray: "np.ndarray") -> int:
     bit i = coefficient > median of the 63 non-DC coefficients (DC bit
     forced 0 — it only encodes global brightness). Near-duplicate images
     (re-encodes, slight crops/noise) land within a small hamming distance;
-    pair generation then reuses the pigeonhole chunk join."""
+    pair generation then reuses the pigeonhole chunk buckets."""
     from ocr_spark.operators.media_kernels import block_mean_resize
 
     g = block_mean_resize(np.asarray(gray, dtype=np.float64), 32, 32)

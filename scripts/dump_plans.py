@@ -34,7 +34,7 @@ SHOW = [
     ("blocklist_filter", "domain blocklist: BroadcastHashJoin LeftAnti on the derived domain — the corpus never shuffles"),
     ("dup_span_removal", "exact-substring dedup: one partial-agg shuffle of gram keys, broadcast dup set, narrow covered-position re-agg left-joined back onto the row"),
     ("corpus_pipeline_full", "the COMPLETE hygiene chain (quality v2 + near-dedup + span removal + decon + PII): codegen'd filters, broadcast drop joins, no corpus-wide shuffle outside the dedup pair stage"),
-    ("image_near_dups", "image pHash near-dup: one Arrow hashing stage, pigeonhole chunk equi-join (never a cross join), bit_count verify"),
+    ("image_near_dups", "image pHash near-dup: one Arrow hashing stage, pigeonhole chunk keys grouped by bucket (no join, never a cross join), in-bucket pairs, bit_count verify"),
     ("ngram_perplexity", "trigram Stupid-Backoff LM: five BroadcastHashJoins + broadcast totals on the scoring side — the corpus shuffles ONLY at the per-doc re-agg; training shuffles gram keys with map-side partial aggs"),
 ]
 

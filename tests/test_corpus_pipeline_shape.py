@@ -92,12 +92,16 @@ def _run(corpus, eval_docs, quality):
     return out, stats
 
 
-def _walk(node, seen: list) -> None:
-    """Collect the class names of an executed plan, descending through
-    adaptive query stages and reused exchanges but not into cached
-    relations (an InMemoryTableScan's relation is an inner child)."""
+def _walk(node, seen: list, record=None) -> None:
+    """Collect (class name, join type) per node of an executed plan, or
+    `record(node)` when given, descending through adaptive query stages and
+    reused exchanges but not into cached relations (an InMemoryTableScan's
+    relation is an inner child)."""
     name = node.getClass().getSimpleName()
-    seen.append((name, str(node.joinType()) if "Join" in name else None))
+    if record is not None:
+        seen.append(record(node))
+    else:
+        seen.append((name, str(node.joinType()) if "Join" in name else None))
     if name == "AdaptiveSparkPlanExec":
         kids = [node.executedPlan()]
     elif name.endswith("QueryStageExec"):
@@ -108,7 +112,7 @@ def _walk(node, seen: list) -> None:
         ch = node.children()
         kids = [ch.apply(i) for i in range(ch.size())]
     for k in kids:
-        _walk(k, seen)
+        _walk(k, seen, record)
 
 
 def test_output_plan_reads_the_cached_stage_once(spark, frames):

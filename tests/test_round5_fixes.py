@@ -113,6 +113,52 @@ class TestDupSpanRemovalTextCol:
         assert "body" in out.columns
         assert out.count() > 0
 
+    CLASH_ROWS = [
+        (1, "alpha beta gamma the river runs cold under grey stone bridges", 7),
+        (2, "alpha beta gamma a small market sells bread and fresh fish daily", 8),
+        (3, "nine tall ships sailed north past the lighthouse before dawn", 9),
+    ]
+
+    def test_counter_name_clash_is_refused(self, spark):
+        from ocr_spark.operators.corpus_clean import (
+            dup_span_removal,
+            dup_span_removal_sql,
+        )
+
+        docs = spark.createDataFrame(
+            self.CLASH_ROWS, "doc_id long, text string, n_tokens long"
+        )
+        with pytest.raises(ValueError, match="n_tokens"):
+            dup_span_removal(docs, n=3)
+        con = duckdb.connect()
+        src = "SELECT * FROM (VALUES (1, 'a b c', 5)) t(doc_id, text, n_removed)"
+        with pytest.raises(duckdb.BinderException, match="n_removed"):
+            con.execute(dup_span_removal_sql(src, n=2))
+
+    def test_pipeline_keeps_callers_counter_columns(self, spark):
+        """corpus_pipeline returns the input's own columns with only the
+        text rewritten: a user n_tokens column comes through unchanged
+        in both engines."""
+        import pandas as pd
+
+        from ocr_spark.operators.corpus import corpus_pipeline, corpus_pipeline_sql
+
+        docs = spark.createDataFrame(
+            self.CLASH_ROWS, "doc_id long, text string, n_tokens long"
+        )
+        out = corpus_pipeline(docs, dup_span_n=3, min_quality=0.0, scrub=False)
+        assert out.columns == docs.columns
+        got = sorted(tuple(r) for r in out.collect())
+        assert [(i, n) for i, _, n in got] == [(1, 7), (2, 8), (3, 9)]
+        assert got[0][1] == "the river runs cold under grey stone bridges"
+        con = duckdb.connect()
+        con.register("src", pd.DataFrame(self.CLASH_ROWS, columns=docs.columns))
+        con.execute("CREATE TABLE documents AS SELECT * FROM src")
+        sql = corpus_pipeline_sql(
+            min_quality=0.0, dup_span_n=3, out_cols="doc_id, text, n_tokens"
+        )
+        assert sorted(con.execute(sql).fetchall()) == got
+
 
 class TestBlocklistSqlNullEntry:
     def test_null_in_blocklist_keeps_corpus(self):
