@@ -877,7 +877,7 @@ def near_dedup(
     against the full corpus — an equi-join on the id, broadcast when the
     drop set is small, shuffle otherwise. AQE picks."""
     if method == "exact":
-        return exact_dedup(docs, id_col=id_col, text_col=text_col)
+        return exact_dedup(docs, id_col=id_col, text_col=text_col).select(*docs.columns)
     if method == "minhash":
         pairs = minhash_lsh_pairs(docs, id_col=id_col, text_col=text_col, **method_kw)
     elif method == "simhash":

@@ -16,10 +16,11 @@ ONCE with a fixed k-means codebook, so pair generation is bounded per
 cluster (sum n_i^2 instead of n^2) and the keep rule is the paper's
 semantic one — from each duplicate clique keep the example FARTHEST from
 its cluster centroid (low-similarity examples carry the most information;
-the near-centroid members are the redundant ones). Both paths share
-dedup_clusters for clique resolution, so cluster-resolution scale behavior
-(driver union-find below a pair budget, large/small-star above it) is
-identical.
+the near-centroid members are the redundant ones). Both shapes score pairs
+with the same kernel (similarity.within_bucket_pairs) and share
+dedup_clusters for clique resolution, so pair scoring and cluster-resolution
+scale behavior (driver union-find below a pair budget, large/small-star
+above it) are identical.
 
 Scale shape at 10^12 docs:
   * `kmeans_train` — per iteration ONE map-side-combined shuffle of
@@ -29,7 +30,7 @@ Scale shape at 10^12 docs:
     corpus_clean integer policy applied to training).
   * `semantic_prune` — one narrow map for assignment (the staged-projection
     ivf_assign pattern from similarity.py), ONE shuffle on the cluster key
-    for the within-cluster self-join, clique resolution on the (small)
+    into the grouped pair kernel, clique resolution on the (small)
     duplicate subgraph, and a final broadcast keeper join. `max_cluster`
     sub-buckets oversized clusters by a doc-id hash — the same
     cap-vs-recall guard as jaccard's shingle_freq_cap (pairs across
@@ -44,7 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import dedup_clusters
-from ocr_spark.operators.similarity import _dot, _norm, cos_array
+from ocr_spark.operators.similarity import _norm, cos_array, within_bucket_pairs
 from ocr_spark.operators.text_analysis import h32
 
 _MICRO = 1_000_000
@@ -136,57 +137,6 @@ def _resolve_assign(centroids: "np.ndarray") -> str:
     (the zero-Python codegen path, whose expression tree grows by k x dim
     nodes and hits JVM method-size limits on large codebooks)."""
     return "arrow" if centroids.size > _ARROW_ASSIGN_CELLS else "expr"
-
-
-def _pairs_grouped(staged: DataFrame, eps: float) -> DataFrame:
-    """Within-cluster candidate pairs via ONE applyInPandas stage: each
-    cluster's members score as a blocked BLAS matmul (n_i x dim against
-    n_i x dim), emitting only pairs >= eps — the scale path for pair
-    generation. The equi-join alternative materializes every candidate
-    pair ROW through the join and pays an interpreted HOF dot per pair
-    (~270k pairs/s measured); this scores ~n_i^2/2 candidates per cluster
-    in vectorized float64 (tens of millions of pairs/s) and never
-    materializes the non-matches. Same 6dp round + zero-norm floor
-    CONVENTION as the join path (parity asserted on fixtures; as with the
-    assign paths, the float association differs pre-round, so a pair
-    sitting exactly on the eps boundary at 1-ulp precision is not
-    guaranteed to match across paths — the path follows the assign path,
-    so one codebook always pairs through the same one). Memory is
-    bounded by BLOCK x n_i doubles per task — pair max_cluster with it so
-    n_i stays sane; ids sort within the group so id_a < id_b by position."""
-    import pandas as pd
-
-    BLOCK = 1024
-    id_type = staged.schema["id"].dataType.simpleString()
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []})
-        pdf = pdf.sort_values("id", kind="stable")
-        X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        ids = pdf["id"].to_numpy()
-        nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-        Xn = X / nrm
-        outs_a, outs_b = [], []
-        for lo in range(0, n - 1, BLOCK):
-            hi = min(lo + BLOCK, n - 1)
-            S = np.round(Xn[lo:hi] @ Xn[lo + 1 :].T, 6)  # rows i, cols j>lo
-            ri, cj = np.nonzero(S >= eps)
-            keep = (lo + 1 + cj) > (lo + ri)  # strict upper triangle only
-            outs_a.append(ids[lo + ri[keep]])
-            outs_b.append(ids[lo + 1 + cj[keep]])
-        if not outs_a:
-            return pd.DataFrame({"id_a": [], "id_b": []})
-        return pd.DataFrame(
-            {"id_a": np.concatenate(outs_a), "id_b": np.concatenate(outs_b)}
-        )
-
-    return (
-        staged.select("_key", "id", "_v")
-        .groupBy("_key")
-        .applyInPandas(fn, schema=f"id_a {id_type}, id_b {id_type}")
-    )
 
 
 def kmeans_train(
@@ -373,26 +323,16 @@ def _prune_parts(
     """Shared machinery: (staged corpus view, clique labels, keeper-per-
     clique frame — None for keep='min_id', whose keeper IS the rep).
 
-    The codebook's size picks the plan (_resolve_assign): Arrow assignment
-    with grouped BLAS pair scoring for large codebooks — a codebook big
-    enough to need Arrow assignment implies a corpus big enough that
-    interpreted per-pair dots are the bottleneck — else expression
-    assignment with the equi-join pairs."""
+    The codebook's size picks the assignment (_resolve_assign): Arrow for
+    large codebooks, else expression. Pairs always come from
+    similarity.within_bucket_pairs over the cluster key, whichever
+    assignment ran."""
     if keep not in ("far_centroid", "min_id"):
         raise ValueError(f"keep={keep!r}: expected 'far_centroid' or 'min_id'")
     if not (0.0 < eps <= 1.0):
         raise ValueError("eps must be in (0, 1]")
-    arrow = _resolve_assign(centroids) == "arrow"
-    if arrow:
-        staged = _assign_arrow(
-            _staged_vec(emb, id_col, vec_col), centroids
-        ).select(
-            "id",
-            "_v",
-            _norm(F.col("_v")).alias("_nv"),
-            "ivf_list",
-            "centroid_sim",
-        )
+    if _resolve_assign(centroids) == "arrow":
+        staged = _assign_arrow(_staged_vec(emb, id_col, vec_col), centroids)
     else:
         arr = cos_array(F.col("_v"), centroids, nv=F.col("_nv"))
         staged = (
@@ -401,17 +341,16 @@ def _prune_parts(
             .select(
                 "id",
                 "_v",
-                "_nv",
                 F.array_position(F.col("_arr"), F.array_max("_arr"))
                 .cast("int")
                 .alias("ivf_list"),
                 F.array_max("_arr").alias("centroid_sim"),
             )
         )
-    # the assignment stage (the n*k*dim dominant cost) is consumed by BOTH
-    # sides of the pair join (or the grouped-pair stage), the keeper-ranking
-    # members join, the caller's flagged-audit join, and the max_cluster
-    # sizes count — persist it ONCE (the kmeans_train policy). The handle
+    # the assignment stage (the n*k*dim dominant cost) is consumed by the
+    # pair kernel, the keeper-ranking members join, the caller's
+    # flagged-audit join, and the max_cluster sizes count — persist it
+    # ONCE (the kmeans_train policy). The handle
     # rides stats['persisted'] under the corpus_pipeline contract: call
     # corpus.unpersist_stages(stats) after materializing the output.
     staged = staged.persist()
@@ -460,38 +399,11 @@ def _prune_parts(
         )
     else:
         staged = staged.withColumn("_key", F.col("ivf_list").cast("string"))
-    if arrow:
-        pairs = _pairs_grouped(staged, eps)
-    else:
-        # within-cluster candidate pairs: ONE equi-join shuffle on the
-        # cluster key; id_a < id_b halves the square and kills self-pairs.
-        # Pure Column expressions (the zero-Python path) — right for small
-        # clusters / oracle parity; _pairs_grouped is the scale path.
-        a = staged.select(
-            F.col("_key"),
-            F.col("id").alias("id_a"),
-            F.col("_v").alias("_va"),
-            F.col("_nv").alias("_nva"),
-        )
-        b = staged.select(
-            F.col("_key"),
-            F.col("id").alias("id_b"),
-            F.col("_v").alias("_vb"),
-            F.col("_nv").alias("_nvb"),
-        )
-        pairs = (
-            a.join(b, "_key")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(
-                F.round(
-                    _dot(F.col("_va"), F.col("_vb"))
-                    / F.greatest(F.col("_nva") * F.col("_nvb"), F.lit(1e-300)),
-                    6,
-                )
-                >= F.lit(float(eps))
-            )
-            .select("id_a", "id_b")
-        )
+    # a vector whose length differs from the codebook's gets a null label
+    # on the expression path: it is in no cluster, so it pairs with nothing
+    pairs = within_bucket_pairs(
+        staged.where(F.col("_key").isNotNull()), eps
+    ).select("id_a", "id_b")
     cliques = dedup_clusters(pairs, stats=stats)
     if keep == "min_id":
         return staged, cliques, None

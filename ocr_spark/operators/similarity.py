@@ -8,8 +8,10 @@ so both the Spark plan and the DuckDB oracle use the exact same planes.
 Scale notes: brute-force is a broadcast of the query vector into a narrow
 map — linear scan, no shuffle, fine as the exactness baseline at any scale
 fan-out. The hyperplane variant buckets the corpus once (one narrow map +
-one shuffle for the bucket join) and only scores within matching buckets —
+one shuffle on the bucket key) and only scores within matching buckets —
 the standard sign-LSH trade: recall < 1, cost ~ corpus/2^planes per bucket.
+Every embedding near-dup stage (embedding_near_dups here, semantic_prune)
+scores its buckets with ONE vectorized kernel, within_bucket_pairs.
 """
 
 from __future__ import annotations
@@ -74,13 +76,21 @@ def hyperplanes(n_planes: int = 8, dim: int = EMB_DIM, seed: int = 7) -> np.ndar
 
 
 def lsh_bucket_expr(vec_col, planes: np.ndarray):
-    """Sign-LSH bucket id: bit i = (v · plane_i > 0)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = (_dot(vec_col, lit_plane) > 0).cast("long") * F.lit(2 ** i).cast("long")
-        bucket = bucket + bit
-    return bucket
+    """Sign-LSH bucket id: bit i = (v · plane_i > 0), each dot the same left
+    fold as _dot. Null when v is null, holds a null element or differs in
+    length from the planes.
+
+    The fold is sent as ONE SQL lambda `v -> ...`, applied to `vec_col`
+    through a one-element transform (SQL text cannot name a Column): as a
+    Column tree every plane literal cost a Py4J round trip, thousands per
+    call."""
+    bits = " + ".join(
+        f"CAST(aggregate(zip_with(v, array({', '.join(f'{float(x)!r}D' for x in p)}), "
+        f"(x, y) -> x * y), 0.0D, (acc, z) -> acc + z) > 0 AS BIGINT) * {1 << i}"
+        for i, p in enumerate(planes)
+    )
+    fold = F.expr(f"v -> CAST(0 AS BIGINT) + {bits}")
+    return F.element_at(F.call_function("transform", F.array(vec_col), fold), 1)
 
 
 def lsh_topk(
@@ -275,7 +285,7 @@ def derived_n_planes(
     classic sign-LSH scale trap: 8 planes = 256 buckets = O(N²/256) pairs.
     More planes lower recall for moderately-similar pairs — acceptable for
     NEAR-DUP detection (near-identical vectors agree on almost every
-    hyperplane sign); use multi-table LSH when recall at lower similarity
+    hyperplane sign); pass fewer planes when recall at lower similarity
     matters."""
     import math
 
@@ -322,13 +332,13 @@ def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.95,
     n_planes: int | None = None,
-    n_tables: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_vectors: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs: bucket by sign-LSH, exact cosine
-    within buckets (the near-dup variant of lsh_topk; one shuffle).
+    """Embedding-cosine near-dup pairs (id_a, id_b, cos_sim): bucket by
+    sign-LSH, then score within buckets with within_bucket_pairs (the
+    near-dup variant of lsh_topk; one shuffle).
 
     n_planes=None derives the plane count from the corpus size
     (derived_n_planes) so bucket occupancy, and with it the quadratic
@@ -338,53 +348,109 @@ def embedding_near_dups(
     unconditional count() was a full extra scan of the embeddings at
     corpus scale.
 
-    n_tables>1 is the standard multi-table LSH recall lever: a pair is a
-    candidate if it collides in ANY of the independent plane sets (per-pair
-    recall 1-(1-p^k)^T instead of p^k), at T× the bucketing/join work. The
-    bucket key carries the table index, so all tables ride ONE explode +
-    ONE shuffle; candidate pairs are deduped before the exact-cosine verify
-    (each pair scored once regardless of how many tables it collides in)."""
+    Only rows with a non-null id and a null-free vector of the planes'
+    length are staged: exactly the rows whose bucket is not null."""
     if n_planes is None:
         if n_vectors is None:
             n_vectors = parquet_rowcount(emb)
         if n_vectors is None:
             n_vectors = emb.count()
         n_planes = derived_n_planes(n_vectors)
-    v = F.col(vec_col).cast("array<double>")
-    tables = [
-        hyperplanes(n_planes, dim=EMB_DIM, seed=7 + 1000 * t)
-        for t in range(n_tables)
-    ]
-    keys = F.explode(
-        F.array(
-            *[
-                # disjoint key spaces per table: (table, bucket) packed
-                (lsh_bucket_expr(v, planes) * F.lit(n_tables) + F.lit(t)).cast("long")
-                for t, planes in enumerate(tables)
-            ]
+    planes = hyperplanes(n_planes, dim=EMB_DIM)
+    staged = emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("_v")
+    ).where(
+        F.expr(
+            f"id IS NOT NULL AND size(_v) = {EMB_DIM} "
+            "AND NOT exists(_v, x -> x IS NULL)"
         )
     )
-    bucketed = emb.select(
-        F.col(id_col).alias("id"), v.alias("v"), keys.alias("bucket")
+    return within_bucket_pairs(
+        staged.select("id", "_v", lsh_bucket_expr(F.col("_v"), planes).alias("_key")),
+        threshold,
     )
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cand = a.join(
-        b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id"))
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.v").alias("va"),
-        F.col("b.v").alias("vb"),
-    )
-    if n_tables > 1:  # single-table pairs are already unique (one bucket each)
-        cand = cand.dropDuplicates(["id_a", "id_b"])
+
+
+# the pair kernel scores _PAIR_BLOCK rows against the rest of their bucket
+# per matmul: a task holds _PAIR_BLOCK x bucket-size doubles at a time
+_PAIR_BLOCK = 1024
+
+
+def _fold_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """Row-wise A·B summed left to right over the dimension: the order of
+    the JVM _dot fold and of DuckDB's list_dot_product, so a cosine built
+    from it is bit-identical to theirs before the round."""
+    acc = np.zeros(len(A))
+    for k in range(A.shape[1]):
+        acc += A[:, k] * B[:, k]
+    return acc
+
+
+def within_bucket_pairs(staged: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, cos_sim) for every pair of rows sharing `_key` with
+    round(cos, 6) >= threshold and id_a < id_b — the one pair kernel of the
+    embedding near-dup stages (embedding_near_dups, semantic_prune).
+
+    `staged` holds (_key, id, _v) with non-null keys and ids and null-free
+    vectors of one length per key (a null-key filter here would be pushed
+    below the caller's key projection and evaluate the key twice). One
+    shuffle on `_key`,
+    then one grouped Arrow stage: per bucket a blocked BLAS matmul screens
+    every pair 1e-6 below the threshold, and only the survivors are scored
+    as dot / max(|a|·|b|, 1e-300) with dots and norms from _fold_dot — the
+    association and summation order of cosine() and _sql_cos. So the
+    pre-round score is bit-identical to the Spark fold and the DuckDB twins,
+    and a pair on the threshold falls the same way in all three (BLAS
+    differs from the fold by ~1e-14, far inside the screen's margin). The
+    round is numpy's, which differs from Spark's HALF_UP only on an exact
+    half-way value. Non-matching pairs are never materialized; NaN scores
+    never pair.
+
+    Ids sort within the bucket and the pair mask compares id values, so a
+    duplicated id never pairs with itself."""
+    import pyarrow as pa
+
+    id_type = staged.schema["id"].dataType.simpleString()
+    screen = float(threshold) - 1e-6
+
+    def fn(tbl: "pa.Table") -> "pa.Table":
+        tbl = tbl.sort_by("id")
+        id_arr = tbl.column("id").combine_chunks()
+        ids = id_arr.to_numpy(zero_copy_only=False)
+        n = len(ids)
+        i = j = np.empty(0, dtype=np.int64)
+        cos = np.empty(0)
+        if n >= 2:
+            X = _list_to_mat(tbl.column("_v").combine_chunks())
+            nrm = np.sqrt(_fold_dot(X, X))
+            ii, jj = [], []
+            for lo in range(0, n - 1, _PAIR_BLOCK):
+                hi = min(lo + _PAIR_BLOCK, n - 1)  # rows lo..hi-1 vs cols > lo
+                den = np.maximum(np.outer(nrm[lo:hi], nrm[lo + 1 :]), 1e-300)
+                ri, cj = np.nonzero((X[lo:hi] @ X[lo + 1 :].T) / den >= screen)
+                upper = cj >= ri  # strict upper triangle: lo+1+cj > lo+ri
+                ii.append(lo + ri[upper])
+                jj.append(lo + 1 + cj[upper])
+            i, j = np.concatenate(ii), np.concatenate(jj)
+            distinct = ids[i] < ids[j]
+            i, j = i[distinct], j[distinct]
+            cos = np.round(
+                _fold_dot(X[i], X[j]) / np.maximum(nrm[i] * nrm[j], 1e-300), 6
+            )
+            hit = cos >= threshold
+            i, j, cos = i[hit], j[hit], cos[hit]
+        return pa.table(
+            {
+                "id_a": id_arr.take(pa.array(i, type=pa.int64())),
+                "id_b": id_arr.take(pa.array(j, type=pa.int64())),
+                "cos_sim": pa.array(cos, type=pa.float64()),
+            }
+        )
+
     return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
+        staged.select("_key", "id", "_v")
+        .groupBy("_key")
+        .applyInArrow(fn, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double")
     )
 
 

@@ -27,7 +27,7 @@ SHOW = [
     ("quad_order", "W1/F6/K9 geometry as one codegen'd Project over the scan"),
     ("ngram_topk", "corpus n-gram stats: partial (map-side) agg + TakeOrdered tree-reduced top-k"),
     ("quality_scores", "quality v1 + repetition signals: staged projections, ONE codegen'd pass over the scan — no shuffle, no UDF"),
-    ("text_embed_dedup", "text→embedding bridge dedup: explode + two partial-agg shuffles for the hashing-trick vectors, sign-LSH equi-join pairs, BroadcastHashJoin LeftAnti keep"),
+    ("text_embed_dedup", "text→embedding bridge dedup: explode + two partial-agg shuffles for the hashing-trick vectors, sign-LSH bucket pairs from the grouped pair kernel (dedup_clusters materializes them, so only the drop set shows here), BroadcastHashJoin LeftAnti keep"),
     ("decon_bloom", "big-eval decontamination: no exchange before the MapInArrow bloom prefilter — raw shingles die map-side against the broadcast bitmap; only survivors reach the verify join"),
     ("ivfpq_topk", "IVF-PQ ANN: one vectorized Arrow scoring stage + TakeOrderedAndProject — the wide embedding column never shuffles"),
     ("url_normalize", "URL canonicalization: one codegen'd Project over the scan — no shuffle, no UDF"),
@@ -62,6 +62,13 @@ def _semantic_dedup_df(spark, sf):
     emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
     docs_ids = emb.select(F.col("vec_id").alias("doc_id"))
     return semantic_dedup(docs_ids, emb, _codebook(spark, sf), eps=0.9)
+
+
+def _embedding_near_dups_df(spark, sf):
+    from ocr_spark.operators.similarity import embedding_near_dups
+
+    emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
+    return embedding_near_dups(emb, threshold=0.2)
 
 
 def _holdout_split_df(spark, sf):
@@ -197,6 +204,15 @@ def main() -> None:
             " stage shows here), the keep-one window is partitioned on the"
             " clique rep, and the corpus is touched by exactly ONE"
             " LeftAnti equi-join — never re-joined for audit columns",
+        ),
+        (
+            "embedding_near_dups",
+            _embedding_near_dups_df(spark, sf),
+            "the one embedding pair kernel (within_bucket_pairs): the"
+            " sign-LSH bucket projected once, ONE Exchange on it, one"
+            " FlatMapGroupsInArrow scoring each bucket — no self-join, no"
+            " per-pair expression; semantic_prune feeds the same stage its"
+            " cluster key",
         ),
         (
             "holdout_split",

@@ -15,6 +15,7 @@ import tempfile
 import warnings
 
 import numpy as np
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus_clean import dup_span_removal, holdout_split
@@ -349,11 +350,12 @@ def bench_neardup(spark, n: int) -> dict:
         (derived_n_planes: N/2^p ≈ 64) vs a fixed 8 planes
 
     Signatures/embeddings are synthesized natively (xxhash64 over
-    spark.range — no text pipeline) so the case isolates the JOIN
-    structure, the part whose cost explodes quadratically when buckets are
-    too coarse. Candidate counts are computed exactly from bucket occupancy
-    (Σ n·(n−1)/2 — the join's output size, without materializing it), and
-    the scale-safe variants also run the real verified join."""
+    spark.range — no text pipeline) so the case isolates the pair stage,
+    the part whose cost explodes quadratically when buckets are too
+    coarse. Candidate counts are computed exactly from bucket occupancy
+    (Σ n·(n−1)/2, without materializing the pairs), and the scale-safe
+    variants also run the real verified pair stage (`join_s`; the
+    embedding one also counts its output `pairs`)."""
     brute = n * (n - 1) // 2
     fig: dict = {"brute_pairs": brute}
 
@@ -390,10 +392,12 @@ def bench_neardup(spark, n: int) -> dict:
         )
         rec["candidate_pairs"] = _pair_count_from_buckets(bucketed, "bucket")
         if run_join:
+            obs = Observation(f"embedding_planes{n_planes}")
             with phase(rec, "join"):
-                embedding_near_dups(emb, threshold=0.95, n_planes=n_planes).write.format(
-                    "noop"
-                ).mode("overwrite").save()
+                embedding_near_dups(emb, threshold=0.95, n_planes=n_planes).observe(
+                    obs, F.count(F.lit(1)).alias("pairs")
+                ).write.format("noop").mode("overwrite").save()
+            rec["pairs"] = obs.get["pairs"]
         fig[f"embedding_planes{n_planes}"] = rec
     return fig
 

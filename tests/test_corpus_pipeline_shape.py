@@ -163,3 +163,17 @@ def test_pipeline_equals_sql_twin(spark, frames, monkeypatch, quality, path):
     assert 17 in kept and "sound was down by" not in kept[17]
     assert all(BOILER not in t for t in kept.values())
     assert "someone@example.com" not in kept[7]
+
+
+def test_exact_dedup_method_keeps_input_columns(spark, frames):
+    """dedup_method='exact' without dup_span_n returns the input's columns:
+    exact_dedup's fingerprint column stays inside near_dedup."""
+    corpus, eval_docs, _ = frames
+    assert dedup.near_dedup(corpus, method="exact").columns == corpus.columns
+    stats: dict = {}
+    out = corpus_pipeline(
+        corpus, eval_docs, min_quality=0.5, dedup_method="exact", stats=stats
+    )
+    assert out.columns == corpus.columns
+    assert out.count() > 0
+    unpersist_stages(stats)

@@ -274,10 +274,9 @@ class TestSemanticDedup:
 
 @pytest.fixture
 def force_arrow(monkeypatch):
-    """Call to send every later codebook down the Arrow assignment +
-    grouped BLAS pair path (a codebook cut of 0 cells); the fixture
-    codebooks are small enough to take the expression + equi-join path by
-    default."""
+    """Call to send every later codebook down the Arrow assignment path (a
+    codebook cut of 0 cells); the fixture codebooks are small enough to take
+    the expression path by default."""
     from ocr_spark.operators import semantic
 
     return lambda: monkeypatch.setattr(semantic, "_ARROW_ASSIGN_CELLS", 0)
@@ -314,25 +313,54 @@ class TestArrowAssignPath:
 
 
 class TestGroupedPairPath:
-    """The grouped BLAS pair stage rides with Arrow assignment; the
-    equi-join pairs with expression assignment."""
+    """Both assignment paths pair through similarity.within_bucket_pairs."""
 
     @pytest.mark.parametrize("keep", ["far_centroid", "min_id"])
-    def test_group_equals_join(self, spark, data, keep, force_arrow):
+    def test_group_matches_reference(self, spark, data, keep, force_arrow):
         """Dense components (k=3, eps=0.9: ~48 drops onto 14 reps), where
         the keep policy picks among many members; at eps=0.97 nearly every
-        component is a twin pair (test_prune_arrow_equals_expr)."""
+        component is a twin pair (test_matches_numpy_reference)."""
         X, ids, emb = data
         C = _ref_kmeans(X, ids, k=3, iters=6)
+        want = _ref_prune(X, ids, C, eps=0.9, keep=keep)
+        want = sorted((i, w["rep"], w["is_kept"]) for i, w in want.items())
         key = lambda rows: sorted(
             (r["id"], r["rep"], r["is_kept"]) for r in rows
         )
-        a = key(semantic_prune(emb, C, eps=0.9, keep=keep).collect())
+        assert key(semantic_prune(emb, C, eps=0.9, keep=keep).collect()) == want
         force_arrow()
-        b = key(semantic_prune(emb, C, eps=0.9, keep=keep).collect())
-        assert a == b
-        dropped = [r for r in a if not r[2]]
+        assert key(semantic_prune(emb, C, eps=0.9, keep=keep).collect()) == want
+        dropped = [r for r in want if not r[2]]
         assert len(dropped) > 2 * len({r[1] for r in dropped})
+
+    def test_duplicated_id_never_pairs_with_itself(self, spark, data):
+        """A second row under an existing id, with the same vector, joins
+        that id's own clique only through other ids: a lone vector stays
+        out of every clique (the kernel masks pairs by id value, not by
+        position in the bucket)."""
+        X, ids, emb = data
+        C = _ref_kmeans(X, ids, k=5, iters=6)
+        base = {r["id"]: r["rep"] for r in semantic_prune(emb, C, eps=0.97).collect()}
+        lone = next(i for i in ids if base[i] is None)
+        twin = next(i for i in ids if base[i] is not None and base[i] != i)
+        doubled = emb.unionByName(_emb_df(spark, X[[lone, twin]], [lone, twin]))
+        got = semantic_prune(doubled, C, eps=0.97).collect()
+        assert {r["rep"] for r in got if r["id"] == lone} == {None}
+        assert {r["rep"] for r in got if r["id"] == twin} == {base[twin]}
+        assert {r["id"]: r["rep"] for r in got} == base
+
+    def test_wrong_length_vectors_never_pair(self, spark, data):
+        """Two equal vectors one element short of the codebook's length get
+        no cluster on the expression path, so they are no bucket either."""
+        X, ids, emb = data
+        C = _ref_kmeans(X, ids, k=5, iters=6)
+        short = _emb_df(spark, np.ones((2, DIM - 1)), [10_000, 10_001])
+        got = {
+            r["id"]: r
+            for r in semantic_prune(emb.unionByName(short), C, eps=0.5).collect()
+        }
+        assert got[10_000]["ivf_list"] is None
+        assert got[10_000]["rep"] is None and got[10_001]["rep"] is None
 
     def test_group_with_string_ids_and_subsplit(self, spark, data, force_arrow):
         X, ids, _ = data

@@ -802,33 +802,78 @@ def test_ngram_topk_counts_occurrences(spark):
     assert got == [("a b", 4), ("b a", 2), ("b c", 1)]
 
 
-def test_embedding_near_dups_multi_table_recall(spark):
-    """Multi-table LSH: T independent plane sets strictly widen the candidate
-    set (union of collisions), so at a low similarity threshold the pair set
-    is a superset of single-table and recall vs brute force increases."""
-    import numpy as np
+def _ref_cos(a, b):
+    den = max(np.linalg.norm(a) * np.linalg.norm(b), 1e-300)
+    return round(float(a @ b / den), 6)
 
-    from ocr_spark.operators.similarity import cosine, embedding_near_dups
+
+def test_embedding_near_dups_matches_brute_force(spark):
+    """The pair multiset equals a numpy brute force over same-bucket row
+    pairs with distinct ids (id_a < id_b), pairs within 1e-6 of the
+    threshold aside: the reference sums in BLAS order. Rows with a null id,
+    a null vector, a null element or a wrong length have no bucket and
+    never pair; a duplicated id pairs with its neighbours once per copy but
+    never with itself."""
+    from ocr_spark.operators.similarity import embedding_near_dups, hyperplanes
 
     rng = np.random.default_rng(17)
-    vecs = rng.standard_normal((300, 64))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
+    vecs = rng.standard_normal((300, 64)).round(6)
+    vecs[1] = (vecs[0] + 1e-3 * rng.standard_normal(64)).round(6)
+    # id 7 again with its own vector, and id 300 near both copies
+    ids = list(range(300)) + [7, 300]
+    vecs = np.vstack([vecs, vecs[7], (vecs[7] + 1e-3).round(6)])
+    rows = [(i, [float(x) for x in v]) for i, v in zip(ids, vecs)]
+    rows += [
+        (None, [float(x) for x in vecs[0]]),
+        (900, None),
+        (901, [float(x) for x in vecs[0][:63]]),
+        (902, [None] + [float(x) for x in vecs[0][1:]]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    thr, n_planes = 0.15, 6
+    got = sorted(
+        (r.id_a, r.id_b, r.cos_sim)
+        for r in embedding_near_dups(df, threshold=thr, n_planes=n_planes).collect()
     )
-    thr = 0.15
-    one = {(r.id_a, r.id_b) for r in
-           embedding_near_dups(df, threshold=thr, n_planes=6, n_tables=1).collect()}
-    three = {(r.id_a, r.id_b) for r in
-             embedding_near_dups(df, threshold=thr, n_planes=6, n_tables=3).collect()}
-    assert one <= three
-    assert len(three) > len(one)
-    # every reported pair is a true positive (exact cosine verified)
-    v = vecs.astype(np.float64)
-    norms = np.linalg.norm(v, axis=1)
-    for a, b in list(three)[:50]:
-        cos = v[a] @ v[b] / (norms[a] * norms[b])
-        assert round(cos, 6) >= thr
+    X = vecs.astype(np.float32).astype(np.float64)  # the frame stores floats
+    bucket = (X @ hyperplanes(n_planes).T > 0) @ (1 << np.arange(n_planes))
+    want, edge = [], set()
+    for p in range(len(X)):
+        for q in range(p + 1, len(X)):
+            if bucket[p] != bucket[q] or ids[p] == ids[q]:
+                continue
+            c = _ref_cos(X[p], X[q])
+            pair = (min(ids[p], ids[q]), max(ids[p], ids[q]))
+            if abs(c - thr) <= 1e-6:
+                edge.add(pair)
+            elif c >= thr:
+                want.append(pair + (c,))
+    assert [g for g in got if g[:2] not in edge] == sorted(want)
+    assert len(want) > 50
+    assert all(a < b for a, b, _ in got)
+    assert [g[:2] for g in got].count((7, 300)) == 2  # once per copy of 7
+
+
+def test_embedding_near_dups_build_sends_few_py4j_commands(spark, monkeypatch):
+    import py4j
+
+    from ocr_spark.operators.similarity import embedding_near_dups
+
+    emb = spark.createDataFrame([(1, [0.5] * 64)], "vec_id long, embedding array<double>")
+    sent = []
+    orig = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return orig(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting
+    )
+    embedding_near_dups(emb, threshold=0.9, n_planes=13)
+    monkeypatch.undo()
+    # 13 x 64 plane literals as Column trees took 6,500-7,500 round trips
+    assert 0 < len(sent) < 500
 
 
 def _wav_bytes(freq=440.0, sr=8000, secs=0.25, channels=1):
